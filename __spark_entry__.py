@@ -1998,7 +1998,7 @@ _ROUND11_OPT = [
 # (VERDICT r6 #2: changed queries MUST NOT ride stale green rows).
 # HOF let-binding (word_shingles / rolling_fingerprints /
 # duplicate_spans windows / minhash): every shingle-pipeline consumer;
-# checkpoint+count fusion (_ckpt_count/_ckpt_sever_count/ckpt_count):
+# checkpoint+count fusion (now functions/layout.materialize):
 # every fixpoint/BFS loop incl. the Cypher shortestPath plan and
 # connected_components' inline convergence flag; kmeans' narrow
 # posexplode update; node_similarity's compact-cache + size-adaptive

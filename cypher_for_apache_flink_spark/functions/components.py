@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import layout
+
 
 def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
                          max_iter: int = 25) -> DataFrame:
@@ -27,16 +29,16 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
     the minimum node id in the component."""
     # Materialize the (possibly expensive) pair computation exactly once —
     # nodes, edges, and every round derive from the checkpointed copy.
-    pairs = pairs.select(F.col(a).alias("a"), F.col(b).alias("b")) \
-        .localCheckpoint(eager=True)
+    pairs, _ = layout.materialize(
+        pairs.select(F.col(a).alias("a"), F.col(b).alias("b")))
     nodes = (pairs.select(F.col("a").alias("node"))
              .unionByName(pairs.select(F.col("b").alias("node")))
              .distinct())
     # localCheckpoint (not cache): each round's plan must TRUNCATE, or the
     # labels⋈labels convergence probe doubles the logical plan every
     # iteration and planning itself blows up long before the data does.
-    labels = nodes.select("node", F.col("node").alias("cc")) \
-        .localCheckpoint(eager=True)
+    labels, _ = layout.materialize(
+        nodes.select("node", F.col("node").alias("cc")))
     bi = (pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
           .unionByName(pairs.select(F.col("b").alias("u"),
                                     F.col("a").alias("v"))))
@@ -81,19 +83,12 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
         # only ever DECREASE, so "changed" is computable inline as
         # cc != old cc — the old probe was a labels⋈labels join plus a
         # second action per round; now the changed-count rides the job
-        # that materializes the lazy checkpoint.  Same predicate, same
+        # that materializes the checkpoint.  Same predicate, same
         # rounds, identical labels.
-        new_labels = prop.select(
-            "node", "cc",
-            (F.col("cc") != F.col("__old")).alias("__chg")) \
-            .localCheckpoint(eager=False)
-        # one RDD-count job materializes the lazy checkpoint AND counts
-        # the changed rows (a DataFrame.count() is a 2-job AQE aggregate)
-        chg = new_labels.where(F.col("__chg"))
-        try:
-            changed = chg._jdf.queryExecution().toRdd().count()
-        except Exception:
-            changed = chg.count()
+        new_labels, changed = layout.materialize(
+            prop.select("node", "cc",
+                        (F.col("cc") != F.col("__old")).alias("__chg")),
+            where=F.col("__chg"))
         labels = new_labels.select("node", "cc")
         if changed == 0:
             return labels

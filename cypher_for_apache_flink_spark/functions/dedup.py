@@ -98,7 +98,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     power-law footgun); pass None for the exact unbounded join.  A pair
     whose ONLY shared shingles exceed the cap is missed — jaccard values
     are lower bounds under a cap, the standard recall/cost trade."""
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     if max_shingle_freq == "auto":
         max_shingle_freq = DEFAULT_SKEW_CAP
     # cached: read by the size pass AND both sides of the blocked self-join
@@ -169,7 +169,7 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 3, num_hashes: int = 8,
     # (doc, shingles) table is reused by the signature pass AND the two
     # candidate re-attach joins — cache it rather than re-shingling the
     # corpus three times.
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     shingled = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         word_shingles(F.col(text_col), n).alias("sh0")).cache()
@@ -258,7 +258,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 8,
     ``bands`` chunks; docs sharing a chunk are candidates, verified by
     Hamming distance <= max_hamming."""
     bits_per = 64 // bands
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     voted = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         simhash_votes(F.col(text_col)).alias("__v"))

@@ -21,85 +21,12 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-# Data-size branch of the pin gate: pin when the edge input's Catalyst
-# plan-size estimate reaches this, even under a well-sized session
-# default.  Calibrated from tools/probes/partition_probe_r9.json: at the
-# 12M-edge x10 scale (estimate 191 MB) pinning wins even at matched
-# partitions (triangle 43.0s/920s-cpu unpinned@32 vs 24.8s/532s-cpu
-# pinned), while the sf0.1 bench inputs estimate ~1.5 MB and lose to the
-# pin (r8 regression).  64 MiB splits the two regimes with margin.
-_PIN_DATA_BYTES = 64 << 20
-
-
-def _pin_parts(spark, data: DataFrame | None = None) -> int | None:
-    """Partition count for explicitly pinning an iterative algorithm's
-    wide exchanges, or ``None`` to leave them to the session default
-    plus AQE.
-
-    Pin when EITHER holds (both branches measured —
-    tools/partition_probe.py, artifact tools/probes/
-    partition_probe_r9.json, 2 scales x 2 modes x {32, 64, 200}
-    partitions):
-
-    - The session's ``spark.sql.shuffle.partitions`` is badly mismatched
-      with cluster parallelism — more than 2x off the
-      2x-defaultParallelism target in either direction.  Spark's
-      out-of-the-box 200 partitions makes triangle_count ~3.6x slower
-      than the pinned plan on a 32-core local mode at the 12M-edge
-      scale (55.7s/790s-cpu vs 20.6s/446s-cpu) — per-round scheduling
-      and checkpoint overhead across many small partitions.
-    - ``data`` (the edge input) has a reliable Catalyst size estimate of
-      at least ``_PIN_DATA_BYTES``: at that volume the wide exchanges
-      want 2x-parallelism partitions regardless of the session default
-      (triangle x10@32: 43.0s unpinned vs 24.8s pinned).
-
-    Otherwise no pin: when the default matches the cluster AND the data
-    is small (the committed bench config: local[32],
-    shuffle.partitions=32, AQE on, ~1.2M-edge inputs), explicit
-    repartitions only ADD exchanges that AQE would otherwise coalesce or
-    elide entirely — the round-8 unconditional pin measured
-    triangle_count shuffle-write +573% / cpu +128% and pagerank cpu
-    +580% / tasks +876% vs the unpinned round-7 plan on identical data
-    (BENCH_DIFF_r08.md).
-
-    When the conf is unreadable/non-numeric (e.g. a future "auto") and
-    the data is small/unknown, no pin: never add shuffles on a guess —
-    at 100 TB an unnecessary full re-shuffle of the edge set dwarfs any
-    scheduling overhead it might save.  ``SPARK_GRAFT_FORCE_PIN=always|
-    never`` overrides the gate (probe hook used by
-    tools/partition_probe.py to A/B both modes under one config).
-    """
-    target = max(2 * spark.sparkContext.defaultParallelism, 1)
-    force = os.environ.get("SPARK_GRAFT_FORCE_PIN", "")
-    if force == "always":
-        return target
-    if force == "never":
-        return None
-    if data is not None:
-        from .util import _plan_size_bytes
-        est = _plan_size_bytes(data)
-        if est is not None and est >= _PIN_DATA_BYTES:
-            return target
-    try:
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return None
-    if target / 2 <= sp <= target * 2:
-        return None
-    return target
-
-
-def _repart(df: DataFrame, nparts: int | None, *cols: str) -> DataFrame:
-    """Hash-repartition when exchange pinning is active, identity when
-    the gate (:func:`_pin_parts`) decided the session is well-sized."""
-    return df if nparts is None else df.repartition(nparts, *cols)
+from . import layout
 
 
 def _mirror(df: DataFrame, ucol: str = "u", vcol: str = "v",
@@ -121,21 +48,6 @@ def _mirror(df: DataFrame, ucol: str = "u", vcol: str = "v",
     return (df.select(both.alias("__m"))
             .select(*[F.col(f"__m.{c}").alias(c)
                       for c in (ucol, vcol, *carry)]))
-
-
-def _scan_coalesce(df: DataFrame, n_rows: int,
-                   rows_per_part: int = 150_000) -> DataFrame:
-    """Size-derived ``coalesce`` for a persisted frame an iterative loop
-    scans every step (round 11): a cached co-purchase edge set arrives
-    in 32-64 derivation partitions, and each per-step broadcast-join
-    probe then pays ~0.1s of fixed per-task cost (task deser, codegen
-    init, block locks) per partition per step -- measured 50-75s of
-    executor CPU on the sf0.1 walk queries whose actual probe work is
-    milliseconds.  ``coalesce`` is NARROW (no shuffle, reads the cached
-    blocks) and cannot increase the partition count, so above
-    ``rows_per_part`` rows/partition it is a no-op and the large-graph
-    regime is untouched."""
-    return df.coalesce(max(1, int(n_rows) // rows_per_part + 1))
 
 
 def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
@@ -172,7 +84,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     # side; when the default already matches (the bench config) the pin
     # is skipped entirely — unconditionally pinning was a measured
     # +102% shuffle / +580% cpu regression there (BENCH_DIFF_r08.md,
-    # _pin_parts docstring).
+    # layout.pin_parts docstring).
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("double").alias("w"))
@@ -180,28 +92,26 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     if weight_col is not None:
         edges = edges.where(F.col("w") > 0)
     edges = edges_p = edges.persist()
-    n_edges = None
-    nparts = _pin_parts(edges.sparkSession, data=edges)
-    if nparts is None \
-            and os.environ.get("SPARK_GRAFT_FORCE_PIN", "") != "never":
+    spark = edges.sparkSession
+    nparts = layout.pin_parts(spark, data=edges)
+    if nparts is None:
         # The Catalyst estimate can DECAY on an evicted cache (it falls
         # back to the child plan's figure — observed in the r9 bench's
         # sf1 spot); when the estimate said "small", confirm with an
         # exact count of the persisted edge set.  The count is one
         # cache-materializing job the setup scans would pay anyway.
         n_edges = edges.count()
-        if n_edges * 16 >= _PIN_DATA_BYTES:
-            nparts = max(2 * edges.sparkSession.sparkContext
-                         .defaultParallelism, 1)
+        if not layout.fits_broadcast(n_edges):
+            nparts = layout.pin_target(spark)
         else:
             # Unpinned small/medium regime: the setup scans and every
             # superstep re-read this cache, whose partition count AQE
             # can never coalesce (cached plans keep their layout) --
             # size the scan once like the walk loops do (round 11)
-            edges = _scan_coalesce(edges, n_edges)
-    nodes = _repart(edges.select(F.col("src").alias("node"))
-                    .union(edges.select(F.col("dst").alias("node"))),
-                    nparts, "node") \
+            edges = layout.scan_coalesce(edges, n_edges)
+    nodes = layout.repart(edges.select(F.col("src").alias("node"))
+                          .union(edges.select(F.col("dst").alias("node"))),
+                          nparts, "node") \
         .dropDuplicates(["node"])
     # Cached: read every superstep (left join target + dangling scan).  The
     # count is a deliberate single action: it materializes the cache AND
@@ -213,8 +123,8 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
         nodes.unpersist()
         return nodes.select("node", F.lit(0.0).alias("rank"))
     if nparts is None:
-        nodes = _scan_coalesce(nodes, n)
-    deg = _repart(edges, nparts, "src") \
+        nodes = layout.scan_coalesce(nodes, n)
+    deg = layout.repart(edges, nparts, "src") \
         .groupBy("src").agg(
             (F.sum("w") if weight_col is not None
              else F.count(F.lit(1))).alias("deg"))
@@ -229,16 +139,16 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     # the query's shuffle bytes, 48.8 -> 102.1 MB).  Large graphs (node
     # set over the gate) keep the shuffled join — deg is O(|V|) there,
     # not broadcast material.
-    deg_side = deg if n * 16 >= _PIN_DATA_BYTES else F.broadcast(deg)
+    bcast_nodes = layout.fits_broadcast(n)
+    deg_side = F.broadcast(deg) if bcast_nodes else deg
     out_edges = out_edges_p = \
-        _repart(edges, nparts, "src").join(deg_side, "src").persist()
+        layout.repart(edges, nparts, "src").join(deg_side, "src").persist()
     out_srcs = out_srcs_p = deg.select(F.col("src").alias("node")).persist()
     if nparts is None:
         # same row counts as the cached edge/node sets -- reuse those
         # counts instead of materializing two more counting jobs
-        if n_edges is not None:
-            out_edges = _scan_coalesce(out_edges, n_edges)
-        out_srcs = _scan_coalesce(out_srcs, n)
+        out_edges = layout.scan_coalesce(out_edges, n_edges)
+        out_srcs = layout.scan_coalesce(out_srcs, n)
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     transfer = (F.col("rank") * F.col("w") / F.col("deg")
@@ -252,12 +162,12 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     # ranks is exactly n rows; broadcast it explicitly below the same
     # node-count gate as deg, so the hot join streams the cache with no
     # exchange.  Large graphs keep the node-id-keyed shuffle.
-    bcast_ranks = n * 16 < _PIN_DATA_BYTES
     for i in range(iterations):
         rside = ranks.withColumnRenamed("node", "src")
-        rside = (F.broadcast(rside) if bcast_ranks
-                 else _repart(rside, nparts, "src"))
-        contribs = (_repart(out_edges.join(rside, "src"), nparts, "dst")
+        rside = (F.broadcast(rside) if bcast_nodes
+                 else layout.repart(rside, nparts, "src"))
+        contribs = (layout.repart(out_edges.join(rside, "src"), nparts,
+                                  "dst")
                     .groupBy("dst")
                     .agg(F.sum(transfer).alias("contrib"))
                     .withColumnRenamed("dst", "node"))
@@ -308,7 +218,7 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
     visited = (sources.select(F.col(node_col).alias("node"))
                .dropDuplicates(["node"])
                .withColumn("dist", F.lit(0).cast("long")))
-    visited = visited.localCheckpoint(eager=True)
+    visited, _ = layout.materialize(visited)
     frontier = visited
     for hop in range(1, max_hops + 1):
         nxt = (frontier.join(edges, frontier["node"] == edges["src"])
@@ -318,7 +228,7 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                .withColumn("dist", F.lit(hop).cast("long")))
         if hop % checkpoint_interval == 0 or hop == max_hops:
             # truncate lineage AND decide termination with one materialize
-            nxt, n_nxt = _ckpt_count(nxt)
+            nxt, n_nxt = layout.materialize(nxt)
             if n_nxt == 0:
                 break
         visited = visited.unionByName(nxt)
@@ -358,7 +268,7 @@ def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
     dist = (sources.select(F.col(node_col).alias("node"))
             .dropDuplicates(["node"])
             .withColumn("cost", F.lit(0.0)))
-    dist = dist.localCheckpoint(eager=True)
+    dist, _ = layout.materialize(dist)
     frontier = dist
     converged = False
     for _ in range(max_iters):
@@ -371,12 +281,13 @@ def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
                     .where(F.col("__old").isNull()
                            | (F.col("cost") < F.col("__old")))
                     .select("node", "cost"))
-        improved, n_improved = _ckpt_count(improved)
+        improved, n_improved = layout.materialize(improved)
         if n_improved == 0:
             converged = True
             break
-        dist = (dist.join(improved.select("node"), "node", "left_anti")
-                .unionByName(improved)).localCheckpoint(eager=True)
+        dist, _ = layout.materialize(
+            dist.join(improved.select("node"), "node", "left_anti")
+            .unionByName(improved))
         frontier = improved
     if not converged:
         warnings.warn(
@@ -508,7 +419,7 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
     adjacency join moves wide array rows, and its wall time proved
     sharply sensitive to ``spark.sql.shuffle.partitions`` — measured
     34.6s / 63.4s / 103.7s at 64 / 32 / 200 partitions on the SAME
-    12M-edge input (r7 probe).  When :func:`_pin_parts` detects such a
+    12M-edge input (r7 probe).  When :func:`layout.pin_parts` detects such a
     mismatched session default, EVERY wide exchange (normalize distinct,
     degree agg, degree joins, adjacency groupBy, both intersection
     joins) is pinned to 2x cluster parallelism via explicit hash
@@ -519,13 +430,15 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
     (BENCH_DIFF_r08.md) because each explicit repartition became an
     exchange AQE would otherwise have coalesced away.
     """
-    nparts = _pin_parts(edges.sparkSession, data=edges)
+    spark = edges.sparkSession
+    nparts = layout.pin_parts(spark, data=edges)
     s, d = F.col(src_col), F.col(dst_col)
     # normalize inline (not via _normalize_undirected) so the distinct
     # can run on a pinned hash(u, v) exchange the dedup aggregate reuses
-    und = und_p = (_repart(edges.select(F.least(s, d).alias("u"),
-                                        F.greatest(s, d).alias("v"))
-                           .where(F.col("u") < F.col("v")), nparts, "u", "v")
+    und = und_p = (layout.repart(edges.select(F.least(s, d).alias("u"),
+                                              F.greatest(s, d).alias("v"))
+                                 .where(F.col("u") < F.col("v")),
+                                 nparts, "u", "v")
                    .dropDuplicates(["u", "v"]).persist())
     # Exact data-size decision off the PERSISTED normalized edge set
     # (round 9, VERDICT r8 #1 "kill the sf1 spill").  The count is one
@@ -536,18 +449,16 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
     # estimated ~15 MB after k_core's checkpoints evicted its cache,
     # silently disabling the large-input plan below).
     n_und = und.count()
-    big_data = n_und * 16 >= _PIN_DATA_BYTES   # (u, v) = 2 longs/row
-    if nparts is None and big_data \
-            and os.environ.get("SPARK_GRAFT_FORCE_PIN", "") != "never":
-        nparts = max(2 * edges.sparkSession.sparkContext
-                     .defaultParallelism, 1)
+    big_data = not layout.fits_broadcast(n_und)   # (u, v) = 2 longs/row
+    if nparts is None and big_data:
+        nparts = layout.pin_target(spark)
     if nparts is None:
         # Small/medium unpinned regime: several consumers (the degree
         # aggregate's reused exchange, the orientation join chain) scan
         # this cache, whose derivation partition count AQE can never
         # re-coalesce — size the scan once from the exact count (round
         # 11, same discipline as the walk loops / pagerank)
-        und = _scan_coalesce(und, n_und)
+        und = layout.scan_coalesce(und, n_und)
     # The intersection-join strategy is hinted EXPLICITLY in both
     # regimes — sized thresholds would otherwise flip with the cache
     # state (materializing und above makes Catalyst's estimates
@@ -565,9 +476,10 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
     #   peak task memory vs SHJ 0 spill / 306s cpu / 2.3 GB peak (+21%
     #   shuffle, the only cost).  Broadcasting is out at this size.
     use_shj = big_data
-    deg = (_repart(und.select(F.explode(F.array("u", "v")).alias("node")),
-                   nparts, "node")
-           .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
+    deg = (layout.repart(
+        und.select(F.explode(F.array("u", "v")).alias("node")),
+        nparts, "node")
+        .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
     # The DEGREE joins get the same explicit strategy as the adjacency
     # joins below, and for the same reason: materializing und (the exact
     # count above) makes Catalyst's estimates realistic, which pushes the
@@ -583,14 +495,14 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
         return side if big_data else F.broadcast(side)
     # deg's groupBy output is hash(node)@nparts, which the alias-preserving
     # Project keeps, so only the und side of each degree join needs a pin
-    withdeg = (_repart(und, nparts, "u")
+    withdeg = (layout.repart(und, nparts, "u")
                .join(_deg_side("u", "du"), "u"))
-    withdeg = (_repart(withdeg, nparts, "v")
+    withdeg = (layout.repart(withdeg, nparts, "v")
                .join(_deg_side("v", "dv"), "v"))
     # rank = (deg, id) totally orders nodes; orient low -> high
     ru = F.struct(F.col("du").alias("d"), F.col("u").alias("n"))
     rv = F.struct(F.col("dv").alias("d"), F.col("v").alias("n"))
-    oriented = oriented_p = _repart(withdeg.select(
+    oriented = oriented_p = layout.repart(withdeg.select(
         F.when(ru < rv, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(ru < rv, F.col("v")).otherwise(F.col("u")).alias("b")),
         nparts, "a").persist()
@@ -599,15 +511,16 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
         # counting job; denser rows/part than und because this cache
         # feeds the CPU-heavy adjacency-intersection probe, which still
         # wants real parallelism
-        oriented = _scan_coalesce(oriented, n_und, rows_per_part=50_000)
+        oriented = layout.scan_coalesce(oriented, n_und,
+                                        layout.DENSE_ROWS_PER_PART)
     # groupBy("a") and the first join reuse oriented's hash(a) partitioning
     adj = (oriented.groupBy("a")
            .agg(F.sort_array(F.collect_list("b")).alias("nb")))
     adj = adj.hint("shuffle_hash") if use_shj else F.broadcast(adj)
-    j1 = _repart(oriented
-                 .join(adj.select(F.col("a").alias("__ja"),
-                                  F.col("nb").alias("nb_a")),
-                       F.col("a") == F.col("__ja")), nparts, "b")
+    j1 = layout.repart(oriented
+                       .join(adj.select(F.col("a").alias("__ja"),
+                                        F.col("nb").alias("nb_a")),
+                             F.col("a") == F.col("__ja")), nparts, "b")
     j = j1.join(adj.select(F.col("a").alias("__jb"),
                            F.col("nb").alias("nb_b")),
                 F.col("b") == F.col("__jb"))
@@ -767,10 +680,9 @@ def k_core(edges: DataFrame, k: int = 3, src_col: str = "src",
     # the time as +116% shuffle-write bytes at sf0.1; the committed
     # r7->r8 diff of the SHIPPED coalesce form is byte-identical on
     # k_core (BENCH_DIFF_r08.md).
-    nparts = max(2 * edges.sparkSession.sparkContext.defaultParallelism, 1)
-    live = _normalize_undirected(edges, src_col, dst_col) \
-        .localCheckpoint(eager=True)
-    n_live = live.count()
+    nparts = layout.pin_target(edges.sparkSession)
+    live, n_live = layout.materialize(
+        _normalize_undirected(edges, src_col, dst_col))
     rounds = 0
     converged = n_live == 0
     while not converged:
@@ -782,9 +694,8 @@ def k_core(edges: DataFrame, k: int = 3, src_col: str = "src",
                .join(keep.withColumnRenamed("node", "v"), "v", "left_semi"))
         # materialize every round: the fixpoint test needs a count anyway,
         # and the checkpoint truncates the per-round lineage — count and
-        # checkpoint ride ONE job (round 12, _ckpt_count)
-        nxt, n_next = _ckpt_count(nxt.coalesce(nparts))
-        live = nxt
+        # checkpoint ride ONE job (layout.materialize)
+        live, n_next = layout.materialize(nxt.coalesce(nparts))
         converged = n_next == n_live
         n_live = n_next
         rounds += 1
@@ -883,12 +794,12 @@ def neighborhood_jaccard_pairs(edges: DataFrame, threshold: float = 0.5,
     n_und = und.count()
     # both orientations from ONE pass -- see _mirror (round 11); a cheap
     # view over the cached und, NOT materialized separately.  Scans are
-    # size-coalesced (round 12, _scan_coalesce): the cache arrives in
+    # size-coalesced (round 12, layout.scan_coalesce): the cache arrives in
     # shuffle.partitions-many derivation partitions regardless of size,
     # and every 32-task stage over a few thousand rows/task pays fixed
     # per-task cost; no-op >=150k rows/part so the large-graph regime is
     # untouched.
-    adj = (_mirror(_scan_coalesce(und, 2 * n_und))
+    adj = (_mirror(layout.scan_coalesce(und, 2 * n_und))
            .select(F.col("u").alias("node"),
                    F.col("v").alias("nbr")))
     # deg feeds three consumers (hub filter + both denominator joins) and
@@ -914,16 +825,10 @@ def neighborhood_jaccard_pairs(edges: DataFrame, threshold: float = 0.5,
     # right-sized shuffle partitions instead of derivation layout
     # (round 12: now applied in the unfiltered branch too — it was the
     # only branch left reading the derivation layout).  The partition
-    # COUNT is size-adaptive like louvain's _parts (round 12): a cached
-    # frame keeps its layout forever and AQE never re-coalesces it, so
-    # the explicit count must track the data — >=150k rows/part large
-    # bound (the spill-safe tier), 50k/part scale-down floor; above
-    # ~50k rows/core both bounds coincide with shuffle.partitions and
-    # the large-graph regime plans identically.
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    m_rows = 2 * n_und
-    wedge_parts = max(1, min(max(par, m_rows // 150_000 + 1),
-                             m_rows // 50_000 + 1))
+    # COUNT is size-adaptive (layout.size_parts): a cached frame keeps
+    # its layout forever and AQE never re-coalesces it, so the explicit
+    # count must track the data.
+    wedge_parts = layout.size_parts(edges.sparkSession, 2 * n_und)
     wedge_src = wedge_src.repartition(wedge_parts, "nbr").persist()
     a = wedge_src.select(F.col("node").alias("a"), "nbr")
     b = wedge_src.select(F.col("node").alias("b"), "nbr")
@@ -1002,7 +907,7 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
     # cache the setup pays for anyway (round 11).
     edges = edges_p = edges.select(F.col(src_col).alias("src"),
                                    F.col(dst_col).alias("dst")).persist()
-    edges = _scan_coalesce(edges, edges.count())
+    edges = layout.scan_coalesce(edges, edges.count())
     srcs = sources.select(F.col(node_col).alias("node")) \
         .dropDuplicates(["node"])
     nodes = (edges.select(F.col("src").alias("node"))
@@ -1025,11 +930,12 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
                      .otherwise(F.lit(0.0)).alias("tele"))).cache()
     nodes = nodes_p = nodes
     n = nodes.count()
-    nodes = _scan_coalesce(nodes, n)
+    nodes = layout.scan_coalesce(nodes, n)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # see pagerank: broadcast the node-bounded deg side when small so
     # materializing out_edges is a narrow map over the edge cache
-    deg_side = deg if n * 16 >= _PIN_DATA_BYTES else F.broadcast(deg)
+    bcast_nodes = layout.fits_broadcast(n)
+    deg_side = F.broadcast(deg) if bcast_nodes else deg
     out_edges = out_edges_p = edges.join(deg_side, "src").persist()
     out_srcs = out_srcs_p = \
         deg.select(F.col("src").alias("node")).persist()
@@ -1037,10 +943,9 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
     ranks = nodes.select("node", F.col("tele").alias("rank"))
     # see pagerank: broadcast the n-row ranks side below the node-count
     # gate so no superstep re-shuffles the cached out_edges
-    bcast_ranks = n * 16 < _PIN_DATA_BYTES
     for i in range(iterations):
         rside = ranks.withColumnRenamed("node", "src")
-        if bcast_ranks:
+        if bcast_nodes:
             rside = F.broadcast(rside)
         contribs = (out_edges
                     .join(rside, "src")
@@ -1157,12 +1062,12 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
     # aggregate below, which partially aggregates map-side.
     # both orientations from ONE pass over the (possibly expensive
     # derived) normalized edge set -- see _mirror (round 11)
-    adj = (_mirror(und)
-           .select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-           .localCheckpoint(eager=True))
-    labels = (adj.select("node").dropDuplicates(["node"])
-              .withColumn("lbl", F.col("node"))
-              .localCheckpoint(eager=True))
+    adj, _ = layout.materialize(
+        _mirror(und).select(F.col("u").alias("node"),
+                            F.col("v").alias("nbr")))
+    labels, _ = layout.materialize(
+        adj.select("node").dropDuplicates(["node"])
+        .withColumn("lbl", F.col("node")))
     for it in range(1, iterations + 1):
         counts = (adj.join(labels.withColumnRenamed("node", "nbr"), "nbr")
                   .groupBy("node", "lbl")
@@ -1175,7 +1080,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
                                       F.col("lbl").alias("l")))
                        .getField("l").alias("lbl")))
         if it % checkpoint_interval == 0 or it == iterations:
-            labels = labels.localCheckpoint(eager=True)
+            labels, _ = layout.materialize(labels)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -1250,7 +1155,7 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
     # scan once from an exact count — one job that materializes a cache
     # the first superstep pays for anyway, no-op above the rows/part
     # bound so the large-graph regime plans identically (round 11).
-    edges = _scan_coalesce(edges, edges.count())
+    edges = layout.scan_coalesce(edges, edges.count())
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
              .dropDuplicates(["node"])).persist()
@@ -1395,9 +1300,9 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     ``n_sources`` accordingly.  Nodes unreachable from every source do
     not appear (their sampled betweenness is 0 by definition).
     """
-    edges = edges.select(F.col(src_col).alias("src"),
-                         F.col(dst_col).alias("dst")) \
-        .localCheckpoint(eager=True)
+    edges, _ = layout.materialize(
+        edges.select(F.col(src_col).alias("src"),
+                     F.col(dst_col).alias("dst")))
     if sources is None:
         nodes = (edges.select(F.col("src").alias("node"))
                  .union(edges.select(F.col("dst").alias("node")))
@@ -1407,9 +1312,9 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     srcs = sources.select(F.col(node_col).alias("v")).dropDuplicates(["v"])
 
     # ---- forward: per-level (s, v, sigma) frames ----------------------
-    level = srcs.select(F.col("v").alias("s"), "v",
-                        F.lit(1).cast("long").alias("sigma")) \
-        .localCheckpoint(eager=True)
+    level, _ = layout.materialize(
+        srcs.select(F.col("v").alias("s"), "v",
+                    F.lit(1).cast("long").alias("sigma")))
     levels = [level]
     visited = level.select("s", "v")
     for _d in range(1, max_depth + 1):
@@ -1417,12 +1322,12 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
                .select("s", F.col("dst").alias("v"), "sigma")
                .groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
                .join(visited, ["s", "v"], "left_anti"))
-        nxt, n_nxt = _ckpt_count(nxt)
+        nxt, n_nxt = layout.materialize(nxt)
         if n_nxt == 0:
             break
         levels.append(nxt)
-        visited = visited.unionByName(nxt.select("s", "v")) \
-            .localCheckpoint(eager=True)
+        visited, _ = layout.materialize(
+            visited.unionByName(nxt.select("s", "v")))
         level = nxt
 
     # ---- backward: delta accumulation, deepest level first ------------
@@ -1445,11 +1350,10 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
                    .agg(F.sum(F.col("sigma") / F.col("__sw")
                               * (F.lit(1.0) + F.col("__dw")))
                         .alias("__contrib")))
-        below = (cur.join(contrib, ["s", "v"], "left_outer")
-                 .select("s", "v", "sigma",
-                         F.coalesce("__contrib", F.lit(0.0))
-                         .alias("delta"))
-                 .localCheckpoint(eager=True))
+        below, _ = layout.materialize(
+            cur.join(contrib, ["s", "v"], "left_outer")
+            .select("s", "v", "sigma",
+                    F.coalesce("__contrib", F.lit(0.0)).alias("delta")))
         if d >= 1:
             deltas.append(below.select("s", "v", "delta"))
     if not deltas:
@@ -1544,9 +1448,9 @@ def closeness_centrality(edges: DataFrame, sources: DataFrame | None = None,
                    .limit(n_sources))
     roots = (sources.select(F.col(node_col).alias("root"))
              .dropDuplicates(["root"]))
-    visited = roots.select(
+    visited, _ = layout.materialize(roots.select(
         "root", F.col("root").alias("node"),
-        F.lit(0).cast("long").alias("dist")).localCheckpoint(eager=True)
+        F.lit(0).cast("long").alias("dist")))
     frontier = visited
     for depth in range(1, max_depth + 1):
         nxt = (frontier.join(edges, frontier["node"] == edges["src"])
@@ -1555,7 +1459,7 @@ def closeness_centrality(edges: DataFrame, sources: DataFrame | None = None,
                .join(visited.select("root", "node"),
                      ["root", "node"], "left_anti")
                .withColumn("dist", F.lit(depth).cast("long")))
-        nxt, n_nxt = _ckpt_count(nxt)
+        nxt, n_nxt = layout.materialize(nxt)
         if n_nxt == 0:
             break
         visited = visited.unionByName(nxt)
@@ -1649,12 +1553,13 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
     exhaustion is only declared with a non-empty improvement frontier
     in hand.
     """
-    edges = (edges.select(F.col(src_col).alias("src"),
-                          F.col(dst_col).alias("dst"))
-             .dropDuplicates(["src", "dst"]).localCheckpoint(eager=True))
-    remaining = (edges.select(F.col("src").alias("node"))
-                 .unionByName(edges.select(F.col("dst").alias("node")))
-                 .dropDuplicates(["node"]).localCheckpoint(eager=True))
+    edges, _ = layout.materialize(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .dropDuplicates(["src", "dst"]))
+    remaining, n_remaining = layout.materialize(
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .dropDuplicates(["node"]))
     assigned = None
 
     def _min_label_fixpoint(nodes: DataFrame,
@@ -1672,8 +1577,8 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
         # into minutes.  Edge-only propagation stays flat per iteration
         # indefinitely (same experiment), so a generous budget is cheap:
         # unused iterations cost nothing after the early exit.
-        labels = nodes.select("node", F.col("node").alias("label"))
-        labels = labels.localCheckpoint(eager=True)
+        labels, _ = layout.materialize(
+            nodes.select("node", F.col("node").alias("label")))
         frontier = labels
         applied = 0
         while True:
@@ -1689,9 +1594,9 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
             # collapses to one severed frame; the frontier and the
             # convergence probe are cheap filters over its partitions.
             # the improved-count rides the checkpoint job (round 12,
-            # _ckpt_sever_count with a predicate): the isEmpty probe was
+            # layout.materialize with a predicate): the isEmpty probe was
             # a second driver round-trip per fixpoint iteration
-            nxt, n_imp = _ckpt_sever_count(
+            nxt, n_imp = layout.materialize(
                 labels.join(cand.withColumnRenamed("label", "__c"),
                             "node", "left")
                 .select("node",
@@ -1699,7 +1604,7 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
                                 F.coalesce(F.col("__c"), F.col("label")))
                         .alias("label"),
                         (F.col("__c") < F.col("label")).alias("__imp")),
-                pred=F.col("__imp"))
+                where=F.col("__imp"), sever=True)
             improved = nxt.where(F.col("__imp"))
             if n_imp == 0:
                 return labels, True
@@ -1717,7 +1622,7 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
                           "src", "left_semi")
                .join(remaining.withColumnRenamed("node", "dst"),
                      "dst", "left_semi"))
-        sub = sub.localCheckpoint(eager=True)
+        sub, _ = layout.materialize(sub)
         # the forward and backward fixpoints are INDEPENDENT given the
         # checkpointed subgraph (both read only `remaining` + `sub`), and
         # each is a sequential chain of tiny driver-latency-bound jobs --
@@ -1741,29 +1646,28 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
             # stop here (see docstring)
             truncated = True
             break
-        both = (fwd.join(bwd.withColumnRenamed("label", "__b"), "node")
-                .localCheckpoint(eager=True))
+        both, _ = layout.materialize(
+            fwd.join(bwd.withColumnRenamed("label", "__b"), "node"))
         done = (both.where(F.col("label") == F.col("__b"))
                 .select("node", F.col("label").alias("component")))
         assigned = (done if assigned is None
                     else assigned.unionByName(done))
-        assigned = assigned.localCheckpoint(eager=True)
-        remaining, n_remaining = _ckpt_count(
+        assigned, _ = layout.materialize(assigned)
+        remaining, n_remaining = layout.materialize(
             both.where(F.col("label") != F.col("__b")).select("node"))
         if n_remaining == 0:
             return assigned
-    n_left = remaining.count()
     if truncated:
         warnings.warn(
             "strongly_connected_components: min-label fixpoint exhausted "
             f"fixpoint_iters={fixpoint_iters} with improvements pending -- "
-            f"components UNRELIABLE for the {n_left} unassigned nodes "
+            f"components UNRELIABLE for the {n_remaining} unassigned nodes "
             "(returned as singleton placeholders); the graph has a cycle "
             "longer than the budget, raise fixpoint_iters to at least the "
             "longest cycle length", stacklevel=2)
     else:
         warnings.warn(
-            f"strongly_connected_components: {n_left} nodes still "
+            f"strongly_connected_components: {n_remaining} nodes still "
             f"unassigned after max_rounds={max_rounds} outer rounds -- "
             "deeply nested SCC chains need a larger budget; raise "
             "max_rounds", stacklevel=2)
@@ -1830,7 +1734,8 @@ def random_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
     driver-side collect that hits the broadcast ceiling long before 100
     TB.  So the deduped start set is counted once up front (the eager
     checkpoint materializes it anyway) and the broadcast only happens
-    under the same 64 MiB / n x 16 B budget as :data:`_PIN_DATA_BYTES`;
+    under the same 64 MiB / n x 16 B budget as
+    :data:`layout.PIN_DATA_BYTES`;
     above it the edges are laid out hash(src) ONCE before the loop and
     each step runs a node-id-keyed shuffled join in which only the
     frontier side moves, with the frontier hinted ``shuffle_hash`` as
@@ -1851,30 +1756,27 @@ def random_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
                        F.col(dst_col).alias("dst"))
     edges = base_edges = sel if pre_persisted else sel.persist()
     try:
-        frontier = (starts.select(F.col(node_col).alias("walk"))
-                    .dropDuplicates(["walk"])
-                    .withColumn("node", F.col("walk")))
-        frontier = frontier.localCheckpoint(eager=True)
-        # exact count of the materialized start set: one cheap job over
-        # checkpointed partitions, and (unlike a Catalyst estimate) it
-        # cannot decay -- the same reasoning as triangle_count's gate
-        n_starts = frontier.count()
-        use_broadcast = n_starts * 16 < _PIN_DATA_BYTES
+        # exact count of the start set, from the job that materializes
+        # it: unlike a Catalyst estimate it cannot decay -- the same
+        # reasoning as triangle_count's gate
+        frontier, n_starts = layout.materialize(
+            starts.select(F.col(node_col).alias("walk"))
+            .dropDuplicates(["walk"])
+            .withColumn("node", F.col("walk")))
+        use_broadcast = layout.fits_broadcast(n_starts)
         nparts = None
         if use_broadcast:
             # every step scans the persisted edges as the probe side of
             # a broadcast join; coalesce that repeated scan to a
             # size-derived partition count (the count materializes the
             # cache the first step would have paid for anyway)
-            edges = _scan_coalesce(edges, edges.count())
-        if not use_broadcast:
+            edges = layout.scan_coalesce(edges, edges.count())
+        else:
             spark = edges.sparkSession
-            nparts = _pin_parts(spark, data=edges)
+            nparts = layout.pin_parts(spark, data=edges)
             if nparts is None \
-                    and os.environ.get("SPARK_GRAFT_FORCE_PIN", "") \
-                    != "never" \
-                    and edges.count() * 16 >= _PIN_DATA_BYTES:
-                nparts = max(2 * spark.sparkContext.defaultParallelism, 1)
+                    and not layout.fits_broadcast(edges.count()):
+                nparts = layout.pin_target(spark)
             # lay the edge side out hash(src) ONCE -- every step's join
             # then reuses the persisted partitioning and only the
             # frontier side shuffles (the pagerank loop discipline)
@@ -1888,7 +1790,8 @@ def random_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
             if use_broadcast:
                 fr = F.broadcast(frontier)
             else:
-                fr = _repart(frontier, nparts, "node").hint("shuffle_hash")
+                fr = layout.repart(frontier, nparts, "node") \
+                    .hint("shuffle_hash")
             nxt = (fr
                    .join(edges, fr["node"] == edges["src"])
                    .groupBy("walk")
@@ -1896,7 +1799,7 @@ def random_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
                                        F.col("dst").alias("node")))
                         .alias("pick"))
                    .select("walk", F.col("pick.node").alias("node")))
-            nxt, n_nxt = _ckpt_count(nxt)
+            nxt, n_nxt = layout.materialize(nxt)
             if n_nxt == 0:
                 break
             trace = trace.unionByName(
@@ -2053,30 +1956,27 @@ def node2vec_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
                           .dropDuplicates(["src", "dst"]).persist())
     probe_p = None
     try:
-        frontier = (starts.select(F.col(node_col).alias("walk"))
-                    .dropDuplicates(["walk"])
-                    .withColumn("node", F.col("walk"))
-                    .withColumn("prev", F.lit(None).cast("long")))
-        frontier = frontier.localCheckpoint(eager=True)
-        n_starts = frontier.count()
-        use_broadcast = n_starts * 24 < _PIN_DATA_BYTES
+        frontier, n_starts = layout.materialize(
+            starts.select(F.col(node_col).alias("walk"))
+            .dropDuplicates(["walk"])
+            .withColumn("node", F.col("walk"))
+            .withColumn("prev", F.lit(None).cast("long")))
+        use_broadcast = layout.fits_broadcast(n_starts, row_bytes=24)
         nparts = None
         n_edges = None
+        spark = edges.sparkSession
         if use_broadcast:
             # both per-step edge scans (candidate join + pf semi-filter)
             # probe the persisted edges; coalesce the repeated scan to a
             # size-derived partition count.  The count doubles as the
             # probe gate's first fact below.
             n_edges = edges.count()
-            edges = _scan_coalesce(edges, n_edges)
-        if not use_broadcast:
-            spark = edges.sparkSession
-            nparts = _pin_parts(spark, data=edges)
+            edges = layout.scan_coalesce(edges, n_edges)
+        else:
+            nparts = layout.pin_parts(spark, data=edges)
             if nparts is None \
-                    and os.environ.get("SPARK_GRAFT_FORCE_PIN", "") \
-                    != "never" \
-                    and edges.count() * 16 >= _PIN_DATA_BYTES:
-                nparts = max(2 * spark.sparkContext.defaultParallelism, 1)
+                    and not layout.fits_broadcast(edges.count()):
+                nparts = layout.pin_target(spark)
             if nparts is not None:
                 edges = edges.repartition(nparts, "src").persist()
         # the (prev, dst) common-neighbor probe side.  Broadcasting the
@@ -2101,30 +2001,25 @@ def node2vec_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
         # the candidate stream (the big-frontier regime's layout).
         probe_broadcast = False
         if use_broadcast:
-            if n_edges * 24 < _PIN_DATA_BYTES:
+            if layout.fits_broadcast(n_edges, row_bytes=24):
                 probe_broadcast = True
             else:
                 max_deg = (edges.groupBy("src")
                            .agg(F.count(F.lit(1)).alias("__d"))
                            .agg(F.max("__d")).first()[0]) or 0
-                probe_broadcast = \
-                    n_starts * max_deg * 24 < _PIN_DATA_BYTES
+                probe_broadcast = layout.fits_broadcast(
+                    n_starts * max_deg, row_bytes=24)
         if not (use_broadcast and probe_broadcast):
-            pp = nparts
-            if pp is None:
-                try:
-                    pp = int(edges.sparkSession.conf.get(
-                        "spark.sql.shuffle.partitions"))
-                except Exception:
-                    pp = None
-            probe_p = (probe.repartition(pp, "prev", "dst").persist()
-                       if pp is not None else probe.persist())
+            pp = nparts if nparts is not None \
+                else layout.shuffle_parts(spark)
+            probe_p = probe.repartition(pp, "prev", "dst").persist()
         trace = frontier.select("walk", F.lit(0).alias("step"), "node")
         for step in range(1, length + 1):
             if use_broadcast:
                 fr = F.broadcast(frontier)
             else:
-                fr = _repart(frontier, nparts, "node").hint("shuffle_hash")
+                fr = layout.repart(frontier, nparts, "node") \
+                    .hint("shuffle_hash")
             cand = (fr.join(edges, fr["node"] == edges["src"])
                     .select("walk", fr["node"].alias("__cur"), "prev",
                             F.col("dst")))
@@ -2161,7 +2056,7 @@ def node2vec_walks(edges: DataFrame, starts: DataFrame, length: int = 5,
                         F.first("__cur").alias("prev"))
                    .select("walk", F.col("pick.node").alias("node"),
                            "prev"))
-            nxt, n_nxt = _ckpt_count(nxt)
+            nxt, n_nxt = layout.materialize(nxt)
             if n_nxt == 0:
                 break
             trace = trace.unionByName(
@@ -2239,10 +2134,9 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 16,
                        F.col(dst_col).alias("v"))
           .where(F.col("u") != F.col("v")))
     # both orientations from ONE pass -- see _mirror (round 11)
-    bi = (_mirror(bi)
-          .dropDuplicates(["u", "v"]).localCheckpoint(eager=True))
-    undecided = (bi.select(F.col("u").alias("node"))
-                 .dropDuplicates(["node"]).localCheckpoint(eager=True))
+    bi, _ = layout.materialize(_mirror(bi).dropDuplicates(["u", "v"]))
+    undecided, _ = layout.materialize(
+        bi.select(F.col("u").alias("node")).dropDuplicates(["node"]))
     active = bi
     # per-round winner tables, unioned AFTER the loop (round 11): the
     # loop never reads the accumulated set, so checkpointing the union
@@ -2258,31 +2152,33 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 16,
         nmin = (active.select(F.col("u").alias("node"),
                               key(F.col("v")).alias("__nk"))
                 .groupBy("node").agg(F.min("__nk").alias("__mn")))
-        winners = (undecided.join(nmin, "node", "left")
-                   .where(F.col("__mn").isNull()
-                          | (key(F.col("node")) < F.col("__mn")))
-                   .select("node").localCheckpoint(eager=True))
+        winners, _ = layout.materialize(
+            undecided.join(nmin, "node", "left")
+            .where(F.col("__mn").isNull()
+                   | (key(F.col("node")) < F.col("__mn")))
+            .select("node"))
         winner_tables.append(winners)
         # winners' neighbors are dominated: remove both
         dominated = (active.join(winners.withColumnRenamed("node", "u"),
                                  "u", "left_semi")
                      .select(F.col("v").alias("node")))
         removed = winners.unionByName(dominated).dropDuplicates(["node"])
-        undecided, n_undecided = _ckpt_count(
+        undecided, n_undecided = layout.materialize(
             undecided.join(removed, "node", "left_anti"))
         if n_undecided == 0:
             exhausted = False
             break
-        active = (active.join(undecided.withColumnRenamed("node", "u"),
-                              "u", "left_semi")
-                  .join(undecided.withColumnRenamed("node", "v"),
-                        "v", "left_semi").localCheckpoint(eager=True))
+        active, _ = layout.materialize(
+            active.join(undecided.withColumnRenamed("node", "u"),
+                        "u", "left_semi")
+            .join(undecided.withColumnRenamed("node", "v"),
+                  "v", "left_semi"))
     mis = winner_tables[0]
     for w in winner_tables[1:]:
         mis = mis.unionByName(w)
     if exhausted:
         warnings.warn(
-            f"maximal_independent_set: {undecided.count()} nodes still "
+            f"maximal_independent_set: {n_undecided} nodes still "
             f"undecided after rounds={rounds} -- result is independent "
             "but may not be maximal; raise rounds", stacklevel=2)
     nodes = (bi.select(F.col("u").alias("node"))
@@ -2329,72 +2225,6 @@ SELECT n.node, m.node IS NOT NULL AS in_mis
 FROM u_0 n LEFT JOIN m_{rounds} m ON m.node = n.node""")
 
 
-def _ckpt_sever(df: DataFrame) -> DataFrame:
-    """localCheckpoint(eager) PLUS a statistics reset -- the loop-state
-    materialization every iterative algorithm here should use.
-
-    ``Dataset.localCheckpoint`` severs the logical plan and the RDD
-    lineage, but it CARRIES the checkpointed plan's Catalyst statistics
-    onto the new LogicalRDD leaf.  Join size estimates are PRODUCTS of
-    their children's ``sizeInBytes``, so a loop that checkpoints a
-    frame built from k joins of last round's checkpoints multiplies the
-    carried estimates every round: the estimate's BIT LENGTH grows
-    geometrically, and from ~round 8 the driver spends its time in
-    BigInteger.multiplyToomCook3 inside stats propagation -- measured
-    on this workload as walls of 0.8s -> 3s -> 23s -> 204s per round
-    with FLAT task counts and executor cpu, ending in a driver OOM.
-    (This, not executor work, is the iterated-loop pathology previous
-    rounds worked around with round caps.)
-
-    The fix: rebuild the Dataset over the checkpointed rows WITHOUT the
-    carried stats (``internalCreateDataFrame`` leaves ``originStats``
-    empty, so the leaf reports the flat ``defaultSizeInBytes`` and
-    per-round products stay constant-width).  AQE re-plans every
-    exchange from RUNTIME sizes, so the lost estimate costs nothing on
-    the loops that use this.  Falls back to the plain checkpoint if the
-    internal constructor is unavailable."""
-    ck = df.localCheckpoint(eager=True)
-    try:
-        jdf = ck._jdf
-        spark = ck.sparkSession
-        njdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        return DataFrame(njdf, spark)
-    except Exception:
-        return ck
-
-
-def _ckpt_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """Plain localCheckpoint + row count in ONE RDD-count job — see
-    :func:`..functions.util.ckpt_count` (shared with the Cypher
-    shortestPath plan loop; measured jobs per materialize+test: 3 -> 2,
-    per materialize+count: 4 -> 2)."""
-    from .util import ckpt_count
-    return ckpt_count(df)
-
-
-def _ckpt_sever_count(df: DataFrame, pred=None) -> tuple[DataFrame, int]:
-    """:func:`_ckpt_sever` PLUS a row count — one RDD count job forces
-    the lazy checkpoint AND yields the cardinality the loops need for
-    emptiness tests / size-adaptive partitioning (see :func:`_ckpt_count`
-    for the job accounting; round 12).  With ``pred``, the count is of
-    the MATCHING rows only (the count job still materializes every
-    partition of the checkpoint — a filtered RDD count is not
-    short-circuiting)."""
-    ck = df.localCheckpoint(eager=False)
-    try:
-        jdf = ck._jdf
-        spark = ck.sparkSession
-        probe = ck if pred is None else ck.where(pred)
-        n = probe._jdf.queryExecution().toRdd().count()
-        njdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        return DataFrame(njdf, spark), n
-    except Exception:
-        probe = ck if pred is None else ck.where(pred)
-        return ck, probe.count()
-
-
 def louvain(edges: DataFrame, rounds: int = 16,
             src_col: str = "src", dst_col: str = "dst",
             weight_col: str | None = None) -> DataFrame:
@@ -2433,7 +2263,7 @@ def louvain(edges: DataFrame, rounds: int = 16,
     Per round: ONE score join on the contracted edges, ONE min-struct
     best pick, three mapping joins (mapping, totals, edges) -- all
     community-id-keyed; no windows, no collects.  State is severed per
-    round with :func:`_ckpt_sever` (localCheckpoint + stats reset), so
+    round with :func:`layout.materialize` (``sever=True``), so
     round cost tracks the SHRINKING contracted graph instead of
     compounding -- the full sf0.1 quarter-sample run converges in ~15s
     where the un-severed loop hit 204s PER ROUND by round 10.
@@ -2488,37 +2318,23 @@ def louvain(edges: DataFrame, rounds: int = 16,
         # contracted-state init: communities ARE nodes, so the community
         # multigraph is the edge list at weight 1 and the totals are the
         # degrees; the raw edges are never rejoined after this.  The
-        # edge state is laid out in row-bounded partitions (~150k (a,b)
-        # keys per task): the contraction's groupBy over NEAR-UNIQUE
+        # edge state is laid out in row-bounded, size-adaptive partitions
+        # (layout.size_parts): the contraction's groupBy over NEAR-UNIQUE
         # keys builds a hash map the size of its input partition, and
-        # 12M keys over 32 tasks spilled 4.1 GB in the partial/final
-        # aggregates before this bound.
+        # the contracted state shrinks geometrically (measured: ~0.35s
+        # per 32-task round stage at sf0.1 where the same work fits in
+        # 1-2 tasks).
         spark = edges.sparkSession
-        par = spark.sparkContext.defaultParallelism
-
-        def _parts(rows):
-            # Row-bounded above (the ~150k-keys-per-task spill bound),
-            # SIZE-ADAPTIVE below (round 11): the contracted state
-            # shrinks geometrically, and a checkpointed frame KEEPS its
-            # partition count -- AQE never re-coalesces it -- so late
-            # rounds were paying 32-task stages for a few thousand
-            # rows (measured: ~0.35s per 32-task round stage at sf0.1
-            # where the same work fits in 1-2 tasks).  Above ~20k rows
-            # per core the two bounds coincide with the old value, so
-            # the large-graph regime (and the sf1 probe cells) plans
-            # identically.
-            big = max(par, int(rows) // 150_000 + 1)
-            return max(1, min(big, int(rows) // 50_000 + 1))
-
-        ew = _ckpt_sever(bi.select(F.col("u").alias("a"),
-                                   F.col("v").alias("b"), "w")
-                         .repartition(_parts(n_bi_rows), "a", "b"))
+        ew, _ = layout.materialize(
+            bi.select(F.col("u").alias("a"), F.col("v").alias("b"), "w")
+            .repartition(layout.size_parts(spark, n_bi_rows), "a", "b"),
+            sever=True)
         ew_rows = n_bi_rows
-        ctot = _ckpt_sever(
+        ctot, _ = layout.materialize(
             bi.groupBy("u").agg(F.sum("w").alias("tot"))
-            .select(F.col("u").alias("c"), "tot"))
+            .select(F.col("u").alias("c"), "tot"), sever=True)
         # the severed leaves deliberately report no size estimate (see
-        # _ckpt_sever), so the STATIC planner would sort-merge the big
+        # layout.materialize), so the STATIC planner would sort-merge the big
         # contracted-edge side against the tiny community tables (4.6 GB
         # of sort spill measured at 12M edges).  Gate explicitly on the
         # one exact fact we have: the community/totals/merge tables are
@@ -2526,11 +2342,11 @@ def louvain(edges: DataFrame, rounds: int = 16,
         # they broadcast; above it the joins are hinted shuffle_hash
         # (sorting per round is pure overhead for a loop that contracts
         # the state anyway -- the k_truss lesson).
-        mapping, n_nodes = _ckpt_sever_count(
+        mapping, n_nodes = layout.materialize(
             bi.select(F.col("u").alias("node"))
             .dropDuplicates(["node"])
-            .withColumn("c", F.col("node")))
-        bcast = n_nodes * 16 < _PIN_DATA_BYTES
+            .withColumn("c", F.col("node")), sever=True)
+        bcast = layout.fits_broadcast(n_nodes)
 
         def small(df):
             return F.broadcast(df) if bcast else df.hint("shuffle_hash")
@@ -2569,15 +2385,15 @@ def louvain(edges: DataFrame, rounds: int = 16,
             # single-pass pick beats a two-phase hash-agg argmax that
             # would re-evaluate the scoring join (tried: +60% cpu)
             # checkpoint + emptiness test fused into ONE job (round 12,
-            # _ckpt_sever_count): isEmpty on the severed frame was a
+            # layout.materialize): isEmpty on the severed frame was a
             # second driver round-trip per round
-            best, n_best = _ckpt_sever_count(
+            best, n_best = layout.materialize(
                 scored.where(~head(F.col("a")) & head(F.col("b")))
                 .groupBy("a")
                 .agg(F.min(F.struct((-F.col("score")).alias("s"),
                                     F.col("b").alias("b"))).alias("p"))
                 .select(F.col("a").alias("c"),
-                        F.col("p.b").alias("__new")))
+                        F.col("p.b").alias("__new")), sever=True)
             if n_best == 0:
                 # merge-free round: converged only if NO positive pair
                 # exists at all (the coin can strand a round)
@@ -2598,23 +2414,23 @@ def louvain(edges: DataFrame, rounds: int = 16,
             # shuffles.  Actions are thread-safe; each future carries
             # its own plan.
             ctot_f = pool.submit(
-                lambda c=ctot, b=best: _ckpt_sever(
+                lambda c=ctot, b=best: layout.materialize(
                     c.join(small(b), "c", "left")
                     .groupBy(F.coalesce(F.col("__new"), F.col("c"))
                              .alias("c"))
-                    .agg(F.sum("tot").alias("tot"))))
+                    .agg(F.sum("tot").alias("tot")), sever=True)[0])
             # the contraction aggregate's hash maps are bounded by the
             # explicit (a, b) repartition: its keys are near-unique, so
             # partition count must track the (shrinking) edge state --
             # the count rides the checkpoint job (round 12)
-            ew, ew_rows = _ckpt_sever_count(
+            ew, ew_rows = layout.materialize(
                 ew.join(small(ma), "a", "left").join(small(mb), "b", "left")
                 .select(F.coalesce(F.col("__na"), F.col("a")).alias("a"),
                         F.coalesce(F.col("__nb"), F.col("b")).alias("b"),
                         "w")
                 .where(F.col("a") != F.col("b"))
-                .repartition(_parts(ew_rows), "a", "b")
-                .groupBy("a", "b").agg(F.sum("w").alias("w")))
+                .repartition(layout.size_parts(spark, ew_rows), "a", "b")
+                .groupBy("a", "b").agg(F.sum("w").alias("w")), sever=True)
             ctot = ctot_f.result()
         if not converged:
             warnings.warn(
@@ -2629,7 +2445,7 @@ def louvain(edges: DataFrame, rounds: int = 16,
                                F.coalesce(F.col("__new"), F.col("c"))
                                .alias("c")))
         if merges:
-            mapping = _ckpt_sever(mapping)
+            mapping, _ = layout.materialize(mapping, sever=True)
         # canonical labels: the minimum member id of each community
         canon = mapping.groupBy("c").agg(F.min("node").alias("community"))
         return mapping.join(small(canon), "c").select("node", "community")
@@ -2737,8 +2553,8 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
     stream gone the join strategy gate collapses to the proven
     triangle_count shape:
 
-    - SMALL graphs (checkpointed edge count < ``_PIN_DATA_BYTES`` at
-      16 B/edge) broadcast the per-round adjacency (bounded at tens of
+    - SMALL graphs (checkpointed edge count < ``layout.PIN_DATA_BYTES``
+      at 16 B/edge) broadcast the per-round adjacency (bounded at tens of
       MB by the gate) and the degree sides -- no sort, no wedge
       shuffle, no spill by construction.
     - LARGE graphs hint the adjacency joins ``shuffle_hash``
@@ -2756,11 +2572,12 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
         raise ValueError("k_truss: k must be >= 2")
     a, b = F.col(src_col), F.col(dst_col)
     spark = edges.sparkSession
-    ed = (edges.select(F.least(a, b).alias("a"),
-                       F.greatest(a, b).alias("b"))
-          .where(F.col("a") != F.col("b"))
-          .dropDuplicates(["a", "b"]).localCheckpoint(eager=True))
-    sess_pin = _pin_parts(spark)   # session-mismatch branch, loop-invariant
+    ed, _ = layout.materialize(
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"]))
+    # session-mismatch branch, loop-invariant
+    sess_pin = layout.pin_parts(spark)
 
     def _support(e: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(support, orient): per-edge triangle counts of ``e`` plus the
@@ -2770,20 +2587,19 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
         # cheap job; Catalyst estimates decay on evicted caches (see
         # triangle_count) and the peel shrinks e every round, so the
         # regime is re-decided per round.  One tier (see docstring):
-        # broadcast adjacency below _PIN_DATA_BYTES, SHJ hints +
+        # broadcast adjacency below layout.PIN_DATA_BYTES, SHJ hints +
         # exchange pinning from it.
         n_e = e.count()
-        big = n_e * 16 >= _PIN_DATA_BYTES
+        big = not layout.fits_broadcast(n_e)
         np_ = sess_pin
-        if np_ is None and big \
-                and os.environ.get("SPARK_GRAFT_FORCE_PIN", "") != "never":
-            np_ = max(2 * spark.sparkContext.defaultParallelism, 1)
+        if np_ is None and big:
+            np_ = layout.pin_target(spark)
         if np_ is None:
             # the checkpointed edge set keeps its derivation partition
             # count forever (AQE never re-coalesces it) -- size the
             # round's scans from the count we just paid for, like every
             # other small-regime loop in this module (round 11)
-            e = _scan_coalesce(e, n_e)
+            e = layout.scan_coalesce(e, n_e)
         # DEGREE-ORDERED orientation (same trick as
         # :func:`triangle_count`): orient every edge from the
         # (degree, id)-smaller endpoint -- every out-neighborhood is
@@ -2791,9 +2607,9 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
         # adjacency arrays.  The oracle enumerates by plain node id
         # instead; the triangle SET (and so every support count) is
         # orientation-invariant.
-        deg = (_repart(e.select(F.col("a").alias("n"))
-                       .unionAll(e.select(F.col("b").alias("n"))),
-                       np_, "n")
+        deg = (layout.repart(e.select(F.col("a").alias("n"))
+                             .unionAll(e.select(F.col("b").alias("n"))),
+                             np_, "n")
                .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
 
         def _deg_side(edge_col: str, deg_col: str):
@@ -2801,27 +2617,28 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
                               F.col("d").alias(deg_col))
             return side if big else F.broadcast(side)
 
-        ea = _repart(e, np_, "a").join(_deg_side("a", "da"), "a")
-        ea = _repart(ea, np_, "b").join(_deg_side("b", "db"), "b")
+        ea = layout.repart(e, np_, "a").join(_deg_side("a", "da"), "a")
+        ea = layout.repart(ea, np_, "b").join(_deg_side("b", "db"), "b")
         lo_first = (F.col("da") < F.col("db")) | (
             (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-        orient = orient_p = _repart(ea.select(
+        orient = orient_p = layout.repart(ea.select(
             F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v")),
             np_, "u").persist()
         if np_ is None:
             # one oriented row per edge; reuse the round's exact count
-            orient = _scan_coalesce(orient, n_e, rows_per_part=50_000)
+            orient = layout.scan_coalesce(orient, n_e,
+                                          layout.DENSE_ROWS_PER_PART)
         # groupBy("u") reuses orient's hash(u) layout in the pinned
         # regime; the common out-neighbors of oriented (u, v) are the
         # round's triangle closers for that edge
         adj = (orient.groupBy("u")
                .agg(F.sort_array(F.collect_list("v")).alias("nb")))
         adj = adj.hint("shuffle_hash") if big else F.broadcast(adj)
-        j1 = _repart(orient
-                     .join(adj.select(F.col("u").alias("__ja"),
-                                      F.col("nb").alias("nb_u")),
-                           F.col("u") == F.col("__ja")), np_, "v")
+        j1 = layout.repart(orient
+                           .join(adj.select(F.col("u").alias("__ja"),
+                                            F.col("nb").alias("nb_u")),
+                                 F.col("u") == F.col("__ja")), np_, "v")
         j = j1.join(adj.select(F.col("u").alias("__jb"),
                                F.col("nb").alias("nb_v")),
                     F.col("v") == F.col("__jb"))
@@ -2843,7 +2660,7 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
                          F.lit(1).cast("long").alias("t"))))))).alias("x"))
             .select("x.a", "x.b", "x.t")
             .where(F.col("t") > 0))
-        sup = _repart(contrib, np_, "a", "b").groupBy("a", "b").agg(
+        sup = layout.repart(contrib, np_, "a", "b").groupBy("a", "b").agg(
             F.sum("t").alias("support"))
         return sup, orient_p
 
@@ -2851,11 +2668,12 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
     final = None
     for _ in range(rounds):
         sup, orient = _support(ed)
-        sup = sup.localCheckpoint(eager=True)
+        sup, _ = layout.materialize(sup)
         orient.unpersist()
-        kept = (ed.join(sup, ["a", "b"], "left")
-                .where(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
-                .select("a", "b").localCheckpoint(eager=True))
+        kept, _ = layout.materialize(
+            ed.join(sup, ["a", "b"], "left")
+            .where(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
+            .select("a", "b"))
         removed = ed.join(kept, ["a", "b"], "left_anti")
         if removed.isEmpty():
             # nothing fell: sup was computed on exactly the final edge
@@ -2871,7 +2689,7 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 8,
             "-- result is an over-approximation of the k-truss; raise "
             "rounds", stacklevel=2)
         final, orient = _support(ed)
-        final = final.localCheckpoint(eager=True)
+        final, _ = layout.materialize(final)
         orient.unpersist()
     return (ed.join(final, ["a", "b"], "left")
             .select(F.col("a").alias("src"), F.col("b").alias("dst"),
@@ -2953,7 +2771,7 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 16, iterations: int = 3,
     aggregate state is O(dims) per node, map-side combinable, and the
     element sums compile into whole-stage codegen (an O(dims) Catalyst
     tree per iteration, NOT O(dims x iterations): each round is severed
-    with :func:`_ckpt_sever`, which also keeps join-size estimates
+    with :func:`layout.materialize`, which also keeps join-size estimates
     flat).  Structural twins (identical neighborhoods) get identical
     embeddings from iteration 1 on, because their own (hash-distinct)
     projection vector never re-enters the sum.
@@ -2991,8 +2809,8 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 16, iterations: int = 3,
         # every iteration scans the persisted bidirectional edge set as
         # the probe side of the embedding join; coalesce the repeated
         # scan to a size-derived partition count (narrow, no-op at
-        # >=150k rows/partition -- see _scan_coalesce)
-        bi = _scan_coalesce(bi, n_bi)
+        # >=150k rows/partition -- see layout.scan_coalesce)
+        bi = layout.scan_coalesce(bi, n_bi)
 
         def _entry(d):
             h = F.conv(F.substring(
@@ -3003,10 +2821,10 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 16, iterations: int = 3,
                  .otherwise(F.lit(0)).cast("long"))
             return e.cast("double") if normalize else e
 
-        cur = _ckpt_sever(
+        cur, n_nodes = layout.materialize(
             bi.select(F.col("u").alias("node")).dropDuplicates(["node"])
             .select("node", F.array(*[_entry(d) for d in range(dims)])
-                    .alias("emb")))
+                    .alias("emb")), sever=True)
         # The severed embedding frame reports no Catalyst stats, so the
         # STATIC planner sort-merges every iteration's join -- sorting
         # the 2m-row wide neighbor stream is pure spill fuel (measured
@@ -3015,8 +2833,7 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 16, iterations: int = 3,
         # broadcast the embedding frame under the 64 MiB budget, hint
         # shuffle_hash above it (the wide stream never sorts either
         # way; at billions of nodes the frame shuffles node-keyed).
-        n_nodes = cur.count()
-        small_state = n_nodes * (dims + 1) * 8 <= _PIN_DATA_BYTES
+        small_state = layout.fits_broadcast(n_nodes, (dims + 1) * 8)
 
         def _emb_side(frame):
             return F.broadcast(frame) if small_state \
@@ -3025,7 +2842,7 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 16, iterations: int = 3,
         agg = F.avg if normalize else F.sum
         iters = []
         for _ in range(iterations):
-            cur = _ckpt_sever(
+            cur, _ = layout.materialize(
                 bi.join(_emb_side(cur.withColumnRenamed("node", "v")),
                         "v")
                 .groupBy(F.col("u").alias("node"))
@@ -3033,7 +2850,7 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 16, iterations: int = 3,
                        for d in range(dims)])
                 .select("node", F.array(*[F.col(f"_d{d}")
                                           for d in range(dims)])
-                        .alias("emb")))
+                        .alias("emb")), sever=True)
             iters.append(cur)
         acc = iters[0].select(
             "node", F.transform(

@@ -34,7 +34,7 @@ def curate_corpus(docs: DataFrame, quality_min: float = 0.4,
     were never a matching pair), the policy large corpus dedups usually
     want.
     """
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     # size_aware: the heavy minhash stage runs downstream of the dedup
     # window shuffle (parallel regardless); only a genuinely fat single
     # file is worth a pre-shuffle here.

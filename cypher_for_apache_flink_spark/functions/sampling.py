@@ -201,7 +201,7 @@ def contamination_check(docs: DataFrame, benchmark: DataFrame, n: int = 3,
     training data.
     """
     from .dedup import word_shingles
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     doc_sh = ensure_parallelism(docs).select(
         F.col(id_col),
         F.explode(word_shingles(F.col(text_col), n)).alias("sh"))

@@ -648,7 +648,8 @@ def ivfpq_build(df: DataFrame, n_lists: int = 8, m: int = 8, k: int = 16,
         # the build's two collects (coarse seeds, codebook seeds) are
         # done; materialize the encoding off the persisted residuals
         # before releasing them
-        encoded = encoded.localCheckpoint(eager=True)
+        from .layout import materialize
+        encoded, _ = materialize(encoded)
     finally:
         res.unpersist()
     return encoded, coarse, codebooks

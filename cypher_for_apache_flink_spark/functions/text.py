@@ -297,7 +297,7 @@ def top_ngrams_by_doc_freq(df: DataFrame, n: int = 2, k: int = 20,
     plan a 100 TB corpus wants.
     """
     from .dedup import word_shingles
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     ex = ensure_parallelism(df).select(
         F.explode(word_shingles(F.col(text_col), n)).alias("ngram"))
     return (ex.groupBy("ngram")
@@ -323,7 +323,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     base = ensure_parallelism(df)
     if n_docs is None:
         n_docs = base.count()
@@ -370,7 +370,7 @@ def bm25_topk(df: DataFrame, query: str, k: int = 10, k1: float = 1.2,
     qterms = sorted({t for t in query.lower().split() if t})
     if not qterms:
         raise ValueError("bm25_topk: query has no tokens")
-    from .util import ensure_parallelism
+    from .layout import ensure_parallelism
     base = ensure_parallelism(df)
     totals = base.agg(
         F.count(F.lit(1)).alias("n"),

@@ -2,24 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def ckpt_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """localCheckpoint + row count in ONE job: the lazy checkpoint is
-    forced by an ``RDD.count()`` over the checkpointed rows.  The
-    eager-checkpoint-then-isEmpty (or -then-``DataFrame.count()``) idiom
-    the fixpoint loops used paid 3-4 driver round-trips per iteration for
-    one materialization — ``DataFrame.count()`` is itself a 2-job AQE
-    aggregate every call (round 12, guide §5 driver actions; results
-    identical by construction)."""
-    ck = df.localCheckpoint(eager=False)
-    try:
-        n = ck._jdf.queryExecution().toRdd().count()
-    except Exception:
-        n = ck.count()
-    return ck, n
 
 
 def bind_once(col: Column, f) -> Column:
@@ -38,59 +22,3 @@ def bind_once(col: Column, f) -> Column:
     element.
     """
     return F.transform(F.array(col), f)[0]
-
-# Size-aware mode only widens when each target partition would receive at
-# least this many bytes.  Used where the next stage is CHEAP per row (a
-# quality filter): there the repartition shuffle plus 32-task scheduling
-# overhead on every downstream stage costs more than the parallelism buys.
-_MIN_BYTES_PER_PARTITION = 8 << 20  # 8 MiB
-
-# An input whose plan-size estimate is at least target_partitions x this is
-# already naturally wide (Spark splits file scans at maxPartitionBytes =
-# 128 MiB) — widening it would re-shuffle warehouse-scale data for nothing.
-_NATURALLY_WIDE_BYTES = 128 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the plan (exact file bytes for a bare
-    scan, propagated estimate above it).  None when the estimate is the
-    unknown-size sentinel."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:
-        return None
-    return size if 0 <= size < (1 << 50) else None
-
-
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
-                       size_aware: bool = False) -> DataFrame:
-    """Widen thin inputs before heavy per-row compute.
-
-    A corpus often arrives as ONE parquet file = one partition, which
-    serializes tokenize/shingle/minhash work onto a single core (measured:
-    minhash_lsh_pairs over 5k docs is 5x slower unwidened).  Default mode
-    widens any input whose size estimate says it cannot already be wide —
-    per-row signature compute dwarfs the shuffle of the input bytes.
-
-    ``size_aware=True`` is for call sites whose NEXT stage is cheap and
-    whose heavy stages sit downstream of a natural shuffle: it only widens
-    when each target partition would get at least 8 MiB.
-
-    The decision uses ONLY Catalyst's plan-size estimate — never
-    ``df.rdd.getNumPartitions()``, which under AQE materializes every
-    query stage below the plan, i.e. silently RUNS the upstream job at
-    pipeline-construction time (measured: 4x slowdown of curate_corpus
-    from exactly that).  Inputs estimated at >= partitions x 128 MiB pass
-    through untouched, so no shuffle is ever added at 100 TB.
-    """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    size = _plan_size_bytes(df)
-    if size is None or size >= target * _NATURALLY_WIDE_BYTES:
-        return df
-    if size_aware:
-        target = min(target, max(1, size // _MIN_BYTES_PER_PARTITION))
-    if target <= 1:
-        return df
-    return df.repartition(target)

@@ -30,7 +30,7 @@ import dataclasses
 from pyspark.sql import functions as F
 
 from ..errors import PlanError
-from ..functions.util import ckpt_count
+from ..functions.layout import materialize
 from ..ir import expr as E
 from ..operators.header import column_name, _san
 from ..operators.records import Records
@@ -210,17 +210,16 @@ def plan_shortest_path(pl, records, part: A.PatternPart,
     spark = pl.session.spark
     sources = pairs.select("a").dropDuplicates()
     # checkpoint + cardinality in ONE RDD-count job each (round 12,
-    # util.ckpt_count): the loop's per-level emptiness tests then read
+    # layout.materialize): the loop's per-level emptiness tests then read
     # the already-known counts instead of scheduling isEmpty probes —
     # the eager-ckpt-then-isEmpty idiom cost 3 driver round-trips per
     # materialization
-    frontier, n_frontier = ckpt_count(sources.select(
+    frontier, n_frontier = materialize(sources.select(
         "a", F.col("a").alias("node"),
         F.array().cast("array<long>").alias("rels"),
         F.array(F.col("a")).alias("nodes")))
-    visited = sources.select("a", F.col("a").alias("node")) \
-        .localCheckpoint(eager=True)
-    remaining, n_remaining = ckpt_count(pairs)
+    visited, _ = materialize(sources.select("a", F.col("a").alias("node")))
+    remaining, n_remaining = materialize(pairs)
     found = None        # (a, b, rels, nodes)
 
     def record_found(cand, remaining, n_remaining):
@@ -230,11 +229,11 @@ def plan_shortest_path(pl, records, part: A.PatternPart,
                          & (cand["node"] == remaining["b"]),
                          "left_semi") \
             .select("a", F.col("node").alias("b"), "rels", "nodes")
-        hits, n_hits = ckpt_count(hits)
+        hits, n_hits = materialize(hits)
         if n_hits == 0:
             return remaining, n_remaining
         found = hits if found is None else found.unionByName(hits)
-        return ckpt_count(remaining.join(
+        return materialize(remaining.join(
             hits.select("a", "b").dropDuplicates(), ["a", "b"],
             "left_anti"))
 
@@ -253,7 +252,7 @@ def plan_shortest_path(pl, records, part: A.PatternPart,
                        F.concat("nodes", F.array("dst")).alias("nodes")))
         nxt = nxt.join(visited, ["a", "node"], "left_anti")
         # finished sources stop expanding
-        nxt, n_nxt = ckpt_count(
+        nxt, n_nxt = materialize(
             nxt.join(remaining.select("a").dropDuplicates(), ["a"],
                      "left_semi"))
         if n_nxt == 0:
@@ -261,9 +260,8 @@ def plan_shortest_path(pl, records, part: A.PatternPart,
         if level >= lo:
             remaining, n_remaining = record_found(nxt, remaining,
                                                   n_remaining)
-        visited = visited.unionByName(
-            nxt.select("a", "node").dropDuplicates()) \
-            .localCheckpoint(eager=True)
+        visited, _ = materialize(visited.unionByName(
+            nxt.select("a", "node").dropDuplicates()))
         frontier, n_frontier = nxt, n_nxt
     if level >= _MAX_LEVELS and n_remaining > 0:
         raise PlanError(

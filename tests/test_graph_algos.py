@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from cypher_for_apache_flink_spark.functions import layout
 from cypher_for_apache_flink_spark.functions.graph_algos import (
     bfs_shortest_paths, bfs_sql_oracle, pagerank, pagerank_sql_oracle)
 
@@ -507,41 +508,27 @@ def test_weighted_sp_matches_duckdb_oracle(spark):
 
 # --- partition-pin gate (round 9, VERDICT r8 #1) ------------------------
 
-def test_pin_gate_skips_when_session_well_sized(spark, monkeypatch):
+def test_pin_gate_skips_when_session_well_sized(spark):
     """No explicit repartitions when shuffle.partitions is within 2x of
     2x defaultParallelism — the r8 unconditional pin regressed exactly
     this config (BENCH_DIFF_r08.md)."""
-    from cypher_for_apache_flink_spark.functions.graph_algos import \
-        _pin_parts
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_PIN", raising=False)
     target = 2 * spark.sparkContext.defaultParallelism
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for sp in (target // 2, target, target * 2):
             spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-            assert _pin_parts(spark) is None
+            assert layout.pin_parts(spark) is None
         for sp in (max(1, target // 2 - 1), target * 2 + 1, 200 * target):
             spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-            assert _pin_parts(spark) == target
+            assert layout.pin_parts(spark) == target
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_pin_gate_force_env_overrides(spark, monkeypatch):
-    from cypher_for_apache_flink_spark.functions.graph_algos import \
-        _pin_parts
-    target = 2 * spark.sparkContext.defaultParallelism
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_PIN", "always")
-    assert _pin_parts(spark) == target
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_PIN", "never")
-    assert _pin_parts(spark) is None
-
-
-def test_pagerank_no_inloop_exchange_pins_when_gate_off(spark, monkeypatch):
+def test_pagerank_no_inloop_exchange_pins_when_gate_off(spark):
     """With the gate deciding 'no pin', the pagerank plan must not
     contain the r8 RoundRobin/hash repartitions — count the explicit
     RepartitionByExpression nodes in the analyzed plan."""
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_PIN", "never")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "src long, dst long")
     out = pagerank(edges, iterations=2)
@@ -554,17 +541,15 @@ def test_pin_gate_large_data_estimate_pins(spark, monkeypatch):
     """Data-size branch (round 9): a 64 MiB+ Catalyst estimate pins even
     under a matched session default — measured 1.7x at the x10 probe
     scale (tools/probes/partition_probe_r9.json)."""
-    import cypher_for_apache_flink_spark.functions.graph_algos as ga
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_PIN", raising=False)
     target = 2 * spark.sparkContext.defaultParallelism
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
         small = spark.range(10).select(
             F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-        assert ga._pin_parts(spark, data=small) is None
-        monkeypatch.setattr(ga, "_PIN_DATA_BYTES", 1)
-        assert ga._pin_parts(spark, data=small) == target
+        assert layout.pin_parts(spark, data=small) is None
+        monkeypatch.setattr(layout, "PIN_DATA_BYTES", 1)
+        assert layout.pin_parts(spark, data=small) == target
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -934,7 +919,7 @@ def test_random_walks_shuffled_regime_matches_broadcast(spark, monkeypatch):
                                    "node long")
     want = sorted(map(tuple, ga.random_walks(edges, starts,
                                              length=5).collect()))
-    monkeypatch.setattr(ga, "_PIN_DATA_BYTES", 1)   # every frontier "big"
+    monkeypatch.setattr(layout, "PIN_DATA_BYTES", 1)   # every frontier "big"
     got = sorted(map(tuple, ga.random_walks(edges, starts,
                                             length=5).collect()))
     assert got == want and len(got) == 10 * 6
@@ -951,7 +936,7 @@ def test_k_truss_big_regime_matches_small(spark, monkeypatch):
     pairs = [(a, b) for a, b in pairs if a != b]
     edges = spark.createDataFrame(pairs, "src long, dst long")
     want = sorted(map(tuple, ga.k_truss(edges, k=3, rounds=3).collect()))
-    monkeypatch.setattr(ga, "_PIN_DATA_BYTES", 1)
+    monkeypatch.setattr(layout, "PIN_DATA_BYTES", 1)
     got = sorted(map(tuple, ga.k_truss(edges, k=3, rounds=3).collect()))
     assert got == want and len(got) > 0
 
@@ -1036,7 +1021,7 @@ def test_node2vec_shuffled_regime_matches_broadcast(spark, monkeypatch):
                                    "node long")
     want = sorted(map(tuple, ga.node2vec_walks(
         edges, starts, length=4, p=2, q=3).collect()))
-    monkeypatch.setattr(ga, "_PIN_DATA_BYTES", 1)
+    monkeypatch.setattr(layout, "PIN_DATA_BYTES", 1)
     got = sorted(map(tuple, ga.node2vec_walks(
         edges, starts, length=4, p=2, q=3).collect()))
     assert got == want
@@ -1238,7 +1223,7 @@ def test_node2vec_probe_gate_regime_independent(spark, monkeypatch):
         edges, starts, length=4, p=4, q="0.25").collect()))
     # n_starts*24 = 72 < 2000; edges.count()*24 = 4296 >= 2000;
     # n_starts*max_deg*24 = 3*60*24 = 4320 >= 2000 -> shuffled probe
-    monkeypatch.setattr(ga, "_PIN_DATA_BYTES", 2000)
+    monkeypatch.setattr(layout, "PIN_DATA_BYTES", 2000)
     calls = {"pf": 0}
     real_broadcast = ga.F.broadcast
 
