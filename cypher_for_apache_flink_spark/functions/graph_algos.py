@@ -12,7 +12,11 @@ Scale design:
  - Per iteration: one join ranks-to-edges on src and one hash aggregate on
    dst.  Both shuffles are on node ids; pre-bucketing the edge table by src
    makes the join exchange-free on a real cluster.
- - Lineage is truncated with localCheckpoint every few supersteps --
+ - Two loops are shared: :func:`_power_iteration` runs pagerank and
+   personalized_pagerank, :func:`_level_bfs` runs bfs_shortest_paths,
+   closeness_centrality and the forward phase of betweenness.
+ - Lineage is truncated every few supersteps with
+   :func:`layout.materialize`, the one localCheckpoint under functions/ --
    iterative DataFrame plans otherwise grow exponentially (same recipe as
    functions/components.py connected components).
  - The dangling-mass term is a 1-row aggregate broadcast into the update
@@ -26,6 +30,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import CacheLease
 from . import layout
 
 
@@ -73,6 +78,33 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     verified against an unrolled recursive-CTE SQL oracle at 6 decimal
     places.
     """
+    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double").alias("w"))
+    edges = edges.select(*cols)
+    if weight_col is not None:
+        edges = edges.where(F.col("w") > 0)
+    return _power_iteration(edges, None, iterations, damping,
+                            checkpoint_interval)
+
+
+def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
+                     iterations: int, damping: float,
+                     checkpoint_interval: int) -> DataFrame:
+    """The one power-iteration loop behind :func:`pagerank` (``srcs`` is
+    None: uniform teleport 1/N) and :func:`personalized_pagerank`
+    (``srcs`` is the distinct (node) teleport set: 1/|S| on each source,
+    0 elsewhere).  ``edges`` is (src, dst) or weighted (src, dst, w).
+    Owns the setup, the pin and broadcast gates, the superstep loop and
+    the single CacheLease over every frame it persists; returns (node,
+    rank)."""
+    lease = CacheLease()
+
+    def _leased(out):
+        out._cypher_cache_lease = lease
+        return out
+
+    weighted = "w" in edges.columns
     # Persisted: the input may be an expensive derived set (a co-purchase
     # self-join, a Cypher projection) and setup scans it several times
     # (node set, degrees, out-edge materialization) before the loop.
@@ -85,13 +117,7 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     # is skipped entirely — unconditionally pinning was a measured
     # +102% shuffle / +580% cpu regression there (BENCH_DIFF_r08.md,
     # layout.pin_parts docstring).
-    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("w"))
-    edges = edges.select(*cols)
-    if weight_col is not None:
-        edges = edges.where(F.col("w") > 0)
-    edges = edges_p = edges.persist()
+    edges = lease.add(edges.persist())
     spark = edges.sparkSession
     nparts = layout.pin_parts(spark, data=edges)
     if nparts is None:
@@ -109,25 +135,34 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
             # can never coalesce (cached plans keep their layout) --
             # size the scan once like the walk loops do (round 11)
             edges = layout.scan_coalesce(edges, n_edges)
-    nodes = layout.repart(edges.select(F.col("src").alias("node"))
-                          .union(edges.select(F.col("dst").alias("node"))),
-                          nparts, "node") \
-        .dropDuplicates(["node"])
+    ends = (edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node"))))
+    if srcs is not None:
+        ends = ends.union(srcs)
+    nodes = layout.repart(ends, nparts, "node").dropDuplicates(["node"])
+    if srcs is not None:
+        n_src = srcs.count()
+        if n_src == 0:
+            return _leased(nodes.select("node", F.lit(0.0).alias("rank"))
+                           .limit(0))
+        nodes = (nodes.join(srcs.withColumn("__s", F.lit(1)), "node",
+                            "left_outer")
+                 .select("node", F.when(F.col("__s").isNotNull(),
+                                        F.lit(1.0 / n_src))
+                         .otherwise(F.lit(0.0)).alias("tele")))
     # Cached: read every superstep (left join target + dangling scan).  The
     # count is a deliberate single action: it materializes the cache AND
     # yields N for the teleport term (an iterative algorithm runs a job per
     # superstep anyway — this is not a hidden extra).
-    nodes = nodes_p = nodes.cache()
+    nodes = lease.add(nodes.cache())
     n = nodes.count()
     if n == 0:
-        nodes.unpersist()
-        return nodes.select("node", F.lit(0.0).alias("rank"))
+        return _leased(nodes.select("node", F.lit(0.0).alias("rank")))
     if nparts is None:
         nodes = layout.scan_coalesce(nodes, n)
     deg = layout.repart(edges, nparts, "src") \
         .groupBy("src").agg(
-            (F.sum("w") if weight_col is not None
-             else F.count(F.lit(1))).alias("deg"))
+            (F.sum("w") if weighted else F.count(F.lit(1))).alias("deg"))
     # (src, dst, deg) is loop-invariant; persist so each superstep reads a
     # materialized table instead of re-running scan+join+agg.  Same for the
     # set of nodes WITH out-edges — the per-superstep dangling anti-join
@@ -141,18 +176,24 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     # not broadcast material.
     bcast_nodes = layout.fits_broadcast(n)
     deg_side = F.broadcast(deg) if bcast_nodes else deg
-    out_edges = out_edges_p = \
-        layout.repart(edges, nparts, "src").join(deg_side, "src").persist()
-    out_srcs = out_srcs_p = deg.select(F.col("src").alias("node")).persist()
+    out_edges = lease.add(
+        layout.repart(edges, nparts, "src").join(deg_side, "src").persist())
+    out_srcs = lease.add(deg.select(F.col("src").alias("node")).persist())
     if nparts is None:
         # same row counts as the cached edge/node sets -- reuse those
         # counts instead of materializing two more counting jobs
         out_edges = layout.scan_coalesce(out_edges, n_edges)
         out_srcs = layout.scan_coalesce(out_srcs, n)
 
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    transfer = (F.col("rank") * F.col("w") / F.col("deg")
-                if weight_col is not None
+    if srcs is None:
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+        base = F.lit((1.0 - damping) / n)
+        share = F.col("m") / n
+    else:
+        ranks = nodes.select("node", F.col("tele").alias("rank"))
+        base = F.lit(1.0 - damping) * F.col("tele")
+        share = F.col("m") * F.col("tele")
+    transfer = (F.col("rank") * F.col("w") / F.col("deg") if weighted
                 else F.col("rank") / F.col("deg"))
     # With the caches alive, Catalyst's growing join-output estimates
     # flip the per-superstep contribs join to sort-merge, and under AQE
@@ -178,22 +219,12 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
                  .join(contribs, "node", "left_outer")
                  .crossJoin(F.broadcast(dangling))
                  .select("node",
-                         (F.lit((1.0 - damping) / n)
-                          + F.lit(damping)
+                         (base + F.lit(damping)
                           * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                             + F.col("m") / n)).alias("rank")))
+                             + share)).alias("rank")))
         if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-
-    out = ranks.select("node", F.col("rank").alias("rank"))
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(edges_p)
-    lease.add(nodes_p)
-    lease.add(out_edges_p)
-    lease.add(out_srcs_p)
-    out._cypher_cache_lease = lease
-    return out
+            ranks, _ = layout.materialize(ranks)
+    return _leased(ranks.select("node", F.col("rank").alias("rank")))
 
 
 def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
@@ -213,27 +244,52 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
     operator produces it); this is the extension users reached for GraphX
     Pregel for.
     """
-    edges = edges.select(F.col(src_col).alias("src"),
-                         F.col(dst_col).alias("dst"))
-    visited = (sources.select(F.col(node_col).alias("node"))
-               .dropDuplicates(["node"])
-               .withColumn("dist", F.lit(0).cast("long")))
-    visited, _ = layout.materialize(visited)
-    frontier = visited
+    return _level_bfs(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        sources.select(F.col(node_col).alias("node")).dropDuplicates(["node"]),
+        max_hops, checkpoint_interval)[0]
+
+
+def _level_bfs(edges: DataFrame, seeds: DataFrame, max_hops: int,
+               checkpoint_interval: int = 1, root: str | None = None,
+               sigma: bool = False) -> tuple[DataFrame, list[DataFrame]]:
+    """The one level-synchronous BFS loop behind :func:`bfs_shortest_paths`,
+    :func:`closeness_centrality` and the forward phase of
+    :func:`betweenness`.
+
+    ``edges`` is (src, dst).  ``seeds`` holds the distinct level-0 rows:
+    (node), or (root, node) when ``root`` names a search key column (one
+    BFS per root, all run together), plus a long ``sigma`` column when
+    ``sigma`` is set.  Per hop: ONE join frontier->edges, ONE dedup on
+    the key -- or, with ``sigma``, one sum of the shortest-path counts --
+    and ONE anti-join against the visited set; every row of a level gets
+    a long ``dist``.  Every ``checkpoint_interval`` hops and at
+    ``max_hops`` the level is materialized, which truncates lineage AND
+    decides termination in one job: an empty level ends the loop.
+
+    Returns ``(visited, levels)``: ``levels[d]`` is the level at distance
+    d and ``visited`` is their lazy union -- the levels are the only
+    state, no visited set is checkpointed."""
+    keys = ["node"] if root is None else [root, "node"]
+    carry = ["sigma"] if sigma else []
+    level, _ = layout.materialize(
+        seeds.withColumn("dist", F.lit(0).cast("long")))
+    visited, levels = level, [level]
     for hop in range(1, max_hops + 1):
-        nxt = (frontier.join(edges, frontier["node"] == edges["src"])
-               .select(F.col("dst").alias("node"))
-               .dropDuplicates(["node"])
-               .join(visited.select("node"), "node", "left_anti")
+        step = (level.join(edges, level["node"] == edges["src"])
+                .select(*keys[:-1], F.col("dst").alias("node"), *carry))
+        step = (step.groupBy(*keys).agg(F.sum("sigma").alias("sigma"))
+                if sigma else step.dropDuplicates(keys))
+        nxt = (step.join(visited.select(*keys), keys, "left_anti")
                .withColumn("dist", F.lit(hop).cast("long")))
         if hop % checkpoint_interval == 0 or hop == max_hops:
-            # truncate lineage AND decide termination with one materialize
             nxt, n_nxt = layout.materialize(nxt)
             if n_nxt == 0:
                 break
         visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+        levels.append(nxt)
+        level = nxt
+    return visited, levels
 
 
 def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
@@ -540,7 +596,6 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
     out = j.agg(F.coalesce(
         F.sum(F.size(F.array_intersect(F.col("nb_a"), F.col("nb_b")))),
         F.lit(0)).cast("long").alias("n_triangles"))
-    from ..cache import CacheLease
     lease = CacheLease()
     lease.add(und)
     lease.add(oriented)
@@ -589,7 +644,6 @@ def local_clustering(edges: DataFrame, src_col: str = "src",
                                                   F.lit(0))
                           / (F.col("deg") * (F.col("deg") - 1)))
                    .otherwise(F.lit(0.0)).alias("coeff")))
-    from ..cache import CacheLease
     lease = CacheLease()
     lease.add(und)
     lease.add(oriented)
@@ -842,7 +896,6 @@ def neighborhood_jaccard_pairs(edges: DataFrame, threshold: float = 0.5,
                / (F.col("da") + F.col("db") - F.col("shared")), 6))
            .where(F.col("jaccard") >= threshold)
            .select("a", "b", "jaccard"))
-    from ..cache import CacheLease
     lease = CacheLease()
     lease.add(und)
     lease.add(deg)
@@ -897,84 +950,17 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
         rank'(v) = (1-d)*tele(v) + d * (sum_{u->v} rank(u)/deg(u)
                                         + dangling * tele(v))
 
-    with tele(v) = 1/|S| for source nodes, else 0.  Same loop shape and
-    cache discipline as :func:`pagerank`; per-superstep shuffles key on
-    node ids.
+    with tele(v) = 1/|S| for source nodes, else 0.  Runs the same loop
+    as :func:`pagerank` -- :func:`_power_iteration`, with the sources as
+    the teleport set -- so it shares pagerank's pin and broadcast gates,
+    scan coalescing and cache lease; per-superstep shuffles key on node
+    ids.
     """
-    # persisted: setup scans the (possibly expensively derived) edge set
-    # several times before the loop — see pagerank.  The count sizes the
-    # cached scan (no-op above the rows/part bound) and materializes a
-    # cache the setup pays for anyway (round 11).
-    edges = edges_p = edges.select(F.col(src_col).alias("src"),
-                                   F.col(dst_col).alias("dst")).persist()
-    edges = layout.scan_coalesce(edges, edges.count())
     srcs = sources.select(F.col(node_col).alias("node")) \
         .dropDuplicates(["node"])
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .union(srcs.select("node"))
-             .dropDuplicates(["node"]))
-    n_src = srcs.count()
-    if n_src == 0:
-        out = nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
-        from ..cache import CacheLease
-        lease = CacheLease()
-        lease.add(edges_p)
-        out._cypher_cache_lease = lease
-        return out
-    # (node, tele) is read every superstep: cache + count materializes
-    nodes = (nodes.join(srcs.withColumn("__s", F.lit(1)), "node",
-                        "left_outer")
-             .select("node", F.when(F.col("__s").isNotNull(),
-                                    F.lit(1.0 / n_src))
-                     .otherwise(F.lit(0.0)).alias("tele"))).cache()
-    nodes = nodes_p = nodes
-    n = nodes.count()
-    nodes = layout.scan_coalesce(nodes, n)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # see pagerank: broadcast the node-bounded deg side when small so
-    # materializing out_edges is a narrow map over the edge cache
-    bcast_nodes = layout.fits_broadcast(n)
-    deg_side = F.broadcast(deg) if bcast_nodes else deg
-    out_edges = out_edges_p = edges.join(deg_side, "src").persist()
-    out_srcs = out_srcs_p = \
-        deg.select(F.col("src").alias("node")).persist()
-
-    ranks = nodes.select("node", F.col("tele").alias("rank"))
-    # see pagerank: broadcast the n-row ranks side below the node-count
-    # gate so no superstep re-shuffles the cached out_edges
-    for i in range(iterations):
-        rside = ranks.withColumnRenamed("node", "src")
-        if bcast_nodes:
-            rside = F.broadcast(rside)
-        contribs = (out_edges
-                    .join(rside, "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("rank") / F.col("deg"))
-                         .alias("contrib"))
-                    .withColumnRenamed("dst", "node"))
-        dangling = (ranks.join(out_srcs, "node", "left_anti")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m")))
-        ranks = (nodes
-                 .join(contribs, "node", "left_outer")
-                 .crossJoin(F.broadcast(dangling))
-                 .select("node",
-                         (F.lit(1.0 - damping) * F.col("tele")
-                          + F.lit(damping)
-                          * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                             + F.col("m") * F.col("tele"))).alias("rank")))
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-
-    out = ranks.select("node", "rank")
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(edges_p)
-    lease.add(nodes_p)
-    lease.add(out_edges_p)
-    lease.add(out_srcs_p)
-    out._cypher_cache_lease = lease
-    return out
+    return _power_iteration(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        srcs, iterations, damping, checkpoint_interval)
 
 
 def personalized_pagerank_sql_oracle(edges_sql: str, sources_sql: str,
@@ -1148,33 +1134,28 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
     oracle at 6 decimals.  Beyond-reference: the reference has no
     algorithm surface at all.
     """
-    edges = edges_p = edges.select(F.col(src_col).alias("src"),
-                                   F.col(dst_col).alias("dst")).persist()
+    lease = CacheLease()
+    edges = lease.add(edges.select(F.col(src_col).alias("src"),
+                                   F.col(dst_col).alias("dst")).persist())
     # The loop scans this cache twice per superstep in its derivation
     # partition layout (never re-coalesced for cached plans); size the
     # scan once from an exact count — one job that materializes a cache
     # the first superstep pays for anyway, no-op above the rows/part
     # bound so the large-graph regime plans identically (round 11).
     edges = layout.scan_coalesce(edges, edges.count())
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .dropDuplicates(["node"])).persist()
+    nodes = lease.add((edges.select(F.col("src").alias("node"))
+                       .union(edges.select(F.col("dst").alias("node")))
+                       .dropDuplicates(["node"])).persist())
     if iterations <= 0:
         # degenerate call: the uniform initial scores, as before round 9
         out = nodes.select("node", F.lit(1.0).alias("hub"),
                            F.lit(1.0).alias("authority"))
-        from ..cache import CacheLease
-        lease = CacheLease()
-        lease.add(edges_p)
-        lease.add(nodes)
         out._cypher_cache_lease = lease
         return out
     # hub_0 = 1.0 over nodes WITH out-edges; others never feed the loop
     hub = (edges.select(F.col("src").alias("node"))
            .dropDuplicates(["node"]).withColumn("h", F.lit(1.0)))
     a = None
-    from ..cache import CacheLease
-    lease = CacheLease()
     defer_norms = iterations <= 8
 
     def _norm1(df, col):
@@ -1203,7 +1184,7 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
             hub = (hub.crossJoin(F.broadcast(_norm1(hub, "h")))
                    .select("node", (F.col("h") / F.col("n")).alias("h")))
         if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
-            hub = hub.localCheckpoint(eager=False)
+            hub, _ = layout.materialize(hub)
     # final norms (the ONLY ones in the deferred regime) + densify:
     # zero hub for sink-only nodes, zero auth for source-only nodes —
     # exactly the oracle's coalesce semantics.  hub/a are persisted so
@@ -1222,8 +1203,6 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
                    .alias("hub"),
                    (F.coalesce(F.col("a"), F.lit(0.0)) / F.col("an"))
                    .alias("authority")))
-    lease.add(edges_p)
-    lease.add(nodes)
     out._cypher_cache_lease = lease
     return out
 
@@ -1267,6 +1246,14 @@ def hits_sql_oracle(edges_sql: str, iterations: int = 5,
               f"round(auth, {round_to}) AS authority FROM s{iterations}")
 
 
+def _md5_sample(edges: DataFrame, n: int) -> DataFrame:
+    """The first ``n`` endpoints of ``edges`` in md5 order of the id."""
+    return (edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
+            .dropDuplicates(["node"])
+            .orderBy(F.md5(F.col("node").cast("string"))).limit(n))
+
+
 def betweenness(edges: DataFrame, sources: DataFrame | None = None,
                 n_sources: int = 16, max_depth: int = 10,
                 src_col: str = "src", dst_col: str = "dst",
@@ -1286,10 +1273,12 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     Two DataFrame loop phases, all shuffles keyed on (source, node) or
     join keys — pre-bucketed edge tables make every round exchange-free:
 
-    - FORWARD (level-synchronous, all sources simultaneously): per level
-      one join frontier->edges, one (s, v) aggregation summing path
-      counts sigma, one anti-join against the visited set.  Each level is
-      localCheckpoint-materialized because the backward pass re-reads it.
+    - FORWARD (level-synchronous, all sources simultaneously,
+      :func:`_level_bfs`): per level one join frontier->edges, one
+      (s, node) aggregation summing path counts sigma, one anti-join
+      against the visited set -- the lazy union of the levels.  Each
+      level is localCheckpoint-materialized because the backward pass
+      re-reads it.
     - BACKWARD (Brandes dependency accumulation, deepest level first):
       per level one join level_d -> edges -> level_{d+1} computing
       delta(v) = sum_w sigma_v / sigma_w * (1 + delta_w), then a left
@@ -1304,66 +1293,48 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
         edges.select(F.col(src_col).alias("src"),
                      F.col(dst_col).alias("dst")))
     if sources is None:
-        nodes = (edges.select(F.col("src").alias("node"))
-                 .union(edges.select(F.col("dst").alias("node")))
-                 .dropDuplicates(["node"]))
-        sources = (nodes.orderBy(F.md5(F.col("node").cast("string")))
-                   .limit(n_sources))
-    srcs = sources.select(F.col(node_col).alias("v")).dropDuplicates(["v"])
+        sources = _md5_sample(edges, n_sources)
+    srcs = sources.select(F.col(node_col).alias("node")) \
+        .dropDuplicates(["node"])
 
-    # ---- forward: per-level (s, v, sigma) frames ----------------------
-    level, _ = layout.materialize(
-        srcs.select(F.col("v").alias("s"), "v",
-                    F.lit(1).cast("long").alias("sigma")))
-    levels = [level]
-    visited = level.select("s", "v")
-    for _d in range(1, max_depth + 1):
-        nxt = (level.join(edges, level["v"] == edges["src"])
-               .select("s", F.col("dst").alias("v"), "sigma")
-               .groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
-               .join(visited, ["s", "v"], "left_anti"))
-        nxt, n_nxt = layout.materialize(nxt)
-        if n_nxt == 0:
-            break
-        levels.append(nxt)
-        visited, _ = layout.materialize(
-            visited.unionByName(nxt.select("s", "v")))
-        level = nxt
+    # ---- forward: per-level (s, node, sigma) frames -------------------
+    _, levels = _level_bfs(
+        edges, srcs.select(F.col("node").alias("s"), "node",
+                           F.lit(1).cast("long").alias("sigma")),
+        max_depth, root="s", sigma=True)
 
     # ---- backward: delta accumulation, deepest level first ------------
-    deltas = []          # (s, v, delta) per level, depth >= 1
+    deltas = []          # (s, node, delta) per level, depth >= 1
     below = levels[-1].select(
-        "s", "v", "sigma", F.lit(0.0).alias("delta"))
+        "s", "node", "sigma", F.lit(0.0).alias("delta"))
     if len(levels) > 1:
-        deltas.append(below.select("s", "v", "delta"))
+        deltas.append(below.select("s", "node", "delta"))
     for d in range(len(levels) - 2, -1, -1):
         cur = levels[d]
         succ = below.select(F.col("s").alias("__s2"),
-                            F.col("v").alias("__w"),
+                            F.col("node").alias("__w"),
                             F.col("sigma").alias("__sw"),
                             F.col("delta").alias("__dw"))
-        contrib = (cur.join(edges, cur["v"] == edges["src"])
-                   .select("s", "v", "sigma", F.col("dst").alias("__dst"))
+        contrib = (cur.join(edges, cur["node"] == edges["src"])
+                   .select("s", "node", "sigma", F.col("dst").alias("__dst"))
                    .join(succ, (F.col("s") == F.col("__s2"))
                          & (F.col("__dst") == F.col("__w")))
-                   .groupBy("s", "v")
+                   .groupBy("s", "node")
                    .agg(F.sum(F.col("sigma") / F.col("__sw")
                               * (F.lit(1.0) + F.col("__dw")))
                         .alias("__contrib")))
         below, _ = layout.materialize(
-            cur.join(contrib, ["s", "v"], "left_outer")
-            .select("s", "v", "sigma",
+            cur.join(contrib, ["s", "node"], "left_outer")
+            .select("s", "node", "sigma",
                     F.coalesce("__contrib", F.lit(0.0)).alias("delta")))
         if d >= 1:
-            deltas.append(below.select("s", "v", "delta"))
+            deltas.append(below.select("s", "node", "delta"))
     if not deltas:
-        return srcs.select(F.col("v").alias("node")).limit(0) \
-            .withColumn("betweenness", F.lit(0.0))
+        return srcs.limit(0).withColumn("betweenness", F.lit(0.0))
     alld = deltas[0]
     for dd in deltas[1:]:
         alld = alld.unionByName(dd)
-    return (alld.groupBy(F.col("v").alias("node"))
-            .agg(F.sum("delta").alias("betweenness")))
+    return alld.groupBy("node").agg(F.sum("delta").alias("betweenness"))
 
 
 def betweenness_sql_oracle(edges_sql: str, sources_sql: str,
@@ -1429,10 +1400,11 @@ def closeness_centrality(edges: DataFrame, sources: DataFrame | None = None,
     by md5 order of the node id -- the same engine-reproducible sampling
     rule as :func:`betweenness`.
 
-    Level-synchronous multi-root BFS carrying the root in the key: per
-    level ONE join frontier->edges, ONE (root, node) dedup aggregation,
-    ONE anti-join against the visited set -- every shuffle keyed on node
-    ids, so bucketed edge tables make levels exchange-free.  State is
+    Level-synchronous multi-root BFS (:func:`_level_bfs`) carrying the
+    root in the key: per level ONE join frontier->edges, ONE (root, node)
+    dedup aggregation, ONE anti-join against the visited set -- every
+    shuffle keyed on node ids, so bucketed edge tables make levels
+    exchange-free.  State is
     O(|sources| x reachable) rows, the shortest-path pair-count
     discipline.  reach/total_dist are exact integers; closeness is the
     one float, rounded by the caller if hash-compared.
@@ -1440,30 +1412,12 @@ def closeness_centrality(edges: DataFrame, sources: DataFrame | None = None,
     edges = edges.select(F.col(src_col).alias("src"),
                          F.col(dst_col).alias("dst"))
     if sources is None:
-        nodes = (edges.select(F.col("src").alias("node"))
-                 .unionByName(edges.select(F.col("dst").alias("node")))
-                 .dropDuplicates(["node"]))
-        sources = (nodes
-                   .orderBy(F.md5(F.col("node").cast("string")))
-                   .limit(n_sources))
+        sources = _md5_sample(edges, n_sources)
     roots = (sources.select(F.col(node_col).alias("root"))
              .dropDuplicates(["root"]))
-    visited, _ = layout.materialize(roots.select(
-        "root", F.col("root").alias("node"),
-        F.lit(0).cast("long").alias("dist")))
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        nxt = (frontier.join(edges, frontier["node"] == edges["src"])
-               .select("root", F.col("dst").alias("node"))
-               .dropDuplicates(["root", "node"])
-               .join(visited.select("root", "node"),
-                     ["root", "node"], "left_anti")
-               .withColumn("dist", F.lit(depth).cast("long")))
-        nxt, n_nxt = layout.materialize(nxt)
-        if n_nxt == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
+    visited, _ = _level_bfs(
+        edges, roots.select("root", F.col("root").alias("node")),
+        max_depth, root="root")
     per_root = (visited.groupBy("root")
                 .agg(F.count(F.lit(1)).alias("reach"),
                      F.sum("dist").alias("total_dist")))

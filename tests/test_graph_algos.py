@@ -123,18 +123,76 @@ def test_bfs_sql_oracle_matches(spark):
     assert got == want
 
 
-def test_pagerank_releases_caches(spark):
+_RELEASE_CASES = {
+    "two_cycle": ([("a", "b", 1.0), ("b", "a", 1.0)], None),
+    "empty": ([], None),
+    "all_negative_weights": ([("a", "b", -1.0), ("b", "a", 0.0)], "w"),
+    "personalized": ([("a", "b", 1.0), ("b", "c", 1.0)], "ppr"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RELEASE_CASES))
+def test_pagerank_releases_caches(spark, case):
+    """Every persist of the power iteration is on the result's lease, the
+    early exits (no node, no positive weight) included."""
     import gc
+
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        personalized_pagerank)
+    rows, mode = _RELEASE_CASES[case]
     jsc = spark.sparkContext._jsc.sc()
     gc.collect()
     before = jsc.getPersistentRDDs().size()
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a")], "src string, dst string")
-    out = pagerank(edges, iterations=2)
+    edges = spark.createDataFrame(rows, "src string, dst string, w double")
+    if mode == "ppr":
+        srcs = spark.createDataFrame([("a",)], "node string")
+        out = personalized_pagerank(edges, srcs, iterations=2)
+    else:
+        out = pagerank(edges, iterations=2, weight_col=mode)
     out.collect()
     del out
     gc.collect()
     assert jsc.getPersistentRDDs().size() <= before
+
+
+def test_ppr_from_every_node_equals_pagerank(spark):
+    """Teleporting to every node is uniform teleport: the shared power
+    iteration must give pagerank's ranks, dangling mass included (d has
+    no out-edge)."""
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        personalized_pagerank)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("b", "d")],
+        "src string, dst string")
+    srcs = spark.createDataFrame([(x,) for x in "abcd"], "node string")
+    want = _ranks(pagerank(edges, iterations=4, checkpoint_interval=2))
+    got = _ranks(personalized_pagerank(edges, srcs, iterations=4,
+                                       checkpoint_interval=2))
+    assert got.keys() == want.keys() == set("abcd")
+    for node, rank in want.items():
+        assert got[node] == pytest.approx(rank, abs=1e-9)
+
+
+def test_closeness_agrees_with_bfs_per_root(spark):
+    """closeness and bfs_shortest_paths run the same level BFS: for each
+    root, reach is bfs's row count and total_dist its dist sum (cycle
+    1->2->3->1 with a tail 3->4; node 5 is reachable from no root)."""
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        closeness_centrality)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (5, 1)], "src long, dst long")
+    roots = [1, 2, 3, 4]
+    src = spark.createDataFrame([(r,) for r in roots], "node long")
+    got = {r.node: (r.reach, r.total_dist)
+           for r in closeness_centrality(edges, src, max_depth=3).collect()}
+    want = {}
+    for root in roots:
+        one = spark.createDataFrame([(root,)], "node long")
+        dists = _dists(bfs_shortest_paths(edges, one, max_hops=3))
+        assert 5 not in dists
+        want[root] = (len(dists), sum(dists.values()))
+    assert got == want
+    assert got[1] == (4, 6) and got[4] == (1, 0)
 
 
 # ---------------------------------------------------------------------------

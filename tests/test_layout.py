@@ -89,15 +89,16 @@ def test_materialize_where_counts_matches_in_same_jobs(spark):
     assert jobs_where == jobs_all > 0
 
 
-_GUARDED = ["localCheckpoint(eager=True)", "toRdd().count()",
+_GUARDED = ["localCheckpoint(", "toRdd().count()",
             "internalCreateDataFrame", "os.environ",
             "64 << 20", "150_000", "50_000"]
 
 
 def test_layout_is_the_only_owner():
-    """Checkpoint+count, the stats sever, env-var knobs and the numeric
-    gate thresholds live in layout.py only, so new algorithms reuse them
-    instead of growing another copy."""
+    """Every localCheckpoint (eager or lazy), checkpoint+count, the stats
+    sever, env-var knobs and the numeric gate thresholds live in
+    layout.py only, so new algorithms reuse them instead of growing
+    another copy."""
     pkg = pathlib.Path(layout.__file__).parent.parent
     files = sorted((pkg / "functions").glob("*.py"))
     files.append(pkg / "plans" / "shortest.py")
