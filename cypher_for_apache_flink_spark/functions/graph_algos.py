@@ -14,19 +14,25 @@ Scale design:
    makes the join exchange-free on a real cluster.
  - Two loops are shared: :func:`_power_iteration` runs pagerank and
    personalized_pagerank, :func:`_level_bfs` runs bfs_shortest_paths,
-   closeness_centrality and the forward phase of betweenness.
- - Lineage is truncated every few supersteps with
-   :func:`layout.materialize`, the one localCheckpoint under functions/ --
-   iterative DataFrame plans otherwise grow exponentially (same recipe as
-   functions/components.py connected components).
- - The dangling-mass term is a 1-row aggregate broadcast into the update
-   expression; node count is computed once up front.
+   closeness_centrality, the forward phase of betweenness and the pivot
+   phase of strongly_connected_components.
+ - Lineage is truncated with :func:`layout.materialize`, the one
+   localCheckpoint under functions/ -- iterative DataFrame plans otherwise
+   grow exponentially (same recipe as functions/components.py connected
+   components).  The power iteration and the level BFS cut EVERY
+   superstep: each reads the previous state twice, so an uncut superstep
+   doubles the plan of the next.
+ - The dangling-mass term rides the superstep's one aggregate (under the
+   null key) and is broadcast into the update expression; node count is
+   computed once up front.
 """
 
 from __future__ import annotations
 
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,7 +63,6 @@ def _mirror(df: DataFrame, ucol: str = "u", vcol: str = "v",
 
 def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
              src_col: str = "src", dst_col: str = "dst",
-             checkpoint_interval: int = 4,
              weight_col: str | None = None) -> DataFrame:
     """PageRank over an edge DataFrame; returns (node, rank).
 
@@ -73,6 +78,13 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     dropped (treated as absent -- a zero-weight edge transfers nothing
     and must not make its target look non-dangling).  The unweighted
     path is untouched: same expressions, same exchanges, same plan.
+    Edges with a null endpoint are ignored.
+
+    Each superstep is one join of the ranks to the out-edges and one
+    aggregate on dst (see :func:`_power_iteration`).  The ranks are
+    materialized before every superstep but the first: the superstep
+    reads them twice (the join and the dangling mass), so a superstep
+    left uncut doubles the plan -- and the work -- of the next one.
 
     Deterministic given the edge set (float summation order aside) --
     verified against an unrolled recursive-CTE SQL oracle at 6 decimal
@@ -84,13 +96,11 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     edges = edges.select(*cols)
     if weight_col is not None:
         edges = edges.where(F.col("w") > 0)
-    return _power_iteration(edges, None, iterations, damping,
-                            checkpoint_interval)
+    return _power_iteration(edges, None, iterations, damping)
 
 
 def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
-                     iterations: int, damping: float,
-                     checkpoint_interval: int) -> DataFrame:
+                     iterations: int, damping: float) -> DataFrame:
     """The one power-iteration loop behind :func:`pagerank` (``srcs`` is
     None: uniform teleport 1/N) and :func:`personalized_pagerank`
     (``srcs`` is the distinct (node) teleport set: 1/|S| on each source,
@@ -117,7 +127,9 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
     # is skipped entirely — unconditionally pinning was a measured
     # +102% shuffle / +580% cpu regression there (BENCH_DIFF_r08.md,
     # layout.pin_parts docstring).
-    edges = lease.add(edges.persist())
+    # a null id would collide with the dangling sink key (see out_edges)
+    edges = lease.add(edges.where(F.col("src").isNotNull()
+                                  & F.col("dst").isNotNull()).persist())
     spark = edges.sparkSession
     nparts = layout.pin_parts(spark, data=edges)
     if nparts is None:
@@ -150,8 +162,9 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
                  .select("node", F.when(F.col("__s").isNotNull(),
                                         F.lit(1.0 / n_src))
                          .otherwise(F.lit(0.0)).alias("tele")))
-    # Cached: read every superstep (left join target + dangling scan).  The
-    # count is a deliberate single action: it materializes the cache AND
+    # Cached: read every superstep (the zero row of every node in the
+    # superstep aggregate).  The count is a deliberate single action: it
+    # materializes the cache AND
     # yields N for the teleport term (an iterative algorithm runs a job per
     # superstep anyway — this is not a hidden extra).
     nodes = lease.add(nodes.cache())
@@ -164,27 +177,33 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
         .groupBy("src").agg(
             (F.sum("w") if weighted else F.count(F.lit(1))).alias("deg"))
     # (src, dst, deg) is loop-invariant; persist so each superstep reads a
-    # materialized table instead of re-running scan+join+agg.  Same for the
-    # set of nodes WITH out-edges — the per-superstep dangling anti-join
-    # would otherwise re-aggregate the raw edge scan every iteration.
-    # deg is bounded by the counted node set; when that is comfortably
-    # broadcast material, hint it so materializing out_edges is a narrow
-    # map over the edge cache instead of a sort-merge that re-shuffles
-    # every edge once more (measured at sf0.1: the SMJ exchange doubled
-    # the query's shuffle bytes, 48.8 -> 102.1 MB).  Large graphs (node
+    # materialized table instead of re-running scan+join+agg.  Each
+    # DANGLING node (no out-edge) gets one sink row (node, null, deg 1):
+    # it sends its whole rank to the null key, so the superstep's one
+    # aggregate also yields the dangling mass -- no per-superstep
+    # anti-join and no second aggregate.  deg is bounded by the counted
+    # node set; when that is comfortably broadcast material, hint it so
+    # materializing out_edges is a narrow map over the edge cache instead
+    # of a sort-merge that re-shuffles every edge once more (measured at
+    # sf0.1: the SMJ exchange doubled the query's shuffle bytes, 48.8 ->
+    # 102.1 MB).  Large graphs (node
     # set over the gate) keep the shuffled join — deg is O(|V|) there,
     # not broadcast material.
     bcast_nodes = layout.fits_broadcast(n)
     deg_side = F.broadcast(deg) if bcast_nodes else deg
-    out_edges = lease.add(
-        layout.repart(edges, nparts, "src").join(deg_side, "src").persist())
-    out_srcs = lease.add(deg.select(F.col("src").alias("node")).persist())
+    out_edges = layout.repart(edges, nparts, "src").join(deg_side, "src")
+    typed = {f.name: f.dataType for f in out_edges.schema.fields}
+    sink = (nodes.join(deg_side.withColumnRenamed("src", "node"), "node",
+                       "left_anti")
+            .select(F.col("node").alias("src"),
+                    F.lit(None).cast(typed["dst"]).alias("dst"),
+                    *([F.lit(1.0).alias("w")] if weighted else []),
+                    F.lit(1).cast(typed["deg"]).alias("deg")))
+    out_edges = lease.add(out_edges.unionByName(sink).persist())
     if nparts is None:
-        # same row counts as the cached edge/node sets -- reuse those
-        # counts instead of materializing two more counting jobs
-        out_edges = layout.scan_coalesce(out_edges, n_edges)
-        out_srcs = layout.scan_coalesce(out_srcs, n)
+        out_edges = layout.scan_coalesce(out_edges, n_edges + n)
 
+    tele = [] if srcs is None else ["tele"]
     if srcs is None:
         ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
         base = F.lit((1.0 - damping) / n)
@@ -195,6 +214,11 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
         share = F.col("m") * F.col("tele")
     transfer = (F.col("rank") * F.col("w") / F.col("deg") if weighted
                 else F.col("rank") / F.col("deg"))
+    # every node enters the aggregate with a zero contribution (and its
+    # teleport weight), so the aggregate has a row per node and the new
+    # ranks need no join back to the node set
+    zeros = nodes.select(F.col("node").alias("dst"),
+                         F.lit(0.0).alias("contrib"), *tele)
     # With the caches alive, Catalyst's growing join-output estimates
     # flip the per-superstep contribs join to sort-merge, and under AQE
     # the out_edges exchange is MATERIALIZED before the runtime
@@ -204,55 +228,60 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
     # node-count gate as deg, so the hot join streams the cache with no
     # exchange.  Large graphs keep the node-id-keyed shuffle.
     for i in range(iterations):
+        if i:
+            # the superstep reads ranks twice (through the join and the
+            # dangling mass): cut it, or every superstep doubles the plan
+            ranks, _ = layout.materialize(ranks)
         rside = ranks.withColumnRenamed("node", "src")
         rside = (F.broadcast(rside) if bcast_nodes
                  else layout.repart(rside, nparts, "src"))
-        contribs = (layout.repart(out_edges.join(rside, "src"), nparts,
-                                  "dst")
+        sent = out_edges.join(rside, "src").select(
+            "dst", transfer.alias("contrib"),
+            *[F.lit(0.0).alias(c) for c in tele])
+        contribs = (layout.repart(sent.unionByName(zeros), nparts, "dst")
                     .groupBy("dst")
-                    .agg(F.sum(transfer).alias("contrib"))
-                    .withColumnRenamed("dst", "node"))
-        dangling = (ranks.join(out_srcs, "node", "left_anti")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
-                         .alias("m")))
-        ranks = (nodes
-                 .join(contribs, "node", "left_outer")
-                 .crossJoin(F.broadcast(dangling))
-                 .select("node",
+                    .agg(F.sum("contrib").alias("contrib"),
+                         *[F.sum(c).alias(c) for c in tele]))
+        dangling = contribs.where(F.col("dst").isNull()) \
+            .select(F.col("contrib").alias("m"))
+        ranks = (contribs.where(F.col("dst").isNotNull())
+                 .join(F.broadcast(dangling), how="left_outer")
+                 .select(F.col("dst").alias("node"),
                          (base + F.lit(damping)
-                          * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                             + share)).alias("rank")))
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
-            ranks, _ = layout.materialize(ranks)
+                          * (F.col("contrib")
+                             + F.coalesce(share, F.lit(0.0)))).alias("rank")))
     return _leased(ranks.select("node", F.col("rank").alias("rank")))
 
 
 def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                        max_hops: int = 10, src_col: str = "src",
-                       dst_col: str = "dst", node_col: str = "node",
-                       checkpoint_interval: int = 4) -> DataFrame:
+                       dst_col: str = "dst", node_col: str = "node"
+                       ) -> DataFrame:
     """Unweighted single/multi-source shortest path lengths; returns
     (node, dist) for every node reachable from ``sources`` within
     ``max_hops`` (sources themselves at dist 0).
 
-    Frontier BFS as a DataFrame loop: per hop, one join frontier-to-edges
-    and one anti-join against the visited set -- both shuffles keyed on
-    node ids, so pre-bucketing the edge table makes the expansion
-    exchange-free on a cluster.  The visited set is the only growing state
-    (one row per reached node).  The reference has no path operator at all
-    (SURVEY §2.3 negative space: CTPath exists in the type lattice but no
-    operator produces it); this is the extension users reached for GraphX
-    Pregel for.
+    Frontier BFS as a DataFrame loop (:func:`_level_bfs`): per hop, one
+    join frontier-to-edges and one aggregate over the new rows and the
+    visited set -- both keyed on node ids, so pre-bucketing the edge
+    table makes the expansion exchange-free on a cluster.  The visited
+    set is the only state (one row per reached node), materialized every
+    hop: the next hop reads it twice, so an uncut hop would be recomputed
+    by every later one.  The same job counts the new level; an empty
+    level ends the loop before ``max_hops``.  The reference has no path
+    operator at all (SURVEY §2.3 negative space: CTPath exists in the
+    type lattice but no operator produces it); this is the extension
+    users reached for GraphX Pregel for.
     """
     return _level_bfs(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
         sources.select(F.col(node_col).alias("node")).dropDuplicates(["node"]),
-        max_hops, checkpoint_interval)[0]
+        max_hops)[0]
 
 
 def _level_bfs(edges: DataFrame, seeds: DataFrame, max_hops: int,
-               checkpoint_interval: int = 1, root: str | None = None,
-               sigma: bool = False) -> tuple[DataFrame, list[DataFrame]]:
+               root: str | None = None, sigma: bool = False,
+               limit: int | None = None) -> tuple[DataFrame, list[DataFrame]]:
     """The one level-synchronous BFS loop behind :func:`bfs_shortest_paths`,
     :func:`closeness_centrality` and the forward phase of
     :func:`betweenness`.
@@ -260,36 +289,59 @@ def _level_bfs(edges: DataFrame, seeds: DataFrame, max_hops: int,
     ``edges`` is (src, dst).  ``seeds`` holds the distinct level-0 rows:
     (node), or (root, node) when ``root`` names a search key column (one
     BFS per root, all run together), plus a long ``sigma`` column when
-    ``sigma`` is set.  Per hop: ONE join frontier->edges, ONE dedup on
-    the key -- or, with ``sigma``, one sum of the shortest-path counts --
-    and ONE anti-join against the visited set; every row of a level gets
-    a long ``dist``.  Every ``checkpoint_interval`` hops and at
-    ``max_hops`` the level is materialized, which truncates lineage AND
-    decides termination in one job: an empty level ends the loop.
+    ``sigma`` is set.  When ``edges`` carries the ``root`` column too, a
+    search follows only its own root's edges (SCC runs its forward and
+    backward reachability as two such roots).
 
-    Returns ``(visited, levels)``: ``levels[d]`` is the level at distance
-    d and ``visited`` is their lazy union -- the levels are the only
-    state, no visited set is checkpointed."""
+    The state is ONE frame of every row reached so far, with its long
+    ``dist`` and a ``__new`` flag on the last level.  Per hop: ONE join
+    of the flagged level to the edges and ONE aggregate on the key over
+    the new rows and the old state, which deduplicates, drops rows
+    already reached (their old row wins: ``__new`` is false) and, with
+    ``sigma``, sums the shortest-path counts of the new rows.  The state
+    is materialized every hop, since the next hop reads it twice (the
+    level join and the aggregate); the same job counts the new level,
+    and an empty level ends the loop -- as does reaching ``limit`` rows,
+    the most the search can reach, which saves the empty hop.  Every hop
+    has the same plan, so its generated code is compiled once per
+    search, not once per hop.
+
+    Returns ``(visited, levels)``: ``visited`` is the final state (keys,
+    carried columns, dist) and ``levels[d]`` its rows at distance d."""
     keys = ["node"] if root is None else [root, "node"]
     carry = ["sigma"] if sigma else []
-    level, _ = layout.materialize(
-        seeds.withColumn("dist", F.lit(0).cast("long")))
-    visited, levels = level, [level]
-    for hop in range(1, max_hops + 1):
-        step = (level.join(edges, level["node"] == edges["src"])
-                .select(*keys[:-1], F.col("dst").alias("node"), *carry))
-        step = (step.groupBy(*keys).agg(F.sum("sigma").alias("sigma"))
-                if sigma else step.dropDuplicates(keys))
-        nxt = (step.join(visited.select(*keys), keys, "left_anti")
-               .withColumn("dist", F.lit(hop).cast("long")))
-        if hop % checkpoint_interval == 0 or hop == max_hops:
-            nxt, n_nxt = layout.materialize(nxt)
-            if n_nxt == 0:
-                break
-        visited = visited.unionByName(nxt)
-        levels.append(nxt)
-        level = nxt
-    return visited, levels
+    new = F.col("__new")
+    state, n_seen = layout.materialize(
+        seeds.select(*keys, *carry, F.lit(0).cast("long").alias("dist"),
+                     F.lit(True).alias("__new")))
+    depth = 0
+    for _ in range(max_hops):
+        level = state.where(new)
+        on = level["node"] == edges["src"]
+        if root in edges.columns:
+            on = on & (level[root] == edges[root])
+        step = level.join(edges, on).select(
+            *[level[k] for k in keys[:-1]], F.col("dst").alias("node"),
+            *carry, (level["dist"] + 1).alias("dist"),
+            F.lit(True).alias("__new"))
+        state, n_new = layout.materialize(
+            step.unionByName(state.select(*keys, *carry, "dist",
+                                          F.lit(False).alias("__new")))
+            .groupBy(*keys)
+            .agg(*[F.coalesce(F.sum(F.when(~new, F.col(c))), F.sum(c))
+                   .alias(c) for c in carry],
+                 F.min("dist").alias("dist"),
+                 F.bool_and("__new").alias("__new")),
+            where=new)
+        if n_new == 0:
+            break
+        depth += 1
+        n_seen += n_new
+        if limit is not None and n_seen >= limit:
+            break
+    visited = state.drop("__new")
+    return visited, [visited.where(F.col("dist") == d)
+                     for d in range(depth + 1)]
 
 
 def weighted_shortest_paths(edges: DataFrame, sources: DataFrame,
@@ -941,8 +993,7 @@ WHERE shared / (da.deg + db.deg - shared) >= {threshold}"""
 def personalized_pagerank(edges: DataFrame, sources: DataFrame,
                           iterations: int = 10, damping: float = 0.85,
                           src_col: str = "src", dst_col: str = "dst",
-                          node_col: str = "node",
-                          checkpoint_interval: int = 4) -> DataFrame:
+                          node_col: str = "node") -> DataFrame:
     """Personalized PageRank: teleport (and dangling mass) land only on
     the ``sources`` set, uniformly — random walk with restart, the
     standard graph-recommendation primitive.  Returns (node, rank).
@@ -954,13 +1005,14 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
     as :func:`pagerank` -- :func:`_power_iteration`, with the sources as
     the teleport set -- so it shares pagerank's pin and broadcast gates,
     scan coalescing and cache lease; per-superstep shuffles key on node
-    ids.
+    ids.  Like pagerank it materializes the ranks before every superstep
+    but the first, since each superstep reads them twice.
     """
-    srcs = sources.select(F.col(node_col).alias("node")) \
-        .dropDuplicates(["node"])
+    srcs = (sources.select(F.col(node_col).alias("node"))
+            .where(F.col("node").isNotNull()).dropDuplicates(["node"]))
     return _power_iteration(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-        srcs, iterations, damping, checkpoint_interval)
+        srcs, iterations, damping)
 
 
 def personalized_pagerank_sql_oracle(edges_sql: str, sources_sql: str,
@@ -1247,7 +1299,8 @@ def hits_sql_oracle(edges_sql: str, iterations: int = 5,
 
 
 def _md5_sample(edges: DataFrame, n: int) -> DataFrame:
-    """The first ``n`` endpoints of ``edges`` in md5 order of the id."""
+    """The first ``n`` endpoints of ``edges`` in md5 order of the id, as
+    a distinct (node) frame."""
     return (edges.select(F.col("src").alias("node"))
             .union(edges.select(F.col("dst").alias("node")))
             .dropDuplicates(["node"])
@@ -1274,11 +1327,11 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     join keys — pre-bucketed edge tables make every round exchange-free:
 
     - FORWARD (level-synchronous, all sources simultaneously,
-      :func:`_level_bfs`): per level one join frontier->edges, one
-      (s, node) aggregation summing path counts sigma, one anti-join
-      against the visited set -- the lazy union of the levels.  Each
-      level is localCheckpoint-materialized because the backward pass
-      re-reads it.
+      :func:`_level_bfs`): per level one join frontier->edges and one
+      (s, node) aggregate over the new rows and the visited state that
+      sums the new rows' path counts sigma.  The visited state is
+      materialized every level; the backward pass reads each level as
+      a filter of the final state.
     - BACKWARD (Brandes dependency accumulation, deepest level first):
       per level one join level_d -> edges -> level_{d+1} computing
       delta(v) = sum_w sigma_v / sigma_w * (1 + delta_w), then a left
@@ -1292,10 +1345,9 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     edges, _ = layout.materialize(
         edges.select(F.col(src_col).alias("src"),
                      F.col(dst_col).alias("dst")))
-    if sources is None:
-        sources = _md5_sample(edges, n_sources)
-    srcs = sources.select(F.col(node_col).alias("node")) \
-        .dropDuplicates(["node"])
+    srcs = (_md5_sample(edges, n_sources) if sources is None
+            else sources.select(F.col(node_col).alias("node"))
+            .dropDuplicates(["node"]))
 
     # ---- forward: per-level (s, node, sigma) frames -------------------
     _, levels = _level_bfs(
@@ -1401,8 +1453,8 @@ def closeness_centrality(edges: DataFrame, sources: DataFrame | None = None,
     rule as :func:`betweenness`.
 
     Level-synchronous multi-root BFS (:func:`_level_bfs`) carrying the
-    root in the key: per level ONE join frontier->edges, ONE (root, node)
-    dedup aggregation, ONE anti-join against the visited set -- every
+    root in the key: per level ONE join frontier->edges and ONE (root,
+    node) aggregate over the new rows and the visited state -- every
     shuffle keyed on node ids, so bucketed edge tables make levels
     exchange-free.  State is
     O(|sources| x reachable) rows, the shortest-path pair-count
@@ -1411,10 +1463,9 @@ def closeness_centrality(edges: DataFrame, sources: DataFrame | None = None,
     """
     edges = edges.select(F.col(src_col).alias("src"),
                          F.col(dst_col).alias("dst"))
-    if sources is None:
-        sources = _md5_sample(edges, n_sources)
-    roots = (sources.select(F.col(node_col).alias("root"))
-             .dropDuplicates(["root"]))
+    roots = (_md5_sample(edges, n_sources) if sources is None
+             else sources.select(F.col(node_col).alias("node"))
+             .dropDuplicates(["node"])).withColumnRenamed("node", "root")
     visited, _ = _level_bfs(
         edges, roots.select("root", F.col("root").alias("node")),
         max_depth, root="root")
@@ -1463,134 +1514,146 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
     (node, component) where component is the smallest node id in the
     node's SCC.
 
-    The coloring / FW-BW-style algorithm (Orzan 2004; Slota et al. 2014)
-    as a pure DataFrame loop:
+    Multistep (Slota, Rajamanickam and Madduri, "BFS and Coloring-based
+    Parallel Algorithms for Strongly Connected Components", IPDPS 2014)
+    as DataFrame loops over the ARCS: every distinct edge twice, forward
+    (dir 0) and reversed (dir 1), so one join follows both directions.
 
-    1. FORWARD min-label fixpoint on the unassigned subgraph:
-       fwd(v) = min id over nodes that can reach v.  Propagated with an
-       improvements-only frontier (same shrinking-worklist shape as
-       :func:`weighted_shortest_paths`) -- each round ONE join
-       frontier->edges, ONE min aggregation, ONE improvement anti-join,
-       all keyed on node ids.
-    2. BACKWARD fixpoint on the REVERSED edges: bwd(v) = min id over
-       nodes v can reach.
-    3. v is assigned component fwd(v) exactly when fwd(v) == bwd(v)
-       (m reaches v and v reaches m => v is in SCC(m)); everything else
-       stays for the next outer round on the shrunken subgraph.
+    1. TRIM to a fixpoint.  A node without an in-edge or without an
+       out-edge inside the remaining subgraph is its own SCC.  Each round
+       is ONE degree aggregate over the arcs between the surviving
+       nodes, materialized with the survivor count in the same job; the
+       trim ends the first round that removes nothing.  Singletons, DAG
+       fringes and tails leave here -- a chain in half its length of
+       rounds.
+    2. PIVOT FW-BW.  The survivor with the largest in-degree x out-degree
+       (smallest id on ties) is the pivot.  ONE level BFS
+       (:func:`_level_bfs`, one root per direction) runs its forward and
+       backward reachability together; SCC(pivot) is the set reached both
+       ways, labelled with its smallest id.  The BFS depth is the pivot's
+       eccentricity, not a cycle length, so a giant SCC costs a handful
+       of levels.
+    3. COLORING (Orzan 2004) on what is left: forward and backward
+       min-label fixpoints (:func:`_min_label_fixpoint`) over the
+       leftover subgraph, run as two concurrent driver threads.  v is
+       assigned fwd(v) exactly when fwd(v) == bwd(v) (m reaches v and v
+       reaches m => v is in SCC(m)); the rest stays for the next outer
+       round on the shrunken subgraph.  Adversarial chains of nested
+       SCCs cost one outer round each -- the known worst case of every
+       label-based SCC algorithm.
 
-    Singleton-heavy DAG regions assign in one round (fwd == bwd == self
-    unless a cycle exists); adversarial chains of nested SCCs cost one
-    outer round each -- the known worst case of every label-based SCC
-    algorithm, which is why ``max_rounds`` is a budget with a warning,
-    not silence, on exhaustion.
+    Budgets -- each warns when exhausted, never silent:
 
-    ``fixpoint_iters`` bounds min-label propagation distance: a label
-    crosses one edge per iteration, so the budget must be at least the
-    longest cycle length (inherent to min-label SCC -- only the true
-    minimum improves labels in a cycle's descending alignment, so
-    propagation there is one hop per round and no doubling trick can
-    shortcut it; see the fixpoint comment).  Unused budget costs
-    nothing: the loop exits the first round nothing improves -- which
-    is why the default is a generous 256 (round 10, ADVICE r9: the old
-    64 silently mis-split cycles longer than the budget).
+    - ``max_rounds`` bounds the coloring's outer rounds; nodes still
+      unassigned after it come back as singleton placeholders.
+    - ``fixpoint_iters`` bounds propagation distance: the pivot BFS may
+      run that many levels that reach new nodes, and each coloring
+      fixpoint that many label-improving iterations.  A label crosses
+      one edge per iteration, so the coloring needs at least the longest
+      leftover cycle length; a BFS level never needs more than that.
+      Unused budget costs nothing: every loop exits the first round that
+      finds nothing new -- which is why the default is a generous 256
+      (round 10, ADVICE r9: the old 64 silently mis-split cycles longer
+      than the budget).
 
-    UNCONVERGED HANDLING (round 10, ADVICE r9 high): when a fixpoint
-    exhausts ``fixpoint_iters`` with improvements still pending, its
-    labels are under-propagated and the fwd==bwd test would carve a
-    PARTIAL SCC out of the remaining subgraph -- the next outer round
-    would then see the cycle broken by the removed members and assign
-    the leftovers as wrong singletons.  So an unconverged round assigns
-    NOTHING: the loop stops, warns, and returns the nodes still
-    unassigned as singleton placeholders (explicitly called unreliable
-    in the warning -- raise ``fixpoint_iters``).  Convergence detection
-    is exact: the budget counts label-improving iterations, and
-    exhaustion is only declared with a non-empty improvement frontier
-    in hand.
+    UNCONVERGED HANDLING (round 10, ADVICE r9 high): a reachability cut
+    off by the budget, or under-propagated labels, would carve a PARTIAL
+    SCC out of the remaining subgraph, and a later round would assign
+    its leftovers as wrong singletons.  So an unconverged phase assigns
+    NOTHING: the run stops, warns, and returns the nodes still unassigned
+    as singleton placeholders (explicitly called unreliable in the
+    warning -- raise ``fixpoint_iters``).  Exhaustion is exact: it is
+    only declared with newly reached nodes or improved labels in hand.
     """
-    edges, _ = layout.materialize(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .dropDuplicates(["src", "dst"]))
-    remaining, n_remaining = layout.materialize(
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates(["node"]))
-    assigned = None
+    arcs = edges.select(F.col(src_col).alias("src"),
+                        F.col(dst_col).alias("dst"))
+    arcs, _ = layout.materialize(
+        arcs.select(F.explode(F.array(
+            F.struct(F.lit(0).alias("dir"), "src", "dst"),
+            F.struct(F.lit(1).alias("dir"), F.col("dst").alias("src"),
+                     F.col("src").alias("dst")))).alias("__a"))
+        .select("__a.*").dropDuplicates(["dir", "src", "dst"]))
+    loop = F.col("src") != F.col("dst")
+    kept = (F.col("dout") > 0) & (F.col("din") > 0)
 
-    def _min_label_fixpoint(nodes: DataFrame,
-                            ed: DataFrame) -> tuple[DataFrame, bool]:
-        # label(v) = min(v, min over edges u->v of label(u)), to fixpoint;
-        # only IMPROVED labels re-enter the frontier.  Pointer doubling
-        # (label-of-label, as connected_components does) is reachability-
-        # sound here too but deliberately NOT used: it only accelerates
-        # cycles whose ids ascend along their edges (in the descending
-        # alignment nothing but the true minimum ever improves a label,
-        # so no chains form to chase), and — measured in this Spark
-        # version — iterating a state frame through a self-join makes
-        # per-iteration driver time DOUBLE past ~15 iterations with
-        # constant plans/stages/tasks, turning a 30-iteration fixpoint
-        # into minutes.  Edge-only propagation stays flat per iteration
-        # indefinitely (same experiment), so a generous budget is cheap:
-        # unused iterations cost nothing after the early exit.
-        labels, _ = layout.materialize(
-            nodes.select("node", F.col("node").alias("label")))
-        frontier = labels
-        applied = 0
-        while True:
-            cand = (frontier.join(ed, frontier["node"] == ed["src"])
-                    .select(F.col("dst").alias("node"),
-                            F.col("label"))
-                    .groupBy("node").agg(F.min("label").alias("label")))
-            # ONE materialization per iteration (round 11): the new
-            # labels and the improvement flag ride the same left join
-            # -- label'(v) = min(label(v), cand(v)) -- so the old
-            # improved-checkpoint + anti-join + union + second
-            # checkpoint (3 eager jobs and 3 shuffles per iteration)
-            # collapses to one severed frame; the frontier and the
-            # convergence probe are cheap filters over its partitions.
-            # the improved-count rides the checkpoint job (round 12,
-            # layout.materialize with a predicate): the isEmpty probe was
-            # a second driver round-trip per fixpoint iteration
-            nxt, n_imp = layout.materialize(
-                labels.join(cand.withColumnRenamed("label", "__c"),
-                            "node", "left")
-                .select("node",
-                        F.least(F.col("label"),
-                                F.coalesce(F.col("__c"), F.col("label")))
-                        .alias("label"),
-                        (F.col("__c") < F.col("label")).alias("__imp")),
-                where=F.col("__imp"), sever=True)
-            improved = nxt.where(F.col("__imp"))
-            if n_imp == 0:
-                return labels, True
-            if applied >= fixpoint_iters:
-                # budget exhausted WITH a non-empty improvement frontier
-                # in hand: the labels are under-propagated
-                return labels, False
-            labels = nxt.select("node", "label")
-            frontier = improved.select("node", "label")
-            applied += 1
+    def _between(a: DataFrame, keep: DataFrame) -> DataFrame:
+        k = keep.select("node")
+        return (a.join(k.withColumnRenamed("node", "src"), "src", "left_semi")
+                .join(k.withColumnRenamed("node", "dst"), "dst", "left_semi"))
 
-    truncated = False
-    for _ in range(max_rounds):
-        sub = (edges.join(remaining.withColumnRenamed("node", "src"),
-                          "src", "left_semi")
-               .join(remaining.withColumnRenamed("node", "dst"),
-                     "dst", "left_semi"))
-        sub, _ = layout.materialize(sub)
+    def _degrees(a: DataFrame) -> DataFrame:
+        # self-loops count for neither side: they never join two nodes
+        return a.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.when(loop & (F.col("dir") == 0), 1)).alias("dout"),
+            F.count(F.when(loop & (F.col("dir") == 1), 1)).alias("din"))
+
+    # ---- 1. trim.  Every node is the src of an arc, so round 1 is also
+    # the node set; each later round restricts the arcs to the last
+    # survivors.  Survivors only shrink, so an unchanged count is the
+    # fixpoint, and the last round's degrees are the trimmed subgraph's.
+    nodes, n_alive = layout.materialize(_degrees(arcs), where=kept)
+    alive = nodes.where(kept)
+    n_prev = None
+    while n_alive and n_alive != n_prev:
+        n_prev = n_alive
+        alive, n_alive = layout.materialize(
+            _degrees(_between(arcs, alive)).where(kept))
+
+    def _singletons(df: DataFrame) -> DataFrame:
+        return df.select("node", F.col("node").alias("component"))
+
+    if n_alive == 0:
+        return _singletons(nodes)
+    sub, _ = layout.materialize(_between(arcs, alive).where(loop))
+
+    # ---- 2. pivot FW-BW: dir 0 follows the edges, dir 1 reverses them
+    pivot = (alive.orderBy(F.desc(F.col("dout") * F.col("din")), "node")
+             .limit(1)
+             .select(F.explode(F.array(F.lit(0), F.lit(1))).alias("dir"),
+                     "node"))
+    reached, levels = _level_bfs(sub, pivot, fixpoint_iters + 1, root="dir",
+                                 limit=2 * n_alive)
+    truncated = len(levels) > fixpoint_iters + 1
+    # one aggregate flags every node: __a survived the trim, __p is in
+    # SCC(pivot) -- reached both ways (never, when the BFS was cut off)
+    flags = (nodes.select("node", F.lit(False).alias("__a"),
+                          F.lit(None).cast("int").alias("dir"))
+             .unionByName(alive.select("node", F.lit(True).alias("__a"),
+                                       F.lit(None).cast("int").alias("dir")))
+             .unionByName(reached.select("node", F.lit(False).alias("__a"),
+                                         "dir")))
+    state, n_remaining = layout.materialize(
+        flags.groupBy("node").agg(
+            F.bool_or("__a").alias("__a"),
+            (F.lit(False) if truncated else F.count("dir") == 2)
+            .alias("__p")),
+        where=F.col("__a") & ~F.col("__p"))
+    parts = [_singletons(state.where(~F.col("__a")))]
+    if not truncated:
+        label = (state.where(F.col("__p")).select("node").orderBy("node")
+                 .limit(1).collect()[0][0])
+        parts.append(state.where(F.col("__p")).select(
+            "node", F.lit(label).cast(nodes.schema["node"].dataType)
+            .alias("component")))
+    remaining = state.where(F.col("__a") & ~F.col("__p")).select("node")
+
+    # ---- 3. coloring on what is left
+    rounds = 0
+    while n_remaining and not truncated and rounds < max_rounds:
+        rounds += 1
+        part, _ = layout.materialize(_between(sub, remaining))
         # the forward and backward fixpoints are INDEPENDENT given the
-        # checkpointed subgraph (both read only `remaining` + `sub`), and
-        # each is a sequential chain of tiny driver-latency-bound jobs --
-        # run them as two concurrent driver threads (guide-style
-        # independent-job overlap, round 11) so one chain's scheduling
-        # gaps back-fill the other's.  Determinism is untouched: each
-        # fixpoint's result is a pure function of its inputs.
-        from concurrent.futures import ThreadPoolExecutor
+        # checkpointed subgraph, and each is a sequential chain of tiny
+        # driver-latency-bound jobs -- run them as two concurrent driver
+        # threads so one chain's scheduling gaps back-fill the other's.
+        # inheritable_thread_target hands the caller's job group and
+        # description to the pool threads.
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fwd_f = pool.submit(_min_label_fixpoint, remaining, sub)
-            bwd_f = pool.submit(
-                _min_label_fixpoint, remaining,
-                sub.select(F.col("dst").alias("src"),
-                           F.col("src").alias("dst")))
+            fwd_f, bwd_f = (
+                pool.submit(inheritable_thread_target(_min_label_fixpoint),
+                            remaining, part.where(F.col("dir") == d),
+                            fixpoint_iters)
+                for d in (0, 1))
             fwd, fwd_ok = fwd_f.result()
             bwd, bwd_ok = bwd_f.result()
         if not (fwd_ok and bwd_ok):
@@ -1600,34 +1663,83 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
             # stop here (see docstring)
             truncated = True
             break
-        both, _ = layout.materialize(
-            fwd.join(bwd.withColumnRenamed("label", "__b"), "node"))
-        done = (both.where(F.col("label") == F.col("__b"))
-                .select("node", F.col("label").alias("component")))
-        assigned = (done if assigned is None
-                    else assigned.unionByName(done))
-        assigned, _ = layout.materialize(assigned)
-        remaining, n_remaining = layout.materialize(
-            both.where(F.col("label") != F.col("__b")).select("node"))
-        if n_remaining == 0:
-            return assigned
+        both, n_remaining = layout.materialize(
+            fwd.join(bwd.withColumnRenamed("label", "__b"), "node"),
+            where=F.col("label") != F.col("__b"))
+        parts.append(both.where(F.col("label") == F.col("__b"))
+                     .select("node", F.col("label").alias("component")))
+        remaining = both.where(F.col("label") != F.col("__b")).select("node")
     if truncated:
         warnings.warn(
-            "strongly_connected_components: min-label fixpoint exhausted "
-            f"fixpoint_iters={fixpoint_iters} with improvements pending -- "
+            "strongly_connected_components: the pivot search or a "
+            f"min-label fixpoint exhausted fixpoint_iters={fixpoint_iters} "
+            "with nodes still being reached or labels still improving -- "
             f"components UNRELIABLE for the {n_remaining} unassigned nodes "
             "(returned as singleton placeholders); the graph has a cycle "
             "longer than the budget, raise fixpoint_iters to at least the "
             "longest cycle length", stacklevel=2)
-    else:
+    elif n_remaining:
         warnings.warn(
             f"strongly_connected_components: {n_remaining} nodes still "
             f"unassigned after max_rounds={max_rounds} outer rounds -- "
             "deeply nested SCC chains need a larger budget; raise "
             "max_rounds", stacklevel=2)
-    leftovers = remaining.select("node", F.col("node").alias("component"))
-    return (leftovers if assigned is None
-            else assigned.unionByName(leftovers))
+    if n_remaining:
+        parts.append(_singletons(remaining))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _min_label_fixpoint(nodes: DataFrame, ed: DataFrame,
+                        fixpoint_iters: int) -> tuple[DataFrame, bool]:
+    """label(v) = min(v, min over edges u->v of label(u)) over ``nodes``
+    and the (src, dst) edges ``ed``, to a fixpoint; returns ``(labels,
+    converged)``.  Only IMPROVED labels re-enter the frontier.
+
+    Pointer doubling (label-of-label, as connected_components does) is
+    reachability-sound here too but deliberately NOT used: it only
+    accelerates cycles whose ids ascend along their edges (in the
+    descending alignment nothing but the true minimum ever improves a
+    label, so no chains form to chase), and -- measured in this Spark
+    version -- iterating a state frame through a self-join makes
+    per-iteration driver time DOUBLE past ~15 iterations with constant
+    plans/stages/tasks, turning a 30-iteration fixpoint into minutes.
+    Edge-only propagation stays flat per iteration indefinitely (same
+    experiment), so a generous budget is cheap: unused iterations cost
+    nothing after the early exit."""
+    labels, _ = layout.materialize(
+        nodes.select("node", F.col("node").alias("label")))
+    frontier = labels
+    applied = 0
+    while True:
+        cand = (frontier.join(ed, frontier["node"] == ed["src"])
+                .select(F.col("dst").alias("node"), F.col("label"))
+                .groupBy("node").agg(F.min("label").alias("label")))
+        # ONE materialization per iteration (round 11): the new labels
+        # and the improvement flag ride the same left join -- label'(v) =
+        # min(label(v), cand(v)) -- and the improved-count rides the
+        # checkpoint job (round 12, layout.materialize with a predicate);
+        # the frontier and the convergence probe are cheap filters over
+        # its partitions.
+        nxt, n_imp = layout.materialize(
+            labels.join(cand.withColumnRenamed("label", "__c"), "node", "left")
+            .select("node",
+                    F.least(F.col("label"),
+                            F.coalesce(F.col("__c"), F.col("label")))
+                    .alias("label"),
+                    (F.col("__c") < F.col("label")).alias("__imp")),
+            where=F.col("__imp"), sever=True)
+        if n_imp == 0:
+            return labels, True
+        if applied >= fixpoint_iters:
+            # budget exhausted WITH a non-empty improvement frontier in
+            # hand: the labels are under-propagated
+            return labels, False
+        labels = nxt.select("node", "label")
+        frontier = nxt.where(F.col("__imp")).select("node", "label")
+        applied += 1
 
 
 def scc_sql_oracle(edges_sql: str) -> str:
@@ -2261,7 +2373,6 @@ def louvain(edges: DataFrame, rounds: int = 16,
         bi = (_mirror(bi)
               .dropDuplicates(["u", "v"])
               .withColumn("w", F.lit(1).cast("long")).persist())
-    from concurrent.futures import ThreadPoolExecutor
     pool = ThreadPoolExecutor(max_workers=1)
     try:
         n_bi_rows = bi.count()
@@ -2366,13 +2477,14 @@ def louvain(edges: DataFrame, rounds: int = 16,
             # (guide-style independent-job overlap): the totals update
             # back-fills cores while the bigger contraction plans and
             # shuffles.  Actions are thread-safe; each future carries
-            # its own plan.
-            ctot_f = pool.submit(
+            # its own plan, and inheritable_thread_target hands it the
+            # caller's job group and description.
+            ctot_f = pool.submit(inheritable_thread_target(
                 lambda c=ctot, b=best: layout.materialize(
                     c.join(small(b), "c", "left")
                     .groupBy(F.coalesce(F.col("__new"), F.col("c"))
                              .alias("c"))
-                    .agg(F.sum("tot").alias("tot")), sever=True)[0])
+                    .agg(F.sum("tot").alias("tot")), sever=True)[0]))
             # the contraction aggregate's hash maps are bounded by the
             # explicit (a, b) repartition: its keys are near-unique, so
             # partition count must track the (shrinking) edge state --

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 # Tests measured >= 2.4s in the round-12 full-suite duration profile (62
-# min total; the 319 ids still listed account for most of it).  They are marked `slow`
+# min total; the 307 ids still listed account for most of it).  They are marked `slow`
 # at collection time and EXCLUDED from the default run (pytest.ini addopts)
 # so that a plain `pytest tests/` finishes inside a CI/driver time budget;
 # run them with `-m slow`, or everything with `-m "slow or not slow"`.

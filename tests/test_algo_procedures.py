@@ -348,19 +348,32 @@ def test_graph_stats_call(algo_session):
 # round 10: scc fixpointIters exposure, typed NULL-argument errors, and the
 # empty-graph tier at the CALL layer (VERDICT r9 #5/#7, ADVICE r9 high)
 
-def test_scc_call_fixpoint_iters_exposed(algo_session):
+def test_scc_call_fixpoint_iters_exposed(spark, algo_session):
     """algo.scc's second argument reaches the library's fixpoint budget:
-    a deliberately tiny budget on the cyclic fixture must surface the
-    round-10 UNRELIABLE warning instead of silently mis-splitting."""
+    a deliberately tiny budget on a directed 8-cycle must surface the
+    round-10 UNRELIABLE warning instead of silently mis-splitting.  The
+    shared fixture's directed edges form a DAG, which the trim phase
+    assigns exactly without spending any propagation budget."""
     import warnings as W
+    nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "id long")
+    rels = spark.createDataFrame(
+        [(100 + i, i, i % 8 + 1) for i in range(1, 9)],
+        "id long, source long, target long")
+    cyc = CypherSession.for_graph(PropertyGraph(
+        {frozenset(["N"]): nodes}, {"LINK": rels}, name="cycfix"))
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        got = rows(algo_session, "CALL algo.scc(8, 1)")
+        got = rows(cyc, "CALL algo.scc(8, 1)")
     assert any("fixpoint_iters" in str(w.message) for w in caught)
-    assert len(got) == 7
+    assert got == [(i, i) for i in range(1, 9)]
     # and a sufficient explicit budget matches the default-call result
-    assert rows(algo_session, "CALL algo.scc(8, 256)") \
-        == rows(algo_session, "CALL algo.scc()")
+    assert rows(cyc, "CALL algo.scc(8, 256)") == rows(cyc, "CALL algo.scc()") \
+        == [(i, 1) for i in range(1, 9)]
+    with W.catch_warnings(record=True) as caught:
+        W.simplefilter("always")
+        dag = rows(algo_session, "CALL algo.scc(8, 1)")
+    assert not [w for w in caught if "strongly_connected" in str(w.message)]
+    assert dag == [(i, i) for i in range(1, 8)]
 
 
 def test_null_argument_is_typed_plan_error(algo_session):

@@ -134,15 +134,18 @@ _RELEASE_CASES = {
 @pytest.mark.parametrize("case", sorted(_RELEASE_CASES))
 def test_pagerank_releases_caches(spark, case):
     """Every persist of the power iteration is on the result's lease, the
-    early exits (no node, no positive weight) included."""
+    early exits (no node, no positive weight) included.  The superstep
+    cut is a local checkpoint, not a persist: Spark's ContextCleaner
+    frees it once the JVM has collected every plan that reads it, so it
+    is not counted as a leak."""
     import gc
 
     from cypher_for_apache_flink_spark.functions.graph_algos import (
         personalized_pagerank)
     rows, mode = _RELEASE_CASES[case]
-    jsc = spark.sparkContext._jsc.sc()
+    jsc = spark.sparkContext._jsc
     gc.collect()
-    before = jsc.getPersistentRDDs().size()
+    before = set(jsc.getPersistentRDDs())
     edges = spark.createDataFrame(rows, "src string, dst string, w double")
     if mode == "ppr":
         srcs = spark.createDataFrame([("a",)], "node string")
@@ -152,22 +155,23 @@ def test_pagerank_releases_caches(spark, case):
     out.collect()
     del out
     gc.collect()
-    assert jsc.getPersistentRDDs().size() <= before
+    leaked = [rid for rid, rdd in jsc.getPersistentRDDs().items()
+              if rid not in before and not rdd.rdd().isLocallyCheckpointed()]
+    assert leaked == []
 
 
 def test_ppr_from_every_node_equals_pagerank(spark):
     """Teleporting to every node is uniform teleport: the shared power
     iteration must give pagerank's ranks, dangling mass included (d has
-    no out-edge)."""
+    no out-edge), through three superstep cuts."""
     from cypher_for_apache_flink_spark.functions.graph_algos import (
         personalized_pagerank)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("b", "d")],
         "src string, dst string")
     srcs = spark.createDataFrame([(x,) for x in "abcd"], "node string")
-    want = _ranks(pagerank(edges, iterations=4, checkpoint_interval=2))
-    got = _ranks(personalized_pagerank(edges, srcs, iterations=4,
-                                       checkpoint_interval=2))
+    want = _ranks(pagerank(edges, iterations=4))
+    got = _ranks(personalized_pagerank(edges, srcs, iterations=4))
     assert got.keys() == want.keys() == set("abcd")
     for node, rank in want.items():
         assert got[node] == pytest.approx(rank, abs=1e-9)
@@ -193,6 +197,69 @@ def test_closeness_agrees_with_bfs_per_root(spark):
         want[root] = (len(dists), sum(dists.values()))
     assert got == want
     assert got[1] == (4, 6) and got[4] == (1, 0)
+
+
+def _flat_plan_len(df):
+    """Optimized-plan length with every number (expression ids, rdd ids,
+    literals) folded to one digit."""
+    import re
+    return len(re.sub(r"\d+", "0",
+                      df._jdf.queryExecution().optimizedPlan().toString()))
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "personalized_pagerank",
+                                  "bfs_shortest_paths"])
+def test_superstep_lineage_stays_flat(spark, algo):
+    """Every superstep is cut, so the returned frame's plan is one
+    superstep deep whatever the iteration or hop count: equal lengths at
+    2, 3 and 6 supersteps fail any cut interval above 1 (a 12-cycle with
+    chords keeps all six BFS levels non-empty)."""
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        personalized_pagerank)
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)],
+        "src long, dst long")
+    one = spark.createDataFrame([(0,)], "node long")
+
+    def run(k):
+        if algo == "pagerank":
+            return pagerank(edges, iterations=k)
+        if algo == "personalized_pagerank":
+            return personalized_pagerank(edges, one, iterations=k)
+        return bfs_shortest_paths(edges, one, max_hops=k)
+
+    base = _flat_plan_len(run(2))
+    assert _flat_plan_len(run(3)) == base
+    assert _flat_plan_len(run(6)) == base
+    if algo == "bfs_shortest_paths":
+        assert max(_dists(run(6)).values()) == 6
+
+
+def test_closeness_default_sampling_with_node_col(spark):
+    """Without ``sources`` the md5 sample is the root set whatever
+    ``node_col`` names (it used to select a missing ``id`` column)."""
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        closeness_centrality)
+    edges = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 17) for i in range(17)], "src long, dst long")
+    got = sorted(map(tuple, closeness_centrality(
+        edges, n_sources=3, max_depth=2, node_col="id").collect()))
+    assert got == sorted(map(tuple, closeness_centrality(
+        edges, n_sources=3, max_depth=2).collect()))
+    assert len(got) == 3
+
+
+def test_betweenness_default_sampling_with_node_col(spark):
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        betweenness)
+    edges = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 17) for i in range(17)]
+        + [(i, (i * 5 + 2) % 17) for i in range(17)], "src long, dst long")
+    got = sorted((r.node, round(r.betweenness, 9)) for r in betweenness(
+        edges, n_sources=3, max_depth=2, node_col="id").collect())
+    want = sorted((r.node, round(r.betweenness, 9)) for r in betweenness(
+        edges, n_sources=3, max_depth=2).collect())
+    assert got == want and got
 
 
 # ---------------------------------------------------------------------------
@@ -964,6 +1031,109 @@ def test_scc_budget_exactly_sufficient_no_warning(spark):
     assert got == [(i, 0) for i in range(n)]
     assert not [w for w in caught
                 if "strongly_connected_components" in str(w.message)]
+
+
+_SCC_PHASE_CASES = {
+    # DAG fringe: every node is trimmed, no search runs
+    "trim_only": ([(1, 2), (2, 3), (1, 3), (3, 4), (5, 3), (4, 6)],
+                  {n: n for n in range(1, 7)}, 0, 0),
+    # one 12-cycle with a chord and a tail: the tail is trimmed, the
+    # pivot's FW-BW takes the rest
+    "pivot": ([(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (11, 20)],
+              {**{n: 0 for n in range(12)}, 20: 20}, 1, 0),
+    # two disjoint cycles: the pivot (smallest id on the degree tie)
+    # takes 0..4, one coloring round takes 10..12
+    "pivot_and_coloring": (
+        [(i, (i + 1) % 5) for i in range(5)]
+        + [(10, 11), (11, 12), (12, 10)],
+        {**{n: 0 for n in range(5)}, **{n: 10 for n in (10, 11, 12)}},
+        1, 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SCC_PHASE_CASES))
+def test_scc_multistep_phases(spark, monkeypatch, case):
+    """Each case stops in exactly one Multistep phase: count the pivot
+    searches and the coloring fixpoints it ran."""
+    import warnings as W
+
+    import cypher_for_apache_flink_spark.functions.graph_algos as ga
+    pairs, want, n_bfs, n_fix = _SCC_PHASE_CASES[case]
+    calls = {"bfs": 0, "fix": 0}
+
+    def spy(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(ga, "_level_bfs", spy("bfs", ga._level_bfs))
+    monkeypatch.setattr(ga, "_min_label_fixpoint",
+                        spy("fix", ga._min_label_fixpoint))
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    with W.catch_warnings(record=True) as caught:
+        W.simplefilter("always")
+        got = {r.node: r.component
+               for r in ga.strongly_connected_components(edges).collect()}
+    assert got == want
+    assert (calls["bfs"], calls["fix"]) == (n_bfs, n_fix)
+    assert not [w for w in caught
+                if "strongly_connected_components" in str(w.message)]
+
+
+def test_scc_empty_and_self_loop_inputs(spark):
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        strongly_connected_components)
+    empty = strongly_connected_components(
+        spark.createDataFrame([], "src long, dst long"))
+    assert empty.columns == ["node", "component"]
+    assert empty.collect() == []
+    # a self-loop joins no two nodes: 1 and 2 stay singletons
+    loops = spark.createDataFrame([(1, 1), (1, 2), (2, 2)],
+                                  "src long, dst long")
+    assert sorted(map(tuple, strongly_connected_components(loops)
+                      .collect())) == [(1, 1), (2, 2)]
+
+
+def _jobs_in_group(spark, run):
+    """(jobs the status store files under a job group set around
+    ``run``, jobs submitted meanwhile)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = f"probe-{id(run)}"
+    first = jsc.dagScheduler().nextJobId()
+    sc.setJobGroup(group, "job group inheritance probe")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    end = jsc.dagScheduler().nextJobId()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), end - first
+
+
+def test_scc_pool_threads_inherit_job_group(spark):
+    """The coloring's fixpoint threads run under the caller's job group
+    (two disjoint cycles: one is left for the coloring)."""
+    from cypher_for_apache_flink_spark.functions.graph_algos import (
+        strongly_connected_components)
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 5) for i in range(5)] + [(10, 11), (11, 12), (12, 10)],
+        "src long, dst long")
+    grouped, total = _jobs_in_group(
+        spark, lambda: strongly_connected_components(edges).collect())
+    assert total > 0 and grouped == total
+
+
+def test_louvain_pool_thread_inherits_job_group(spark):
+    from cypher_for_apache_flink_spark.functions.graph_algos import louvain
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)],
+        "src long, dst long")
+    grouped, total = _jobs_in_group(
+        spark, lambda: louvain(edges, rounds=2).collect())
+    assert total > 0 and grouped == total
 
 
 def test_random_walks_shuffled_regime_matches_broadcast(spark, monkeypatch):
