@@ -280,8 +280,8 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
 
 
 def _level_bfs(edges: DataFrame, seeds: DataFrame, max_hops: int,
-               root: str | None = None, sigma: bool = False,
-               limit: int | None = None) -> tuple[DataFrame, list[DataFrame]]:
+               root: str | None = None, sigma: bool = False
+               ) -> tuple[DataFrame, list[DataFrame]]:
     """The one level-synchronous BFS loop behind :func:`bfs_shortest_paths`,
     :func:`closeness_centrality` and the forward phase of
     :func:`betweenness`.
@@ -301,17 +301,15 @@ def _level_bfs(edges: DataFrame, seeds: DataFrame, max_hops: int,
     ``sigma``, sums the shortest-path counts of the new rows.  The state
     is materialized every hop, since the next hop reads it twice (the
     level join and the aggregate); the same job counts the new level,
-    and an empty level ends the loop -- as does reaching ``limit`` rows,
-    the most the search can reach, which saves the empty hop.  Every hop
-    has the same plan, so its generated code is compiled once per
-    search, not once per hop.
+    and an empty level ends the loop.  Every hop has the same plan, so
+    its generated code is compiled once per search, not once per hop.
 
     Returns ``(visited, levels)``: ``visited`` is the final state (keys,
     carried columns, dist) and ``levels[d]`` its rows at distance d."""
     keys = ["node"] if root is None else [root, "node"]
     carry = ["sigma"] if sigma else []
     new = F.col("__new")
-    state, n_seen = layout.materialize(
+    state, _ = layout.materialize(
         seeds.select(*keys, *carry, F.lit(0).cast("long").alias("dist"),
                      F.lit(True).alias("__new")))
     depth = 0
@@ -336,9 +334,6 @@ def _level_bfs(edges: DataFrame, seeds: DataFrame, max_hops: int,
         if n_new == 0:
             break
         depth += 1
-        n_seen += n_new
-        if limit is not None and n_seen >= limit:
-            break
     visited = state.drop("__new")
     return visited, [visited.where(F.col("dist") == d)
                      for d in range(depth + 1)]
@@ -1531,8 +1526,10 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
        (:func:`_level_bfs`, one root per direction) runs its forward and
        backward reachability together; SCC(pivot) is the set reached both
        ways, labelled with its smallest id.  The BFS depth is the pivot's
-       eccentricity, not a cycle length, so a giant SCC costs a handful
-       of levels.
+       eccentricity, so a giant low-diameter SCC costs a handful of
+       levels.  A search that still reaches nodes after ``fixpoint_iters``
+       levels may be incomplete: it assigns nothing, and every survivor
+       goes to the coloring, as if there were no pivot phase.
     3. COLORING (Orzan 2004) on what is left: forward and backward
        min-label fixpoints (:func:`_min_label_fixpoint`) over the
        leftover subgraph, run as two concurrent driver threads.  v is
@@ -1546,24 +1543,26 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
 
     - ``max_rounds`` bounds the coloring's outer rounds; nodes still
       unassigned after it come back as singleton placeholders.
-    - ``fixpoint_iters`` bounds propagation distance: the pivot BFS may
-      run that many levels that reach new nodes, and each coloring
-      fixpoint that many label-improving iterations.  A label crosses
-      one edge per iteration, so the coloring needs at least the longest
-      leftover cycle length; a BFS level never needs more than that.
-      Unused budget costs nothing: every loop exits the first round that
-      finds nothing new -- which is why the default is a generous 256
-      (round 10, ADVICE r9: the old 64 silently mis-split cycles longer
-      than the budget).
+    - ``fixpoint_iters`` bounds propagation distance: each coloring
+      fixpoint runs at most that many label-improving iterations, and
+      the pivot BFS at most that many levels that reach new nodes.  A
+      label crosses one edge per iteration, so the coloring needs at
+      least the longest leftover cycle length.  The pivot search's depth
+      is the pivot's eccentricity, which can exceed what the coloring
+      needs; a cut-off search only hands its work to the coloring, so
+      it never warns by itself.  Unused budget costs nothing: every loop
+      exits the first round that finds nothing new -- which is why the
+      default is a generous 256 (round 10, ADVICE r9: the old 64
+      silently mis-split cycles longer than the budget).
 
-    UNCONVERGED HANDLING (round 10, ADVICE r9 high): a reachability cut
-    off by the budget, or under-propagated labels, would carve a PARTIAL
-    SCC out of the remaining subgraph, and a later round would assign
-    its leftovers as wrong singletons.  So an unconverged phase assigns
-    NOTHING: the run stops, warns, and returns the nodes still unassigned
-    as singleton placeholders (explicitly called unreliable in the
-    warning -- raise ``fixpoint_iters``).  Exhaustion is exact: it is
-    only declared with newly reached nodes or improved labels in hand.
+    UNCONVERGED HANDLING (round 10, ADVICE r9 high): under-propagated
+    labels would carve a PARTIAL SCC out of the remaining subgraph, and
+    a later round would assign its leftovers as wrong singletons.  So an
+    unconverged coloring assigns NOTHING: the run stops, warns, and
+    returns the nodes still unassigned as singleton placeholders
+    (explicitly called unreliable in the warning -- raise
+    ``fixpoint_iters``).  Exhaustion is exact: it is only declared with
+    improved labels in hand.
     """
     arcs = edges.select(F.col(src_col).alias("src"),
                         F.col(dst_col).alias("dst"))
@@ -1611,25 +1610,25 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
              .limit(1)
              .select(F.explode(F.array(F.lit(0), F.lit(1))).alias("dir"),
                      "node"))
-    reached, levels = _level_bfs(sub, pivot, fixpoint_iters + 1, root="dir",
-                                 limit=2 * n_alive)
-    truncated = len(levels) > fixpoint_iters + 1
+    reached, levels = _level_bfs(sub, pivot, fixpoint_iters + 1, root="dir")
+    # a search still reaching nodes past the budget may be incomplete: it
+    # assigns nothing, and the coloring takes every survivor
+    found = len(levels) <= fixpoint_iters + 1
     # one aggregate flags every node: __a survived the trim, __p is in
-    # SCC(pivot) -- reached both ways (never, when the BFS was cut off)
+    # SCC(pivot) -- reached both ways by a complete search
     flags = (nodes.select("node", F.lit(False).alias("__a"),
                           F.lit(None).cast("int").alias("dir"))
              .unionByName(alive.select("node", F.lit(True).alias("__a"),
-                                       F.lit(None).cast("int").alias("dir")))
-             .unionByName(reached.select("node", F.lit(False).alias("__a"),
-                                         "dir")))
+                                       F.lit(None).cast("int").alias("dir"))))
+    if found:
+        flags = flags.unionByName(
+            reached.select("node", F.lit(False).alias("__a"), "dir"))
     state, n_remaining = layout.materialize(
-        flags.groupBy("node").agg(
-            F.bool_or("__a").alias("__a"),
-            (F.lit(False) if truncated else F.count("dir") == 2)
-            .alias("__p")),
+        flags.groupBy("node").agg(F.bool_or("__a").alias("__a"),
+                                  (F.count("dir") == 2).alias("__p")),
         where=F.col("__a") & ~F.col("__p"))
     parts = [_singletons(state.where(~F.col("__a")))]
-    if not truncated:
+    if found:
         label = (state.where(F.col("__p")).select("node").orderBy("node")
                  .limit(1).collect()[0][0])
         parts.append(state.where(F.col("__p")).select(
@@ -1638,7 +1637,7 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
     remaining = state.where(F.col("__a") & ~F.col("__p")).select("node")
 
     # ---- 3. coloring on what is left
-    rounds = 0
+    rounds, truncated = 0, False
     while n_remaining and not truncated and rounds < max_rounds:
         rounds += 1
         part, _ = layout.materialize(_between(sub, remaining))
@@ -1671,9 +1670,8 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
         remaining = both.where(F.col("label") != F.col("__b")).select("node")
     if truncated:
         warnings.warn(
-            "strongly_connected_components: the pivot search or a "
-            f"min-label fixpoint exhausted fixpoint_iters={fixpoint_iters} "
-            "with nodes still being reached or labels still improving -- "
+            "strongly_connected_components: min-label fixpoint exhausted "
+            f"fixpoint_iters={fixpoint_iters} with improvements pending -- "
             f"components UNRELIABLE for the {n_remaining} unassigned nodes "
             "(returned as singleton placeholders); the graph has a cycle "
             "longer than the budget, raise fixpoint_iters to at least the "
