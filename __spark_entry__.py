@@ -423,7 +423,7 @@ def _q_near_dup_incremental(spark, sf_dir):
     write_minhash_index(docs.where(F.col("doc_id") < 300), tbl)
     batch = docs.where(F.col("doc_id") >= 250)
     res = near_dup_against_index(spark, batch, tbl, threshold=0.3)
-    return _carry_lease(res, res.select("doc_id"))
+    return res.select("doc_id")
 
 
 def _q_cosine_near_dup_lsh(spark, sf_dir):
@@ -441,8 +441,7 @@ def _q_curate_corpus(spark, sf_dir):
     """Full curation pipeline: quality filter -> exact dedup -> near-dup
     removal; the oracle recomputes every stage in SQL."""
     from cypher_for_apache_flink_spark.functions.pipeline import curate_corpus
-    res = curate_corpus(_docs(spark, sf_dir))
-    return _carry_lease(res, res.select("doc_id"))
+    return curate_corpus(_docs(spark, sf_dir)).select("doc_id")
 
 
 def _q_rolling_fingerprints(spark, sf_dir):
@@ -568,9 +567,8 @@ def _q_pagerank(spark, sf_dir):
                      F.col("n_nationkey").cast("string")).alias("src"),
             F.concat(F.lit("R"),
                      F.col("n_regionkey").cast("string")).alias("dst"))))
-    res = pagerank(edges, iterations=3)
-    return _carry_lease(res, res.select(
-        "node", F.round("rank", 6).alias("rank")))
+    return pagerank(edges, iterations=3).select(
+        "node", F.round("rank", 6).alias("rank"))
 
 
 def _q_any_union(spark, sf_dir):
@@ -698,24 +696,6 @@ def _q_chunk_documents(spark, sf_dir):
     return chunk_documents(_docs(spark, sf_dir), size=16, overlap=4)
 
 
-def _carry_lease(parent, out):
-    """Propagate a functions-layer CacheLease onto a derived DataFrame.
-
-    The lease rides a plain Python attribute, which DataFrame
-    transformations do not copy: wrapping an algorithm's result in a
-    final select/orderBy left the intermediate with the ONLY lease
-    reference, so it was garbage-collected during query construction and
-    its unpersist fired before the collect — the loop-invariant caches
-    were gone and the final plan re-derived them from the raw scans
-    (measured on pagerank_weighted: 55 lineitem FileScans, zero
-    InMemoryTableScans, and the derivation re-ran inside the collect).
-    """
-    lease = getattr(parent, "_cypher_cache_lease", None)
-    if lease is not None:
-        out._cypher_cache_lease = lease
-    return out
-
-
 def _copurchase_edges(spark, sf_dir):
     """Part co-purchase graph: parts sharing an order (undirected src<dst).
 
@@ -791,10 +771,9 @@ def _q_hits(spark, sf_dir):
                      F.col("n_nationkey").cast("string")).alias("src"),
             F.concat(F.lit("R"),
                      F.col("n_regionkey").cast("string")).alias("dst"))))
-    res = hits(edges, iterations=3)
-    return _carry_lease(res, res.select(
+    return hits(edges, iterations=3).select(
         "node", F.round("hub", 6).alias("hub"),
-        F.round("authority", 6).alias("authority")))
+        F.round("authority", 6).alias("authority"))
 
 
 def _q_betweenness(spark, sf_dir):
@@ -827,8 +806,8 @@ def _q_duplicate_spans(spark, sf_dir):
     from cypher_for_apache_flink_spark.functions.dedup import (
         duplicate_spans,
     )
-    res = duplicate_spans(_docs(spark, sf_dir), n=8)
-    return _carry_lease(res, res.orderBy("doc_id", "span_start"))
+    return duplicate_spans(_docs(spark, sf_dir), n=8) \
+        .orderBy("doc_id", "span_start")
 
 
 def _q_label_propagation(spark, sf_dir):
@@ -926,8 +905,8 @@ def _q_node_similarity(spark, sf_dir):
     pairs = neighborhood_jaccard_pairs(
         edges, threshold=0.5, max_neighbor_degree=100,
         node_filter=lambda c: c.startswith("D"))
-    return _carry_lease(pairs, pairs.where(F.col("a").startswith("D")
-                                           & F.col("b").startswith("D")))
+    return pairs.where(F.col("a").startswith("D")
+                       & F.col("b").startswith("D"))
 
 
 def _q_personalized_pagerank(spark, sf_dir):
@@ -945,9 +924,8 @@ def _q_personalized_pagerank(spark, sf_dir):
     # sensitive to edge multiplicity, and the Spark derivation dedups
     # within an order (collect_set) while the SQL self-join does not
     edges = _copurchase_edges(spark, sf_dir).dropDuplicates(["src", "dst"])
-    res = personalized_pagerank(edges, srcs, iterations=3)
-    return _carry_lease(res, res.select(
-        "node", F.round("rank", 6).alias("rank")))
+    return personalized_pagerank(edges, srcs, iterations=3).select(
+        "node", F.round("rank", 6).alias("rank"))
 
 
 # each demoted entry duplicates an in-window operator: the *_indexed
@@ -1267,9 +1245,8 @@ def _q_pagerank_weighted(spark, sf_dir):
     )
     w = (_copurchase_edges(spark, sf_dir)
          .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
-    res = pagerank(w, iterations=3, weight_col="w")
-    return _carry_lease(res, res.select(
-        "node", F.round("rank", 6).alias("rank")))
+    return pagerank(w, iterations=3, weight_col="w").select(
+        "node", F.round("rank", 6).alias("rank"))
 
 
 def _q_bm25_retrieval(spark, sf_dir):
@@ -1500,10 +1477,9 @@ def _q_local_clustering(spark, sf_dir):
     from cypher_for_apache_flink_spark.functions.graph_algos import (
         local_clustering,
     )
-    out = local_clustering(_copurchase_edges(spark, sf_dir))
-    return _carry_lease(out, out.select(
+    return local_clustering(_copurchase_edges(spark, sf_dir)).select(
         "node", "triangles", "degree",
-        F.round("coeff", 6).alias("coeff")).orderBy("node"))
+        F.round("coeff", 6).alias("coeff")).orderBy("node")
 
 
 def _q_louvain_weighted(spark, sf_dir):

@@ -1,42 +1,34 @@
 """Query-scoped lease over planner-created caches.
 
-The var-length expand caches its pruned edge table (and, for unbounded
-expands, each hop frontier) so the hop loop and the fixpoint test don't
-recompute the join chain.  Those StorageLevels must not outlive the query:
-in a long-lived session executor storage would accumulate one slim-edge
-cache per var-length query (VERDICT r3 #6).
+The var-length expand and the shortestPath loop cache their pruned edge
+tables so each hop doesn't recompute the join chain.  Those StorageLevels
+must not outlive the query: in a long-lived session executor storage
+would accumulate one slim-edge cache per var-length query (VERDICT r3 #6).
 
-A ``CacheLease`` is owned by the planner and co-owned by every object
-handed to the user (the ``CypherResult`` and any DataFrame derived from
-it).  When the last holder is garbage-collected — or ``release()`` is
-called explicitly — every leased DataFrame is unpersisted.  Unpersist is
-correctness-neutral (Spark recomputes), so an early release can only cost
-time, never answers.
+Only the Cypher planner leases.  A ``CacheLease`` is owned by the planner
+and co-owned by every object handed to the user (the ``CypherResult`` and
+the DataFrame its ``df`` returns).  When the last holder is
+garbage-collected — or ``release()`` is called explicitly — every leased
+DataFrame is unpersisted.  Unpersist is correctness-neutral (Spark
+recomputes), so an early release can only cost time, never answers.
+
+Loop checkpoints are not leased: the planner's unbounded frontiers and
+every result under ``functions/`` are ``layout.materialize`` checkpoints,
+which Spark's ContextCleaner frees once no plan reads them.
 """
 
 from __future__ import annotations
+
+from py4j.protocol import Py4JJavaError
 
 
 class CacheLease:
     def __init__(self):
         self.dfs = []
-        # JVM RDD handles of local checkpoints.  Unlike caches these are
-        # NOT recomputable (checkpointing truncates lineage), so they are
-        # freed only when the lease itself is garbage-collected — at that
-        # point nothing can re-access the data.  release() leaves them.
-        self.rdds = []
 
     def add(self, df):
         """Track a cached/persisted DataFrame; returns it unchanged."""
         self.dfs.append(df)
-        return df
-
-    def add_checkpoint(self, df):
-        """Track the materialized RDD behind an eager localCheckpoint."""
-        try:
-            self.rdds.append(df._jdf.queryExecution().analyzed().rdd())
-        except Exception:
-            pass   # plan shape changed — ContextCleaner still applies
         return df
 
     def release(self):
@@ -44,14 +36,8 @@ class CacheLease:
         for d in dfs:
             try:
                 d.unpersist()
-            except Exception:
-                pass   # session already stopped — nothing left to free
+            except Py4JJavaError:
+                pass   # the SparkContext is stopped: its storage is gone
 
     def __del__(self):
         self.release()
-        rdds, self.rdds = self.rdds, []
-        for r in rdds:
-            try:
-                r.unpersist(False)
-            except Exception:
-                pass

@@ -102,13 +102,6 @@ def dedup_clusters(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     per cluster — ``keep_id`` is the minimum member, everything else in the
     component is a removable duplicate."""
     cc = connected_components(pairs, a, b)
-    out = (cc.groupBy(F.col("cc").alias("component"))
-           .agg(F.min("node").alias("keep_id"),
-                F.count(F.lit(1)).alias("n_docs")))
-    # carry the pair-producer's lease (if any): the rollup is the only
-    # reference left once the caller drops ``pairs``, and an early
-    # unpersist would force the collect to re-derive the pair caches
-    lease = getattr(pairs, "_cypher_cache_lease", None)
-    if lease is not None:
-        out._cypher_cache_lease = lease
-    return out
+    return (cc.groupBy(F.col("cc").alias("component"))
+            .agg(F.min("node").alias("keep_id"),
+                 F.count(F.lit(1)).alias("n_docs")))

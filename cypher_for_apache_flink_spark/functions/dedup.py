@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import layout
 from .text import tokens
 
 
@@ -98,20 +99,20 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     power-law footgun); pass None for the exact unbounded join.  A pair
     whose ONLY shared shingles exceed the cap is missed — jaccard values
     are lower bounds under a cap, the standard recall/cost trade."""
-    from .layout import ensure_parallelism
     if max_shingle_freq == "auto":
         max_shingle_freq = DEFAULT_SKEW_CAP
     # cached: read by the size pass AND both sides of the blocked self-join
-    sh = ensure_parallelism(df).select(
+    sh = layout.ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         F.explode(word_shingles(F.col(text_col), n)).alias("sh")).cache()
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
+    blocked = sh
     if max_shingle_freq is not None:
         freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-        sh = sh.join(F.broadcast(freq.where(F.col("df") <= max_shingle_freq)
-                                 .select("sh")), "sh")
-    a = sh.select(F.col("doc").alias("a"), "sh")
-    b = sh.select(F.col("doc").alias("b"), "sh")
+        blocked = sh.join(F.broadcast(
+            freq.where(F.col("df") <= max_shingle_freq).select("sh")), "sh")
+    a = blocked.select(F.col("doc").alias("a"), "sh")
+    b = blocked.select(F.col("doc").alias("b"), "sh")
     inter = (a.join(b, "sh").where(F.col("a") < F.col("b"))
              .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter")))
     sa = sizes.select(F.col("doc").alias("a"), F.col("sz").alias("sza"))
@@ -121,11 +122,10 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6))
            .where(F.col("jaccard") >= threshold)
            .select("a", "b", "jaccard"))
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(sh)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        sh.unpersist()
 
 
 def minhash_from_shingles(sh, num_hashes: int = 8):
@@ -169,8 +169,7 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 3, num_hashes: int = 8,
     # (doc, shingles) table is reused by the signature pass AND the two
     # candidate re-attach joins — cache it rather than re-shingling the
     # corpus three times.
-    from .layout import ensure_parallelism
-    shingled = ensure_parallelism(df).select(
+    shingled = layout.ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         word_shingles(F.col(text_col), n).alias("sh0")).cache()
     # Band entries carry ONLY (doc, band, key): at 100 TB the band-bucket
@@ -193,14 +192,13 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 3, num_hashes: int = 8,
     out = (cand.withColumn("jaccard", F.round(inter / union, 6))
            .where(F.col("jaccard") >= threshold)
            .select("a", "b", "jaccard"))
-    # The shingle cache lives exactly as long as the result: unpersisted
-    # when the returned DataFrame is garbage-collected (VERDICT r3 #6 —
-    # repeated calls used to accumulate one cached corpus per call).
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(shingled)
-    out._cypher_cache_lease = lease
-    return out
+    # The result is a checkpoint, so the shingle cache is dropped on
+    # return (VERDICT r3 #6 — repeated calls used to accumulate one
+    # cached corpus per call).
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        shingled.unpersist()
 
 
 def simhash_votes(text):
@@ -258,8 +256,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 8,
     ``bands`` chunks; docs sharing a chunk are candidates, verified by
     Hamming distance <= max_hamming."""
     bits_per = 64 // bands
-    from .layout import ensure_parallelism
-    voted = ensure_parallelism(df).select(
+    voted = layout.ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
         simhash_votes(F.col(text_col)).alias("__v"))
     # One 64-char bit string per doc, straight from the votes (no decimal
@@ -298,11 +295,10 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 8,
     out = (cand.withColumn("hamming", hamming)
            .where(F.col("hamming") <= max_hamming)
            .select("a", "b", "hamming"))
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(sig)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        sig.unpersist()
 
 
 def write_fingerprint_index(df: DataFrame, path: str, text_col: str = "text",
@@ -463,12 +459,13 @@ def near_dup_against_index(spark, docs: DataFrame, table: str, n: int = 3,
     losers = (cand.where(F.round(inter / union, 6) >= threshold)
               .select("doc").distinct()
               .withColumnRenamed("doc", id_col))
-    out = docs.join(losers, id_col, "left_anti")
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(batch_sh)
-    out._cypher_cache_lease = lease
-    return out
+    # only the loser ids are checkpointed: the survivors are the
+    # caller's own rows, read again from ``docs``
+    try:
+        losers = layout.materialize(losers)[0]
+    finally:
+        batch_sh.unpersist()
+    return docs.join(losers, id_col, "left_anti")
 
 
 def stream_dedup_against_index(spark, docs: DataFrame, path: str, sink,
@@ -558,11 +555,10 @@ def duplicate_spans(df: DataFrame, n: int = 20, min_count: int = 2,
            .agg(F.min("pos").alias("span_start"),
                 (F.max("pos") + n).cast("long").alias("span_end"))
            .select(id_col, "span_start", "span_end"))
-    from ..cache import CacheLease
-    lease = CacheLease()
-    lease.add(ex)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        ex.unpersist()
 
 
 def duplicate_spans_sql_oracle(docs_sql: str, n: int = 20,

@@ -36,8 +36,12 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import CacheLease
 from . import layout
+
+# label_propagation and hits cut their loop state every this many
+# supersteps (the other loops read their state twice per superstep and
+# cut every one, see the module docstring)
+_CUT_EVERY = 2
 
 
 def _mirror(df: DataFrame, ucol: str = "u", vcol: str = "v",
@@ -84,7 +88,9 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     aggregate on dst (see :func:`_power_iteration`).  The ranks are
     materialized before every superstep but the first: the superstep
     reads them twice (the join and the dangling mass), so a superstep
-    left uncut doubles the plan -- and the work -- of the next one.
+    left uncut doubles the plan -- and the work -- of the next one.  The
+    final ranks are materialized too: the result reads only that
+    checkpoint, and the setup's caches are unpersisted on return.
 
     Deterministic given the edge set (float summation order aside) --
     verified against an unrolled recursive-CTE SQL oracle at 6 decimal
@@ -105,15 +111,22 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
     None: uniform teleport 1/N) and :func:`personalized_pagerank`
     (``srcs`` is the distinct (node) teleport set: 1/|S| on each source,
     0 elsewhere).  ``edges`` is (src, dst) or weighted (src, dst, w).
-    Owns the setup, the pin and broadcast gates, the superstep loop and
-    the single CacheLease over every frame it persists; returns (node,
-    rank)."""
-    lease = CacheLease()
+    Owns the setup, the pin and broadcast gates and the superstep loop;
+    returns (node, rank) as a :func:`layout.materialize` checkpoint, and
+    unpersists every frame it persisted before returning."""
+    held = []
+    try:
+        return _power_supersteps(edges, srcs, iterations, damping, held)
+    finally:
+        for df in reversed(held):
+            df.unpersist()
 
-    def _leased(out):
-        out._cypher_cache_lease = lease
-        return out
 
+def _power_supersteps(edges: DataFrame, srcs: DataFrame | None,
+                      iterations: int, damping: float,
+                      held: list) -> DataFrame:
+    """:func:`_power_iteration`'s body; appends each frame it persists to
+    ``held``."""
     weighted = "w" in edges.columns
     # Persisted: the input may be an expensive derived set (a co-purchase
     # self-join, a Cypher projection) and setup scans it several times
@@ -128,8 +141,9 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
     # +102% shuffle / +580% cpu regression there (BENCH_DIFF_r08.md,
     # layout.pin_parts docstring).
     # a null id would collide with the dangling sink key (see out_edges)
-    edges = lease.add(edges.where(F.col("src").isNotNull()
-                                  & F.col("dst").isNotNull()).persist())
+    edges = edges.where(F.col("src").isNotNull()
+                        & F.col("dst").isNotNull()).persist()
+    held.append(edges)
     spark = edges.sparkSession
     nparts = layout.pin_parts(spark, data=edges)
     if nparts is None:
@@ -138,7 +152,7 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
         # sf1 spot); when the estimate said "small", confirm with an
         # exact count of the persisted edge set.  The count is one
         # cache-materializing job the setup scans would pay anyway.
-        n_edges = edges.count()
+        n_edges = layout.count_rows(edges)
         if not layout.fits_broadcast(n_edges):
             nparts = layout.pin_target(spark)
         else:
@@ -153,10 +167,10 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
         ends = ends.union(srcs)
     nodes = layout.repart(ends, nparts, "node").dropDuplicates(["node"])
     if srcs is not None:
-        n_src = srcs.count()
+        n_src = layout.count_rows(srcs)
         if n_src == 0:
-            return _leased(nodes.select("node", F.lit(0.0).alias("rank"))
-                           .limit(0))
+            return layout.materialize(
+                nodes.select("node", F.lit(0.0).alias("rank")).limit(0))[0]
         nodes = (nodes.join(srcs.withColumn("__s", F.lit(1)), "node",
                             "left_outer")
                  .select("node", F.when(F.col("__s").isNotNull(),
@@ -167,10 +181,12 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
     # materializes the cache AND
     # yields N for the teleport term (an iterative algorithm runs a job per
     # superstep anyway — this is not a hidden extra).
-    nodes = lease.add(nodes.cache())
-    n = nodes.count()
+    nodes = nodes.cache()
+    held.append(nodes)
+    n = layout.count_rows(nodes)
     if n == 0:
-        return _leased(nodes.select("node", F.lit(0.0).alias("rank")))
+        return layout.materialize(
+            nodes.select("node", F.lit(0.0).alias("rank")))[0]
     if nparts is None:
         nodes = layout.scan_coalesce(nodes, n)
     deg = layout.repart(edges, nparts, "src") \
@@ -199,7 +215,8 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
                     F.lit(None).cast(typed["dst"]).alias("dst"),
                     *([F.lit(1.0).alias("w")] if weighted else []),
                     F.lit(1).cast(typed["deg"]).alias("deg")))
-    out_edges = lease.add(out_edges.unionByName(sink).persist())
+    out_edges = out_edges.unionByName(sink).persist()
+    held.append(out_edges)
     if nparts is None:
         out_edges = layout.scan_coalesce(out_edges, n_edges + n)
 
@@ -250,7 +267,8 @@ def _power_iteration(edges: DataFrame, srcs: DataFrame | None,
                          (base + F.lit(damping)
                           * (F.col("contrib")
                              + F.coalesce(share, F.lit(0.0)))).alias("rank")))
-    return _leased(ranks.select("node", F.col("rank").alias("rank")))
+    # the final state is a cut too: the caches are dropped on return
+    return layout.materialize(ranks)[0]
 
 
 def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
@@ -500,7 +518,7 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
     the common neighbors ``array_intersect(nb_a, nb_b)`` are that
     edge's triangle closers -- ``deg`` is the true undirected (node,
     deg) table, and ``und``/``oriented`` are the PERSISTED frames the
-    caller must put on its result's CacheLease.
+    caller unpersists once it has materialized its result.
 
     Degree-ordered adjacency intersection: orient every undirected edge
     from its lower-(degree, id) endpoint to the higher one — each triangle
@@ -513,10 +531,10 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
     O(m^1.5) wedge rows through a shuffle (measured 30x slower at sf0.1 on
     a 1.1M-edge co-purchase graph).
 
-    ``und`` and ``oriented`` are persisted for the query's lifetime (two
-    consumers each — a derived edge set like a lineitem co-purchase
-    self-join would otherwise be recomputed per consumer) and released via
-    the result's CacheLease.
+    ``und`` and ``oriented`` are persisted (two consumers each — a
+    derived edge set like a lineitem co-purchase self-join would
+    otherwise be recomputed per consumer) only until the caller's result
+    is a checkpoint; nothing persisted is handed out past the call.
 
     Partition-count pinning, GATED (round 9, VERDICT r8 #1): the
     adjacency join moves wide array rows, and its wall time proved
@@ -628,7 +646,7 @@ def _oriented_intersections(edges: DataFrame, src_col: str,
                            F.col("nb").alias("nb_b")),
                 F.col("b") == F.col("__jb"))
     # return the PERSISTED handles (not the coalesced scan wrappers) so
-    # the caller's CacheLease unpersists the actual cached plans
+    # the caller unpersists the actual cached plans
     return j, deg, und_p, oriented_p
 
 
@@ -643,11 +661,11 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
     out = j.agg(F.coalesce(
         F.sum(F.size(F.array_intersect(F.col("nb_a"), F.col("nb_b")))),
         F.lit(0)).cast("long").alias("n_triangles"))
-    lease = CacheLease()
-    lease.add(und)
-    lease.add(oriented)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        oriented.unpersist()
+        und.unpersist()
 
 
 def local_clustering(edges: DataFrame, src_col: str = "src",
@@ -691,11 +709,11 @@ def local_clustering(edges: DataFrame, src_col: str = "src",
                                                   F.lit(0))
                           / (F.col("deg") * (F.col("deg") - 1)))
                    .otherwise(F.lit(0.0)).alias("coeff")))
-    lease = CacheLease()
-    lease.add(und)
-    lease.add(oriented)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        oriented.unpersist()
+        und.unpersist()
 
 
 def local_clustering_sql_oracle(edges_sql: str) -> str:
@@ -943,12 +961,11 @@ def neighborhood_jaccard_pairs(edges: DataFrame, threshold: float = 0.5,
                / (F.col("da") + F.col("db") - F.col("shared")), 6))
            .where(F.col("jaccard") >= threshold)
            .select("a", "b", "jaccard"))
-    lease = CacheLease()
-    lease.add(und)
-    lease.add(deg)
-    lease.add(wedge_src)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        return layout.materialize(out)[0]
+    finally:
+        for df in (wedge_src, deg, und):
+            df.unpersist()
 
 
 def neighborhood_jaccard_sql_oracle(edges_sql: str, threshold: float = 0.5,
@@ -999,9 +1016,9 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
     with tele(v) = 1/|S| for source nodes, else 0.  Runs the same loop
     as :func:`pagerank` -- :func:`_power_iteration`, with the sources as
     the teleport set -- so it shares pagerank's pin and broadcast gates,
-    scan coalescing and cache lease; per-superstep shuffles key on node
-    ids.  Like pagerank it materializes the ranks before every superstep
-    but the first, since each superstep reads them twice.
+    scan coalescing and checkpointed result; per-superstep shuffles key
+    on node ids.  Like pagerank it materializes the ranks before every
+    superstep but the first, since each superstep reads them twice.
     """
     srcs = (sources.select(F.col(node_col).alias("node"))
             .where(F.col("node").isNotNull()).dropDuplicates(["node"]))
@@ -1052,8 +1069,8 @@ def personalized_pagerank_sql_oracle(edges_sql: str, sources_sql: str,
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5,
-                      src_col: str = "src", dst_col: str = "dst",
-                      checkpoint_interval: int = 2) -> DataFrame:
+                      src_col: str = "src", dst_col: str = "dst"
+                      ) -> DataFrame:
     """Community detection by synchronous label propagation; returns
     (node, community) for every endpoint of ``edges``.
 
@@ -1072,8 +1089,8 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
     aggregation — count per (node, label), then arg-max via a min-struct,
     which partially aggregates map-side.  All shuffles key on node ids,
     so pre-bucketed edge tables make supersteps exchange-free on a
-    cluster; lineage is checkpoint-truncated every
-    ``checkpoint_interval`` rounds like every iterative algorithm here.
+    cluster; lineage is checkpoint-truncated every second round and
+    after the last.
 
     The reference has no community detection at all (SURVEY §2 negative
     space — no GDS-style algorithm surface); exposed to Cypher as
@@ -1112,7 +1129,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5,
                   .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
                                       F.col("lbl").alias("l")))
                        .getField("l").alias("lbl")))
-        if it % checkpoint_interval == 0 or it == iterations:
+        if it % _CUT_EVERY == 0 or it == iterations:
             labels, _ = layout.materialize(labels)
     return labels.select("node", F.col("lbl").alias("community"))
 
@@ -1143,7 +1160,7 @@ def label_propagation_sql_oracle(edges_sql: str, iterations: int = 5) -> str:
 
 
 def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
-         dst_col: str = "dst", checkpoint_interval: int = 2) -> DataFrame:
+         dst_col: str = "dst") -> DataFrame:
     """HITS (Kleinberg): returns (node, hub, authority) over the DIRECTED
     edge set, both scores L2-normalized each superstep (the standard
     convergent formulation).
@@ -1181,24 +1198,35 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
     oracle at 6 decimals.  Beyond-reference: the reference has no
     algorithm surface at all.
     """
-    lease = CacheLease()
-    edges = lease.add(edges.select(F.col(src_col).alias("src"),
-                                   F.col(dst_col).alias("dst")).persist())
+    held = []
+    try:
+        return _hits_supersteps(edges, iterations, src_col, dst_col, held)
+    finally:
+        for df in reversed(held):
+            df.unpersist()
+
+
+def _hits_supersteps(edges: DataFrame, iterations: int, src_col: str,
+                     dst_col: str, held: list) -> DataFrame:
+    """:func:`hits`'s body; appends each frame it persists to ``held``."""
+    edges = edges.select(F.col(src_col).alias("src"),
+                         F.col(dst_col).alias("dst")).persist()
+    held.append(edges)
     # The loop scans this cache twice per superstep in its derivation
     # partition layout (never re-coalesced for cached plans); size the
     # scan once from an exact count — one job that materializes a cache
     # the first superstep pays for anyway, no-op above the rows/part
     # bound so the large-graph regime plans identically (round 11).
     edges = layout.scan_coalesce(edges, edges.count())
-    nodes = lease.add((edges.select(F.col("src").alias("node"))
-                       .union(edges.select(F.col("dst").alias("node")))
-                       .dropDuplicates(["node"])).persist())
+    nodes = (edges.select(F.col("src").alias("node"))
+             .union(edges.select(F.col("dst").alias("node")))
+             .dropDuplicates(["node"])).persist()
+    held.append(nodes)
     if iterations <= 0:
         # degenerate call: the uniform initial scores, as before round 9
-        out = nodes.select("node", F.lit(1.0).alias("hub"),
-                           F.lit(1.0).alias("authority"))
-        out._cypher_cache_lease = lease
-        return out
+        return layout.materialize(
+            nodes.select("node", F.lit(1.0).alias("hub"),
+                         F.lit(1.0).alias("authority")))[0]
     # hub_0 = 1.0 over nodes WITH out-edges; others never feed the loop
     hub = (edges.select(F.col("src").alias("node"))
            .dropDuplicates(["node"]).withColumn("h", F.lit(1.0)))
@@ -1218,7 +1246,8 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
              .groupBy(F.col("dst").alias("node"))
              .agg(F.sum("h").alias("a")))
         if not defer_norms:
-            a = lease.add(a.persist())
+            a = a.persist()
+            held.append(a)
             a = (a.crossJoin(F.broadcast(_norm1(a, "a")))
                  .select("node", (F.col("a") / F.col("n")).alias("a")))
         # hub sums: h(u) = sum of a(v) over edges u->v; every edge's dst
@@ -1227,17 +1256,19 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
                .groupBy(F.col("src").alias("node"))
                .agg(F.sum("a").alias("h")))
         if not defer_norms:
-            hub = lease.add(hub.persist())
+            hub = hub.persist()
+            held.append(hub)
             hub = (hub.crossJoin(F.broadcast(_norm1(hub, "h")))
                    .select("node", (F.col("h") / F.col("n")).alias("h")))
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < iterations:
+        if (i + 1) % _CUT_EVERY == 0 and i + 1 < iterations:
             hub, _ = layout.materialize(hub)
     # final norms (the ONLY ones in the deferred regime) + densify:
     # zero hub for sink-only nodes, zero auth for source-only nodes —
     # exactly the oracle's coalesce semantics.  hub/a are persisted so
     # the norm subplans and the densify joins share one computation.
-    hub = lease.add(hub.persist())
-    a = lease.add(a.persist())
+    hub = hub.persist()
+    a = a.persist()
+    held += [hub, a]
     hn = _norm1(hub, "h").select(F.col("n").alias("hn"))
     an = _norm1(a, "a").select(F.col("n").alias("an"))
     out = (nodes
@@ -1250,8 +1281,7 @@ def hits(edges: DataFrame, iterations: int = 5, src_col: str = "src",
                    .alias("hub"),
                    (F.coalesce(F.col("a"), F.lit(0.0)) / F.col("an"))
                    .alias("authority")))
-    out._cypher_cache_lease = lease
-    return out
+    return layout.materialize(out)[0]
 
 
 def hits_sql_oracle(edges_sql: str, iterations: int = 5,

@@ -80,13 +80,20 @@ def materialize(df: DataFrame, where=None,
     sizes, but the STATIC planner reads the leaf estimate, so callers
     keep their own sever choice and gate small sides explicitly."""
     ck = df.localCheckpoint(eager=False)
-    probe = ck if where is None else ck.where(where)
-    n = probe._jdf.queryExecution().toRdd().count()
+    n = count_rows(ck if where is None else ck.where(where))
     if sever:
         jdf, spark = ck._jdf, ck.sparkSession
         ck = DataFrame(spark._jsparkSession.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False), spark)
     return ck, n
+
+
+def count_rows(df: DataFrame) -> int:
+    """Row count of ``df`` as an ``RDD.count()`` over its executed plan.
+    ``DataFrame.count()`` adds an aggregate, which under AQE runs its
+    shuffle stage as one more job.  Over a persisted frame the count also
+    fills the cache."""
+    return df._jdf.queryExecution().toRdd().count()
 
 
 def fits_broadcast(rows: int, row_bytes: int = 16) -> bool:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import layout
 from .dedup import dedup_exact, minhash_lsh_pairs
 from .text import quality_score
 
@@ -34,35 +35,29 @@ def curate_corpus(docs: DataFrame, quality_min: float = 0.4,
     were never a matching pair), the policy large corpus dedups usually
     want.
     """
-    from .layout import ensure_parallelism
     # size_aware: the heavy minhash stage runs downstream of the dedup
     # window shuffle (parallel regardless); only a genuinely fat single
     # file is worth a pre-shuffle here.
-    scored = ensure_parallelism(docs, size_aware=True).where(
+    scored = layout.ensure_parallelism(docs, size_aware=True).where(
         quality_score(F.col(text_col)) >= quality_min)
     # The dedup survivors feed BOTH the near-dup pair generation and the
     # final anti-join; without a persist the quality filter + fingerprint
     # window subtree is replicated per consumer (measured: 15 Window nodes,
     # 10 scans in one curate plan).  MEMORY_AND_DISK (cache default) spills
-    # rather than OOMs at warehouse scale, and the lease below unpersists
-    # when the result is done.
+    # rather than OOMs at warehouse scale; the result is a checkpoint, so
+    # the cache is dropped on return.
     deduped = dedup_exact(scored, text_col=text_col, id_col=id_col).cache()
-    pairs = minhash_lsh_pairs(deduped, threshold=jaccard_threshold,
-                              text_col=text_col, id_col=id_col)
-    if transitive:
-        from .components import connected_components
-        cc = connected_components(pairs)
-        losers = cc.where(F.col("node") != F.col("cc")) \
-            .select(F.col("node").alias(id_col))
-    else:
-        losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    out = deduped.join(losers, id_col, "left_anti")
-    # Keep the MinHash shingle cache AND the dedup-survivor cache alive for
-    # as long as THIS result can still execute (the lease rides on `pairs`;
-    # without the hand-off it would be unpersisted the moment `pairs` falls
-    # out of scope and every downstream action would re-shingle the corpus).
-    from ..cache import CacheLease
-    lease = getattr(pairs, "_cypher_cache_lease", None) or CacheLease()
-    lease.add(deduped)
-    out._cypher_cache_lease = lease
-    return out
+    try:
+        pairs = minhash_lsh_pairs(deduped, threshold=jaccard_threshold,
+                                  text_col=text_col, id_col=id_col)
+        if transitive:
+            from .components import connected_components
+            cc = connected_components(pairs)
+            losers = cc.where(F.col("node") != F.col("cc")) \
+                .select(F.col("node").alias(id_col))
+        else:
+            losers = pairs.select(F.col("b").alias(id_col)).distinct()
+        return layout.materialize(
+            deduped.join(losers, id_col, "left_anti"))[0]
+    finally:
+        deduped.unpersist()

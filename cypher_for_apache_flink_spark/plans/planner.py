@@ -21,6 +21,7 @@ import dataclasses
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.layout import materialize
 from ..ir import expr as E
 from ..operators.columns import ExprContext, compile_aggregator, to_column
 from ..operators.header import Header, TypeOf, column_name
@@ -947,7 +948,6 @@ class Planner:
         if getattr(sp, "_mutated", False):
             self._mutated = True
         self.cache_lease.dfs.extend(sp.cache_lease.dfs)
-        self.cache_lease.rdds.extend(sp.cache_lease.rdds)
 
     def _expose_subquery(self, records, key, sub_key_col, sub_rec, sub_outs,
                          how="inner", fills=None):
@@ -1512,16 +1512,15 @@ class Planner:
                 hop_node_cols.append(f"pn{step_sfx}")
             if unbounded:
                 # Materialize each hop once so the fixpoint test doesn't
-                # recompute the whole join chain.  localCheckpoint (not
+                # recompute the whole join chain.  A checkpoint (not a
                 # persist): each hop's plan must TRUNCATE or the logical
                 # plan grows quadratically with depth and a ~20-hop
                 # frontier OOMs the DRIVER during planning (same lesson as
                 # functions/components.py's label-propagation loop).
-                # Checkpointed RDDs are freed by Spark's ContextCleaner
-                # when the result is garbage-collected.
-                frontier = self.cache_lease.add_checkpoint(
-                    frontier.localCheckpoint(eager=True))
-                if frontier.isEmpty():
+                # Spark's ContextCleaner frees each checkpoint once no
+                # plan reads it any more.
+                frontier, n_frontier = materialize(frontier)
+                if n_frontier == 0:
                     if not staged:
                         staged.append(stage(frontier, k))
                     break

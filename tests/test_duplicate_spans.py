@@ -77,9 +77,19 @@ def test_window_length_boundary(spark):
     assert spans(df, n=3) == [(1, 0, 3), (2, 0, 3)]
 
 
-def test_no_driver_side_loops(docs_df):
+def test_no_driver_side_loops(docs_df, monkeypatch):
     # distributed shape: the plan is pure DataFrame ops (window merge +
-    # aggregations), no collect-based driver iteration
-    df = duplicate_spans(docs_df, n=3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    # aggregations), no collect-based driver iteration.  The result is a
+    # checkpoint, so read the plan it was materialized from.
+    from cypher_for_apache_flink_spark.functions import layout
+    plans = []
+    materialize = layout.materialize
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return materialize(df, *args, **kwargs)
+
+    monkeypatch.setattr(layout, "materialize", spy)
+    duplicate_spans(docs_df, n=3)
+    [plan] = plans
     assert "Window" in plan

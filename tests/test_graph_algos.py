@@ -133,14 +133,12 @@ _RELEASE_CASES = {
 
 @pytest.mark.parametrize("case", sorted(_RELEASE_CASES))
 def test_pagerank_releases_caches(spark, monkeypatch, case):
-    """Every persist of the power iteration is on the result's lease, the
+    """Nothing the power iteration persisted survives its return, the
     early exits (no node, no positive weight) included.  The only RDDs
-    the call may leave persisted are its own superstep cuts, at most one
-    per superstep after the first: local checkpoints, which Spark's
-    ContextCleaner frees once the JVM has collected every plan reading
-    them."""
-    import gc
-
+    the call may leave persisted are its own cuts -- at most one per
+    superstep after the first plus the final state the result reads:
+    local checkpoints, which Spark's ContextCleaner frees once the JVM
+    has collected every plan reading them."""
     from cypher_for_apache_flink_spark.functions.graph_algos import (
         personalized_pagerank)
     rows, mode = _RELEASE_CASES[case]
@@ -158,7 +156,6 @@ def test_pagerank_releases_caches(spark, monkeypatch, case):
 
     monkeypatch.setattr(layout, "materialize", spy)
     iterations = 2
-    gc.collect()
     before = set(jsc.getPersistentRDDs())
     edges = spark.createDataFrame(rows, "src string, dst string, w double")
     if mode == "ppr":
@@ -166,11 +163,10 @@ def test_pagerank_releases_caches(spark, monkeypatch, case):
         out = personalized_pagerank(edges, srcs, iterations=iterations)
     else:
         out = pagerank(edges, iterations=iterations, weight_col=mode)
-    out.collect()
-    del out
-    gc.collect()
     assert set(jsc.getPersistentRDDs()) - before <= cuts
-    assert len(cuts) <= iterations - 1
+    out.collect()
+    assert set(jsc.getPersistentRDDs()) - before <= cuts
+    assert 1 <= len(cuts) <= iterations
 
 
 def test_ppr_from_every_node_equals_pagerank(spark):
@@ -663,16 +659,24 @@ def test_pin_gate_skips_when_session_well_sized(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_pagerank_no_inloop_exchange_pins_when_gate_off(spark):
-    """With the gate deciding 'no pin', the pagerank plan must not
-    contain the r8 RoundRobin/hash repartitions — count the explicit
-    RepartitionByExpression nodes in the analyzed plan."""
+def test_pagerank_no_inloop_exchange_pins_when_gate_off(spark, monkeypatch):
+    """With the gate deciding 'no pin', the pagerank superstep plans must
+    not contain the r8 RoundRobin/hash repartitions — count the explicit
+    RepartitionByExpression nodes in the analyzed plan of every state
+    the loop materializes (the result itself is a checkpoint)."""
+    plans = []
+    materialize = layout.materialize
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        return materialize(df, *args, **kwargs)
+
+    monkeypatch.setattr(layout, "materialize", spy)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    out = pagerank(edges, iterations=2)
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "RepartitionByExpression" not in plan
-    out._cypher_cache_lease.release()
+    pagerank(edges, iterations=2)
+    assert len(plans) == 2
+    assert all("RepartitionByExpression" not in p for p in plans)
 
 
 def test_pin_gate_large_data_estimate_pins(spark, monkeypatch):

@@ -122,7 +122,7 @@ def test_fingerprint_index_append_ingestion_loop(spark, tmp_path):
     assert any(d.startswith("__fp_bucket=") for d in os.listdir(path))
 
 
-def test_minhash_index_near_dup_ingestion(spark):
+def test_minhash_index_near_dup_ingestion(spark, monkeypatch):
     """Persisted NEAR-dup index: batch docs that share LSH bands with the
     indexed corpus and verify at Jaccard >= threshold are dropped; the
     probe joins the bucketed index tables with NO Exchange on the index
@@ -131,8 +131,18 @@ def test_minhash_index_near_dup_ingestion(spark):
 
     from pyspark.sql import functions as F
 
+    from cypher_for_apache_flink_spark.functions import layout
     from cypher_for_apache_flink_spark.functions.dedup import (
         near_dup_against_index, write_minhash_index)
+    # the probe's plan is the one the loser ids are materialized from
+    probes = []
+    materialize = layout.materialize
+
+    def spy(df, *args, **kwargs):
+        probes.append(df._jdf.queryExecution().executedPlan().toString())
+        return materialize(df, *args, **kwargs)
+
+    monkeypatch.setattr(layout, "materialize", spy)
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "completely different reference text about spark engines")],
@@ -148,7 +158,7 @@ def test_minhash_index_near_dup_ingestion(spark):
         try:
             out = near_dup_against_index(spark, batch, "mh_idx",
                                          threshold=0.5)
-            plan = out._jdf.queryExecution().executedPlan().toString()
+            [plan] = probes
             assert {r.doc_id for r in out.collect()} == {11}
             # index-side scans are bucketed and read with no Exchange
             # directly above them
