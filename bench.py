@@ -200,14 +200,14 @@ def main():
                 metrics[name] = _stage_metrics_delta(spark, before)
             if i >= warmups:
                 samples.append(dt)
-            # Drop the run's cache leases NOW: lazy finalization would let
+            # Drop the run's results NOW: lazy finalization would let
             # cached corpora from prior runs pile up and perturb later
             # timings (spread, not median, but keep the noise down).
             gc.collect()
-        # stragglers (e.g. a lease whose finalizer hasn't run) must not
-        # perturb the NEXT query's samples; the forced full GC pays the
-        # collection debt of the freed blocks NOW instead of as a major
-        # pause in the middle of the next query's first sample
+        # stragglers (e.g. a checkpoint the ContextCleaner hasn't freed)
+        # must not perturb the NEXT query's samples; the forced full GC
+        # pays the collection debt of the freed blocks NOW instead of as a
+        # major pause in the middle of the next query's first sample
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         samples.sort()
@@ -419,7 +419,7 @@ def main():
                   file=sys.stderr)
             # NO clearCache here: `mid` must stay cached across the three
             # queries (each one's derivation would otherwise re-run inside
-            # its timed region); the gc frees the query's own leases
+            # its timed region); the gc frees the query's own checkpoints
             gc.collect()
             spark.sparkContext._jvm.System.gc()
         mid.unpersist()

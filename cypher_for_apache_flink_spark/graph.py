@@ -169,20 +169,16 @@ class PropertyGraph:
                         procedures=procedures)
 
     def close(self) -> None:
-        """Release the memoized implicit session and everything its plan
-        cache pins (ADVICE r8): the graph <-> session reference pair is a
-        cycle, so short-lived graphs otherwise wait for a cyclic-GC pass
-        before their CacheLease-persisted DataFrames leave executor
-        storage.  Mirrors the TCK runner's eviction (tck/runner.py:150);
+        """Drop the memoized implicit session and its plan cache (ADVICE
+        r8): the graph <-> session reference pair is a cycle, so
+        short-lived graphs otherwise wait for a cyclic-GC pass before the
+        cached plans let go of the checkpoints they read (a var-length
+        expand's slim edges, for one), which Spark's ContextCleaner then
+        frees.  Mirrors the TCK runner's eviction (tck/runner.py);
         idempotent, and the graph remains usable — the next cypher()
         simply builds a fresh session."""
         s = self.__dict__.pop("_implicit_session", None)
         if s is not None:
-            for entry in s._plan_cache.values():
-                lease = entry[4] if isinstance(entry, tuple) \
-                    and len(entry) > 4 else None
-                if lease is not None:
-                    lease.release()
             s._plan_cache.clear()
 
     def __enter__(self) -> "PropertyGraph":

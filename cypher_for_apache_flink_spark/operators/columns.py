@@ -55,7 +55,7 @@ class ExprContext:
     def dtype(self, col_name: str):
         try:
             return self.df.schema[col_name].dataType
-        except Exception:
+        except KeyError:
             return None
 
 
@@ -279,7 +279,7 @@ def spark_dtype(expr: E.Expr, ctx: ExprContext):
         if isinstance(ot, T.StructType):
             try:
                 return ot[expr.key].dataType
-            except Exception:
+            except KeyError:
                 return None
         if isinstance(expr.owner, E.Var):
             hv = ctx.header.var(expr.owner.name)

@@ -86,16 +86,11 @@ def resolve_vars(expr, header: Header):
 
 class Planner:
     def __init__(self, session, graph, params: dict | None = None):
-        from ..cache import CacheLease
-
         self.session = session
         self.graph = graph
         self.params = params or {}
         self._anon = 0
         self.result_graph = None   # set by RETURN GRAPH
-        # query-scoped caches (var-length slim edges / frontiers) released
-        # when the result is garbage-collected (cache.py)
-        self.cache_lease = CacheLease()
         # path var -> ([node element vars], [rel element vars], has_varlen)
         self._paths: dict = {}
         # variables DELETEd earlier in the statement: label/property access
@@ -943,11 +938,10 @@ class Planner:
             how="left" if agg_only else "inner", fills=fills)
 
     def _adopt(self, sp: "Planner"):
-        """Thread a sub-planner's graph mutations and cache leases back."""
+        """Thread a sub-planner's graph mutations back."""
         self.graph = sp.graph
         if getattr(sp, "_mutated", False):
             self._mutated = True
-        self.cache_lease.dfs.extend(sp.cache_lease.dfs)
 
     def _expose_subquery(self, records, key, sub_key_col, sub_rec, sub_outs,
                          how="inner", fills=None):
@@ -1479,57 +1473,70 @@ class Planner:
         rel_src = rel.header.col(src_expr)
         rel_dst = rel.header.col(dst_expr)
         rel_id = rel.header.col(rv)
-        # The hop loop only reads (id, src, dst) — prune BEFORE caching so
-        # the reused edge table is 3 columns wide, not every rel property
+        # The hop loop only reads (id, src, dst) — prune BEFORE reusing it
+        # so the reused edge table is 3 columns wide, not every rel property
         # (the reference's InsertCachingOperators heuristic,
         # RelationalOptimizer.scala:41-92, on the pruned scan).
         slim = rel.df.select(F.col(rel_id).alias("__vl_e"),
                              F.col(rel_src).alias("__vl_s"),
                              F.col(rel_dst).alias("__vl_d"))
-        # Cache only when the hop loop reads the edge table 3+ times: at
-        # two reads the cache materialization costs more than a second
-        # column-pruned parquet scan (measured 2.8s vs 1.6s at sf0.1).
-        if unbounded or hi > 2:
-            slim = self.cache_lease.add(slim.cache())
-        for k in range(1, hi + 1):
-            step_sfx = f"__s{k}_{rp.var}"
-            step_df = slim.select(
-                F.col("__vl_e").alias(f"e{step_sfx}"),
-                F.col("__vl_s").alias(f"src{step_sfx}"),
-                F.col("__vl_d").alias(f"dst{step_sfx}"),
-            )
-            joined = frontier.join(
-                step_df, F.col(end_col) == F.col(f"src{step_sfx}"), "inner")
-            # relationship isomorphism per step
-            # (VarLengthExpandPlanner.scala:178-179)
-            for prev in edge_cols:
-                joined = joined.where(F.col(f"e{step_sfx}") != F.col(prev))
-            frontier = joined.drop(end_col, f"src{step_sfx}") \
-                .withColumnRenamed(f"dst{step_sfx}", end_col)
-            edge_cols.append(f"e{step_sfx}")
-            if track_nodes:
-                frontier = frontier.withColumn(f"pn{step_sfx}", F.col(end_col))
-                hop_node_cols.append(f"pn{step_sfx}")
+        # Reuse it only when the hop loop reads it 3+ times: at two reads
+        # the materialization costs more than a second column-pruned
+        # parquet scan (measured 2.8s vs 1.6s at sf0.1).  A bounded
+        # expand's result reads the slim table, so it is a checkpoint, freed
+        # by Spark's ContextCleaner once no plan reads it.  The unbounded
+        # result reads only its hop checkpoints: the slim table serves the
+        # loop's own jobs and is unpersisted before the expand returns.
+        if unbounded:
+            slim = slim.persist()
+        elif hi > 2:
+            slim, _ = materialize(slim)
+        try:
+            for k in range(1, hi + 1):
+                step_sfx = f"__s{k}_{rp.var}"
+                step_df = slim.select(
+                    F.col("__vl_e").alias(f"e{step_sfx}"),
+                    F.col("__vl_s").alias(f"src{step_sfx}"),
+                    F.col("__vl_d").alias(f"dst{step_sfx}"),
+                )
+                joined = frontier.join(
+                    step_df, F.col(end_col) == F.col(f"src{step_sfx}"),
+                    "inner")
+                # relationship isomorphism per step
+                # (VarLengthExpandPlanner.scala:178-179)
+                for prev in edge_cols:
+                    joined = joined.where(F.col(f"e{step_sfx}") != F.col(prev))
+                frontier = joined.drop(end_col, f"src{step_sfx}") \
+                    .withColumnRenamed(f"dst{step_sfx}", end_col)
+                edge_cols.append(f"e{step_sfx}")
+                if track_nodes:
+                    frontier = frontier.withColumn(f"pn{step_sfx}",
+                                                   F.col(end_col))
+                    hop_node_cols.append(f"pn{step_sfx}")
+                if unbounded:
+                    # Materialize each hop once so the fixpoint test
+                    # doesn't recompute the whole join chain.  A checkpoint
+                    # (not a persist): each hop's plan must TRUNCATE or the
+                    # logical plan grows quadratically with depth and a
+                    # ~20-hop frontier OOMs the DRIVER during planning (same
+                    # lesson as functions/components.py's label-propagation
+                    # loop).  Spark's ContextCleaner frees each checkpoint
+                    # once no plan reads it any more.
+                    frontier, n_frontier = materialize(frontier)
+                    if n_frontier == 0:
+                        if not staged:
+                            staged.append(stage(frontier, k))
+                        break
+                    if k == hi:
+                        raise PlanError(
+                            f"unbounded var-length expand exceeded {hi} "
+                            "hops without converging; give an explicit "
+                            "upper bound")
+                if k >= lo:
+                    staged.append(stage(frontier, k))
+        finally:
             if unbounded:
-                # Materialize each hop once so the fixpoint test doesn't
-                # recompute the whole join chain.  A checkpoint (not a
-                # persist): each hop's plan must TRUNCATE or the logical
-                # plan grows quadratically with depth and a ~20-hop
-                # frontier OOMs the DRIVER during planning (same lesson as
-                # functions/components.py's label-propagation loop).
-                # Spark's ContextCleaner frees each checkpoint once no
-                # plan reads it any more.
-                frontier, n_frontier = materialize(frontier)
-                if n_frontier == 0:
-                    if not staged:
-                        staged.append(stage(frontier, k))
-                    break
-                if k == hi:
-                    raise PlanError(
-                        f"unbounded var-length expand exceeded {hi} hops "
-                        "without converging; give an explicit upper bound")
-            if k >= lo:
-                staged.append(stage(frontier, k))
+                slim.unpersist()
 
         # Union the per-length frontiers FIRST, then resolve the destination
         # once — one join for the whole expand instead of one per length
@@ -1982,7 +1989,6 @@ class Planner:
         across sibling subplans."""
         inner = Planner(self.session, self.graph, self.params)
         inner._anon = self._anon + 100
-        inner.cache_lease = self.cache_lease   # one lease per root query
         return inner
 
     @staticmethod

@@ -204,8 +204,6 @@ def plan_shortest_path(pl, records, part: A.PatternPart,
                                F.col(b_col).alias("b"))
              .where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
              .dropDuplicates())
-    if edges is not None:
-        edges = pl.cache_lease.add(edges.persist())
 
     spark = pl.session.spark
     sources = pairs.select("a").dropDuplicates()
@@ -241,28 +239,36 @@ def plan_shortest_path(pl, records, part: A.PatternPart,
         remaining, n_remaining = record_found(frontier, remaining,
                                               n_remaining)
 
+    if edges is not None:
+        # read by every level's join; the result reads only the loop's
+        # checkpoints, so the cache is dropped once the loop ends
+        edges = edges.persist()
     level = 0
-    while edges is not None and level < hi:
-        level += 1
-        if n_remaining == 0 or n_frontier == 0:
-            break
-        nxt = (frontier.join(edges, frontier["node"] == edges["src"])
-               .select("a", F.col("dst").alias("node"),
-                       F.concat("rels", F.array("rid")).alias("rels"),
-                       F.concat("nodes", F.array("dst")).alias("nodes")))
-        nxt = nxt.join(visited, ["a", "node"], "left_anti")
-        # finished sources stop expanding
-        nxt, n_nxt = materialize(
-            nxt.join(remaining.select("a").dropDuplicates(), ["a"],
-                     "left_semi"))
-        if n_nxt == 0:
-            break
-        if level >= lo:
-            remaining, n_remaining = record_found(nxt, remaining,
-                                                  n_remaining)
-        visited, _ = materialize(visited.unionByName(
-            nxt.select("a", "node").dropDuplicates()))
-        frontier, n_frontier = nxt, n_nxt
+    try:
+        while edges is not None and level < hi:
+            level += 1
+            if n_remaining == 0 or n_frontier == 0:
+                break
+            nxt = (frontier.join(edges, frontier["node"] == edges["src"])
+                   .select("a", F.col("dst").alias("node"),
+                           F.concat("rels", F.array("rid")).alias("rels"),
+                           F.concat("nodes", F.array("dst")).alias("nodes")))
+            nxt = nxt.join(visited, ["a", "node"], "left_anti")
+            # finished sources stop expanding
+            nxt, n_nxt = materialize(
+                nxt.join(remaining.select("a").dropDuplicates(), ["a"],
+                         "left_semi"))
+            if n_nxt == 0:
+                break
+            if level >= lo:
+                remaining, n_remaining = record_found(nxt, remaining,
+                                                      n_remaining)
+            visited, _ = materialize(visited.unionByName(
+                nxt.select("a", "node").dropDuplicates()))
+            frontier, n_frontier = nxt, n_nxt
+    finally:
+        if edges is not None:
+            edges.unpersist()
     if level >= _MAX_LEVELS and n_remaining > 0:
         raise PlanError(
             f"shortestPath() did not converge within {_MAX_LEVELS} levels",

@@ -79,23 +79,13 @@ class CypherResult:
     ending in RETURN GRAPH set ``graph`` instead (empty table)."""
 
     def __init__(self, records, outputs, graph: PropertyGraph | None = None,
-                 cache_lease=None, source_graph: PropertyGraph | None = None):
+                 source_graph: PropertyGraph | None = None):
         self.records = records
         self.outputs = outputs
         self.graph = graph
         # the graph the query ran against — lets to_maps() hydrate RETURNed
         # path values (node/rel id arrays) into full entities
         self.source_graph = source_graph
-        # planner caches (var-length slim edges/frontiers) stay alive while
-        # this result or any DataFrame taken from it is reachable, then
-        # auto-unpersist (cache.py); release() frees them eagerly.
-        self._cache_lease = cache_lease
-
-    def release(self) -> None:
-        """Unpersist the query-scoped planner caches now (they are also
-        freed automatically when the result and its DataFrames are GC'd)."""
-        if self._cache_lease is not None:
-            self._cache_lease.release()
 
     @property
     def df(self) -> DataFrame:
@@ -106,12 +96,7 @@ class CypherResult:
                 continue
             seen.add(name)
             cols.append(F.col(phys).alias(name))
-        out = self.records.df.select(*cols)
-        if self._cache_lease is not None and self._cache_lease.dfs:
-            # co-own the lease: the caches live until the last derived
-            # DataFrame is collected and garbage-collected
-            out._cypher_cache_lease = self._cache_lease
-        return out
+        return self.records.df.select(*cols)
 
     def collect(self):
         return self.df.collect()
@@ -311,7 +296,7 @@ _UNFREEZABLE = object()
 #: plan-cache admission marker: a key seen ONCE.  Entries are admitted on
 #: the SECOND sighting (2Q-style), so one-shot queries — ad-hoc
 #: exploration, test corpora — retain ~100 bytes instead of a fully
-#: analyzed plan + its lease-pinned cached blocks.  (Round 8: first-use
+#: analyzed plan + the checkpoints it reads.  (Round 8: first-use
 #: admission held up to PLAN_CACHE_MAX analyzed plans per session and a
 #: 1,784-scenario TCK run exhausted a 4g driver heap.)  A repeated
 #: dashboard replans its queries exactly twice, then hits forever — the
@@ -483,24 +468,10 @@ class CypherSession:
                 # id() keys can be reused after GC: verify graph identity
                 elif hit is not None and hit[0]() is graph:
                     self.plan_cache_stats["hits"] += 1
-                    _, records, outputs, src_graph, lease, leased = hit
-                    # The lease is SHARED by every result this entry has
-                    # produced; if an earlier holder called release(),
-                    # re-pin the plan's frames so later hits keep the
-                    # repeated-dashboard speedup (ADVICE r8).  persist()
-                    # only re-marks — recompute happens lazily.
-                    if leased and len(lease.dfs) < len(leased):
-                        for d in leased:
-                            if not any(d is x for x in lease.dfs):
-                                try:
-                                    d.persist()
-                                except Exception:
-                                    continue
-                                lease.add(d)
+                    _, records, outputs, src_graph = hit
                     # LRU touch
                     self._plan_cache[key] = self._plan_cache.pop(key)
                     return CypherResult(records, outputs, graph=None,
-                                        cache_lease=lease,
                                         source_graph=src_graph)
                 self.plan_cache_stats["misses"] += 1
 
@@ -528,15 +499,9 @@ class CypherSession:
             if len(self._plan_cache) >= self.PLAN_CACHE_MAX:
                 self._plan_cache.pop(next(iter(self._plan_cache)))
             self._plan_cache[key] = (
-                (weakref.ref(graph), records, outputs,
-                 hydration_graph, planner.cache_lease,
-                 # snapshot of the leased frames, so a hit can re-pin
-                 # them after a prior holder's release() (ADVICE r8)
-                 tuple(planner.cache_lease.dfs)
-                 if planner.cache_lease is not None else ())
+                (weakref.ref(graph), records, outputs, hydration_graph)
                 if admit else _SEEN_ONCE)
         return CypherResult(records, outputs, graph=planner.result_graph,
-                            cache_lease=planner.cache_lease,
                             source_graph=hydration_graph)
 
     def _catalog_statement(self, stmt, params) -> "CypherResult":

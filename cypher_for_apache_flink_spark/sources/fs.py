@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -56,7 +57,7 @@ def format_available(spark: SparkSession, fmt: str) -> bool:
             spark.createDataFrame([], "x int").write \
                 .mode("overwrite").format("avro").save(os.path.join(d, "p"))
         return True
-    except Exception:
+    except AnalysisException:   # "Failed to find data source: avro"
         return False
 
 

@@ -125,10 +125,10 @@ def _interpret(steps) -> _Plan:
 
 # LRU-bounded (round 8): an unbounded cache plus the implicit-session
 # memo on every graph (graph.py cypher()) retained each graph's session
-# plan cache — up to 128 fully-analyzed plans with their CacheLease-
-# pinned blocks PER GRAPH — and a 1,784-scenario run exhausted a 4g
-# driver heap.  Evicting the oldest graph drops its session, plan cache
-# and leases to GC (cache.py auto-unpersists on finalize), which bounds
+# plan cache — up to 128 fully-analyzed plans, and the checkpoints they
+# read, PER GRAPH — and a 1,784-scenario run exhausted a 4g driver heap.
+# Evicting the oldest graph drops its session and plan cache to GC (the
+# ContextCleaner frees checkpoints no plan reads any more), which bounds
 # JVM retention while keeping the reuse win for clustered scenarios
 # (features repeat the same Background/CREATE text back-to-back).
 _GRAPH_CACHE_MAX = 48

@@ -1,5 +1,12 @@
-"""Query-scoped cache hygiene (VERDICT r3 #6/#4): planner caches are
-released once the result is done; plan construction never runs jobs."""
+"""Query-scoped cache hygiene (VERDICT r3 #6/#4).
+
+One lifetime rule for the Cypher planner and the ``functions/`` operators:
+what a result reads after planning is a ``layout.materialize`` checkpoint,
+which Spark's ContextCleaner frees once no plan reads it, and every frame
+persisted for the planner's or operator's own jobs is unpersisted before
+it returns.  Planning may run jobs (the unbounded var-length and
+shortestPath loops, and the slim-edge checkpoint of a bounded var-length
+expand over 3+ hops); a result holds nothing that needs releasing."""
 
 import gc
 
@@ -9,11 +16,6 @@ from pyspark.sql import functions as F
 
 from cypher_for_apache_flink_spark import CypherSession, PropertyGraph
 from cypher_for_apache_flink_spark.functions import dedup, graph_algos
-
-
-def _cached_rdds(spark):
-    return [i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.numCachedPartitions() > 0]
 
 
 @pytest.fixture()
@@ -27,32 +29,15 @@ def chain_graph(spark):
 
 
 def _cached_ids(spark):
-    return {i.id() for i in _cached_rdds(spark)}
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if i.numCachedPartitions() > 0}
 
 
-def test_var_length_cache_released_explicitly(spark, chain_graph):
-    # track by RDD id, not by count: other tests' dead leases drain
-    # asynchronously and would offset the +1/-1 this test asserts
-    before = _cached_ids(spark)
-    res = CypherSession.for_graph(chain_graph).cypher(
-        "MATCH (a:N)-[:R*1..3]->(b:N) RETURN count(*) AS n")
-    assert res.collect()[0]["n"] == 19 + 18 + 17
-    # the slim pruned edge cache was materialized by the collect
-    fresh = _cached_ids(spark) - before
-    assert fresh
-    res.release()
-    assert not (_cached_ids(spark) & fresh)
-
-
-def test_var_length_cache_released_by_gc(spark, chain_graph):
-    before = len(_cached_rdds(spark))
-    res = CypherSession.for_graph(chain_graph).cypher(
-        "MATCH (a:N)-[:R*2..4]->(b:N) RETURN count(*) AS n")
-    df = res.df
-    df.collect()
-    del res, df
-    gc.collect()
-    assert len(_cached_rdds(spark)) <= before
+def _all_checkpoints(spark, ids):
+    # a helper, so no handle on the JVM's RDD map outlives the check and
+    # keeps the RDDs reachable
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    return all(persisted[i].rdd().isLocallyCheckpointed() for i in ids)
 
 
 def _freed_after_jvm_gc(spark, ids, rounds=20):
@@ -70,6 +55,40 @@ def _freed_after_jvm_gc(spark, ids, rounds=20):
     return False
 
 
+def test_var_length_cache_released_by_gc(spark, chain_graph):
+    # track by RDD id, not by count: other tests' dead checkpoints drain
+    # asynchronously and would offset a count
+    before = _cached_ids(spark)
+    res = CypherSession.for_graph(chain_graph).cypher(
+        "MATCH (a:N)-[:R*1..3]->(b:N) RETURN count(*) AS n")
+    df = res.df
+    # the slim pruned edge table is a checkpoint built while planning
+    fresh = _cached_ids(spark) - before
+    assert fresh and _all_checkpoints(spark, fresh)
+    assert df.collect()[0]["n"] == 19 + 18 + 17
+    del res, df
+    assert _freed_after_jvm_gc(spark, fresh)
+
+
+def test_dropping_one_result_keeps_anothers_checkpoint(spark, chain_graph):
+    """Two var-length results over the same rel type each read their own
+    slim-edge checkpoint: dropping one leaves the other's plan reading
+    its checkpoint, not rescanning the rel table."""
+    s = CypherSession.for_graph(chain_graph)
+    before = _cached_ids(spark)
+    r1 = s.cypher("MATCH (a:N)-[:R*1..3]->(b:N) RETURN count(*) AS n")
+    ids1 = _cached_ids(spark) - before
+    r2 = s.cypher("MATCH (a:N)-[:R*1..4]->(b:N) RETURN count(*) AS n")
+    ids2 = _cached_ids(spark) - before - ids1
+    assert ids1 and ids2
+    del r1
+    assert _freed_after_jvm_gc(spark, ids1)
+    assert ids2 <= _cached_ids(spark)
+    plan = r2.df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "InMemoryTableScan" not in plan
+    assert r2.collect()[0]["n"] == 19 + 18 + 17 + 16
+
+
 @pytest.fixture()
 def chain6(spark):
     nodes = {frozenset({"N"}): spark.createDataFrame(
@@ -80,19 +99,28 @@ def chain6(spark):
     return PropertyGraph(nodes, rels, name="chain6")
 
 
-def test_unbounded_frontier_caches_released(spark, chain6):
-    # The unbounded loop materializes one frontier per hop (plan
-    # truncation — a deep chain used to OOM the DRIVER during planning).
-    # The checkpoints are freed by Spark's ContextCleaner once no plan
-    # reads them; explicit release only drops the slim edge cache.
+_LOOP_QUERIES = {
+    "var_length": ("MATCH (a:N)-[:R*]->(b:N) WHERE a.v = 0 "
+                   "RETURN count(*) AS n", 5),
+    "shortest_path": ("MATCH p = shortestPath((a:N {v: 0})-[:R*]->"
+                      "(b:N {v: 2})) RETURN length(p) AS n", 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LOOP_QUERIES))
+def test_unbounded_frontier_caches_released(spark, chain6, name):
+    """The unbounded var-length and shortestPath loops materialize one
+    frontier per hop (plan truncation — a deep chain used to OOM the
+    DRIVER during planning) and unpersist the edge table they persist for
+    their own jobs before cypher() returns.  What stays persisted is the
+    checkpoints the result reads, freed by Spark's ContextCleaner once no
+    plan reads them."""
+    query, want = _LOOP_QUERIES[name]
     before = _cached_ids(spark)
-    res = CypherSession.for_graph(chain6).cypher(
-        "MATCH (a:N)-[:R*]->(b:N) WHERE a.v = 0 RETURN count(*) AS n")
-    assert res.collect()[0]["n"] == 5
+    res = CypherSession.for_graph(chain6).cypher(query)
     fresh = _cached_ids(spark) - before
-    assert fresh
-    res.release()
-    assert res.collect()[0]["n"] == 5
+    assert fresh and _all_checkpoints(spark, fresh)
+    assert res.collect()[0]["n"] == want
     del res
     assert _freed_after_jvm_gc(spark, fresh)
 
@@ -158,13 +186,6 @@ def test_derived_result_reads_its_checkpoint(spark, name):
     assert "Range" not in plan and "InMemoryTableScan" not in plan
 
 
-def _all_checkpoints(spark, ids):
-    # a helper, so no handle on the JVM's RDD map outlives the check and
-    # keeps the RDDs reachable
-    persisted = spark.sparkContext._jsc.getPersistentRDDs()
-    return all(persisted[i].rdd().isLocallyCheckpointed() for i in ids)
-
-
 def test_minhash_shingle_cache_released_by_gc(spark):
     before = _cached_ids(spark)
     pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5)
@@ -175,40 +196,6 @@ def test_minhash_shingle_cache_released_by_gc(spark):
     assert pairs.count() > 0
     del pairs
     assert _freed_after_jvm_gc(spark, fresh)
-
-
-def test_release_after_stop_is_silent(tmp_path):
-    """``CacheLease.release()`` on a stopped SparkContext swallows the
-    Py4JJavaError that ``unpersist`` raises there."""
-    import os
-    import pathlib
-    import subprocess
-    import sys
-
-    script = tmp_path / "stopped.py"
-    script.write_text(
-        "from py4j.protocol import Py4JJavaError\n"
-        "from pyspark.sql import SparkSession\n"
-        "from cypher_for_apache_flink_spark.cache import CacheLease\n"
-        "spark = (SparkSession.builder.master('local[1]')\n"
-        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
-        "df = spark.range(3).cache()\n"
-        "df.count()\n"
-        "lease = CacheLease()\n"
-        "lease.add(df)\n"
-        "spark.stop()\n"
-        "try:\n"
-        "    df.unpersist()\n"
-        "except Py4JJavaError:\n"
-        "    print('RAISES')\n"
-        "lease.release()\n"
-        "print('RELEASED')\n")
-    repo = str(pathlib.Path(__file__).resolve().parents[1])
-    out = subprocess.run([sys.executable, str(script)], capture_output=True,
-                         text=True, timeout=300,
-                         env={**os.environ, "PYTHONPATH": repo})
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.split() == ["RAISES", "RELEASED"]
 
 
 def test_cosine_near_dup_requires_dims_not_a_job(spark):
@@ -231,35 +218,3 @@ def test_cosine_near_dup_requires_dims_not_a_job(spark):
     got = {(r["a"], r["b"]) for r in
            cosine_near_dup_pairs(vecs, threshold=0.99, dims=2).collect()}
     assert got == {(1, 2)}
-
-
-def test_release_swallows_only_py4j_java_errors(spark):
-    """A JVM-side unpersist failure (what a stopped context raises) does
-    not stop the release of the other frames; any other error surfaces."""
-    from py4j.protocol import Py4JJavaError
-
-    from cypher_for_apache_flink_spark.cache import CacheLease
-
-    class Failing:
-        def __init__(self, exc):
-            self.exc = exc
-
-        def unpersist(self):
-            raise self.exc
-
-    try:
-        # the NullPointerException a stopped context's unpersist raises
-        spark.sparkContext._jvm.java.util.Objects.requireNonNull(None)
-    except Py4JJavaError as exc:
-        java_error = exc
-    df = spark.range(3).cache()
-    df.count()
-    before = _cached_ids(spark)
-    lease = CacheLease()
-    lease.add(Failing(java_error))
-    lease.add(df)
-    lease.release()
-    assert len(_cached_ids(spark)) < len(before)
-    lease.add(Failing(RuntimeError("not a JVM error")))
-    with pytest.raises(RuntimeError):
-        lease.release()

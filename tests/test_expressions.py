@@ -168,3 +168,20 @@ def test_startnode_endnode_property_access(spark):
     row = g.cypher("MATCH ()-[r:R]->() RETURN startNode(r).nope AS x") \
         .df.collect()[0]
     assert row["x"] is None
+
+
+def test_missing_column_or_struct_key_types_as_none(spark):
+    """Type probes on an absent column or struct key answer None (the
+    caller falls back to its untyped path) rather than raising."""
+    from cypher_for_apache_flink_spark.ir import expr as E
+    from cypher_for_apache_flink_spark.operators.columns import (
+        ExprContext, spark_dtype)
+    from cypher_for_apache_flink_spark.operators.header import Header
+
+    df = spark.createDataFrame([((1,),)], "m struct<a: long>")
+    m = E.Var("m")
+    ctx = ExprContext(Header({m: "m", E.Var("gone"): "gone"}), df)
+    assert ctx.dtype("gone") is None
+    assert spark_dtype(E.Var("gone"), ctx) is None
+    assert spark_dtype(E.Property(m, "a"), ctx).typeName() == "long"
+    assert spark_dtype(E.Property(m, "b"), ctx) is None

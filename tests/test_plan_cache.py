@@ -6,7 +6,10 @@ planned DataFrame itself is memoized per (skeleton, graph, params), so a
 dashboard re-issuing the same queries skips parse+plan+Catalyst analysis.
 """
 
+import gc
+
 import pytest
+from test_cache_hygiene import _cached_ids, _freed_after_jvm_gc
 
 from cypher_for_apache_flink_spark import CypherSession, PropertyGraph
 from cypher_for_apache_flink_spark.sources.create import graph_from_create
@@ -126,45 +129,51 @@ def test_no_stale_hit_across_mutation(sess_graph):
     assert s.cypher(q, graph=g).to_maps() == [{"x": 1}]
 
 
-def test_hit_repins_after_release(spark):
-    """ADVICE r8: releasing one result's lease must not silently degrade
-    every later hit — the next hit re-persists the plan's frames."""
+@pytest.mark.parametrize("q", [
+    "MATCH (a:A)-[:R*]->(b:B) RETURN count(*) AS c",
+    "MATCH (a:A)-[:R*1..3]->(b:B) RETURN count(*) AS c",
+], ids=["unbounded", "bounded"])
+def test_hit_reads_the_same_checkpoint(spark, q):
+    """A hit reuses the admitted plan's var-length checkpoints: it builds
+    no new one, and dropping an earlier result does not free them."""
     s = CypherSession(spark)
     g = graph_from_create(
         spark, "CREATE (:A {x: 1})-[:R]->(:B), (:A {x: 2})-[:R]->(:B)")
     s.register("g", g)
-    # unbounded var-length expands lease a pruned-edge cache
-    q = "MATCH (a:A)-[:R*]->(b:B) RETURN count(*) AS c"
-    r = None
-    for _ in range(3):
-        r = s.cypher(q, graph=g)
-        assert r.to_maps() == [{"c": 2}]
-    assert s.plan_cache_stats["hits"] >= 1
-    lease = r._cache_lease
-    if lease is None or not lease.dfs:
-        pytest.skip("query plan leases no frames — nothing to re-pin")
-    n = len(lease.dfs)
-    r.release()
-    assert not lease.dfs
-    assert s.cypher(q, graph=g).to_maps() == [{"c": 2}]   # hit again
-    assert len(lease.dfs) == n          # re-pinned for later hits
+    s.cypher(q, graph=g)                                   # first sighting
+    before = _cached_ids(spark)
+    r = s.cypher(q, graph=g)                               # admitted
+    admitted = _cached_ids(spark) - before
+    assert admitted
+    assert r.to_maps() == [{"c": 2}]
+    del r
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    before_hit = _cached_ids(spark)
+    hit = s.cypher(q, graph=g)
+    assert s.plan_cache_stats["hits"] == 1
+    assert hit.to_maps() == [{"c": 2}]
+    assert admitted <= _cached_ids(spark)
+    assert not (_cached_ids(spark) - before_hit)
 
 
 def test_graph_close_releases_plan_cache(spark):
-    """ADVICE r8: close() breaks the graph<->session cycle and releases
-    every lease the plan cache pinned; the graph stays usable."""
+    """ADVICE r8: close() breaks the graph<->session cycle, so the
+    checkpoints the cached plans read are freed; the graph stays usable."""
     g = graph_from_create(
         spark, "CREATE (:A {x: 1})-[:R]->(:B), (:A {x: 2})-[:R]->(:B)")
     q = "MATCH (a:A)-[:R*]->(b:B) RETURN count(*) AS c"
+    before = _cached_ids(spark)
     for _ in range(3):
         assert g.cypher(q).to_maps() == [{"c": 2}]
     s = g.__dict__["_implicit_session"]
-    leases = [e[4] for e in s._plan_cache.values()
-              if isinstance(e, tuple) and len(e) > 4 and e[4] is not None]
+    pinned = _cached_ids(spark) - before
+    assert pinned
     g.close()
     assert "_implicit_session" not in g.__dict__
     assert not s._plan_cache
-    assert all(not lz.dfs for lz in leases)
+    del s
+    assert _freed_after_jvm_gc(spark, pinned)
     # idempotent + graph still works (fresh session)
     g.close()
     assert g.cypher(q).to_maps() == [{"c": 2}]

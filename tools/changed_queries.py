@@ -98,7 +98,6 @@ PATH_FAMILIES = {
     PKG + "operators/": ["cypher"],
     PKG + "ir/": ["cypher"],
     PKG + "graph.py": ["cypher"],
-    PKG + "cache.py": ["cypher"],
     PKG + "session.py": ["cypher"],
     PKG + "errors.py": [],            # error paths produce no result rows
     PKG + "tck/": [],                 # TCK harness: no driver rows
