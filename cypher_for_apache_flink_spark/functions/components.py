@@ -5,15 +5,16 @@ Without it, chains break: A~B and B~C (but not A~C) would keep both A and C
 if deduplication only looks at pairs.  Components give each chain one
 representative.
 
-Scale design: iterative min-label propagation entirely in DataFrame ops —
-per round one join edges⋈labels + one groupBy-min, both shuffling on node
-ids.  Rounds needed = component diameter, which for near-duplicate clusters
-is tiny (dups of a doc are dups of each other, so diameters of 2-4 dominate
-even at corpus scale).  Each round's labels are cached and convergence is
-checked with a cheap anti-equality probe, mirroring the standard
-MapReduce-CC formulation (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14 — the small-star contraction specialises to
-min-label propagation on small-diameter graphs).
+Scale design: min-label propagation entirely in DataFrame ops, by the one
+min-label kernel (:func:`_min_label_fixpoint`) that also runs the coloring
+of ``graph_algos.strongly_connected_components``.  A round is one join of
+the label state with the edges (only nodes whose label improved last round
+send) and one aggregate, cut by one severed ``layout.materialize`` whose
+job also counts the improved labels; a round without improvements is the
+fixpoint.  Connected components add pointer jumping to the same join, so
+a path of n links closes in about log2(n) rounds, not n (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14, on label
+contraction in MapReduce-style rounds).
 """
 from __future__ import annotations
 
@@ -25,76 +26,102 @@ from . import layout
 
 def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
                          max_iter: int = 25) -> DataFrame:
-    """(node, component) for every node in ``pairs``; the component id is
-    the minimum node id in the component."""
-    # Materialize the (possibly expensive) pair computation exactly once —
-    # nodes, edges, and every round derive from the checkpointed copy.
-    pairs, _ = layout.materialize(
-        pairs.select(F.col(a).alias("a"), F.col(b).alias("b")))
-    nodes = (pairs.select(F.col("a").alias("node"))
-             .unionByName(pairs.select(F.col("b").alias("node")))
-             .distinct())
-    # localCheckpoint (not cache): each round's plan must TRUNCATE, or the
-    # labels⋈labels convergence probe doubles the logical plan every
-    # iteration and planning itself blows up long before the data does.
-    labels, _ = layout.materialize(
-        nodes.select("node", F.col("node").alias("cc")))
-    bi = (pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-          .unionByName(pairs.select(F.col("b").alias("u"),
-                                    F.col("a").alias("v"))))
+    """(node, cc) for every node in ``pairs``; ``cc`` is the minimum node
+    id in the node's component.  Runs at most ``max_iter`` rounds and
+    raises RuntimeError when the labels still improve in the last one."""
+    # the pairs are read once, into both orientations of every pair; min
+    # is idempotent, so duplicate edges cost rows, not correctness
+    edges, _ = layout.materialize(
+        pairs.select(F.explode(F.array(
+            F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+            F.struct(F.col(b).alias("src"), F.col(a).alias("dst"))))
+            .alias("__e"))
+        .select("__e.*"))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    labels, converged = _min_label_fixpoint(nodes, edges, max_iter - 1,
+                                            jump=True)
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            "(component diameter exceeds the bound — raise max_iter)")
+    return labels.select("node", F.col("label").alias("cc"))
 
-    # Pointer doubling is CAPPED (round 10, ADVICE r9): the doubling step
-    # self-joins the per-iteration label state, the exact iterated-
-    # self-join shape measured (SCC fixpoint experiment, graph_algos.py)
-    # to DOUBLE per-iteration driver time past ~15 rounds despite
-    # localCheckpoint truncation.  14 doubling rounds already chase
-    # chains of 2^14 = 16k links — beyond any realistic near-duplicate
-    # component diameter — so later iterations (reachable only under an
-    # adversarial max_iter bump) fall back to plain edge propagation,
-    # which stays flat per iteration indefinitely.
-    doubling_rounds = min(max_iter, 14)
-    for it in range(max_iter):
-        neighbor_min = (bi.join(labels.withColumnRenamed("node", "u")
-                                .withColumnRenamed("cc", "ucc"), "u")
-                        .groupBy(F.col("v").alias("node"))
-                        .agg(F.min("ucc").alias("ncc")))
-        prop = (labels.join(neighbor_min, "node", "left")
-                .select("node",
-                        F.least(F.col("cc"),
-                                F.coalesce("ncc", "cc")).alias("cc"),
-                        F.col("cc").alias("__old")))
-        if it < doubling_rounds:
-            # pointer doubling: cc <- min(cc, cc[cc]).  Labels are node
-            # ids, and "m labels v" means m and v share a component, so
-            # the label of v's label is also in v's component — chasing
-            # it halves the remaining chain every round.  Turns
-            # worst-case convergence from O(diameter) rounds (a 10k-link
-            # chain would blow any budget at 100 TB) into
-            # O(log diameter), for one extra label-keyed join.
-            mapping = prop.select(F.col("node").alias("__k"),
-                                  F.col("cc").alias("__v"))
-            prop = (prop.join(mapping, prop["cc"] == F.col("__k"),
-                              "left")
-                    .select("node",
-                            F.least(F.col("cc"),
-                                    F.coalesce("__v", "cc")).alias("cc"),
-                            "__old"))
-        # Convergence probe fused into the checkpoint (round 12): labels
-        # only ever DECREASE, so "changed" is computable inline as
-        # cc != old cc — the old probe was a labels⋈labels join plus a
-        # second action per round; now the changed-count rides the job
-        # that materializes the checkpoint.  Same predicate, same
-        # rounds, identical labels.
-        new_labels, changed = layout.materialize(
-            prop.select("node", "cc",
-                        (F.col("cc") != F.col("__old")).alias("__chg")),
-            where=F.col("__chg"))
-        labels = new_labels.select("node", "cc")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(component diameter exceeds the bound — raise max_iter)")
+
+def _min_label_fixpoint(nodes: DataFrame, edges: DataFrame, max_iters: int,
+                        jump: bool) -> tuple[DataFrame, bool]:
+    """label(v) = min(v, min over edges u->v of label(u)) over the (node)
+    frame ``nodes`` and the (src, dst) frame ``edges``, to a fixpoint;
+    returns ``((node, label), converged)``.  At most ``max_iters``
+    label-improving rounds run, plus the round that finds the fixpoint:
+    ``converged`` is False when the labels still improve after them.
+
+    The state is (node, label, improved), one severed
+    ``layout.materialize`` per round, whose job also counts the improved
+    labels.  A round's messages come from ONE join of the round-start
+    state with a links frame, then one min aggregate:
+
+    - edge rows (src, dst) send label(src) only when src improved last
+      round (frontier-only, as Pregel's active vertices);
+    - with ``jump``, every node v whose label just improved to l adds a
+      jump row (l, v) that pulls label(l) in the same join: pointer
+      jumping without a second join.  label(l) reaches l and l reaches v,
+      so the pulled label is one of v's candidates; on a chain the
+      distance a label has travelled doubles each round.
+
+    The state and the messages are node-bounded, so both are broadcast
+    under :func:`layout.fits_broadcast`: the severed state's flat size
+    estimate would otherwise make the planner shuffle every edge into
+    the message join and the state into the update join each round.
+
+    Each round reads one severed checkpoint and no earlier plan, so its
+    plan does not grow: on a 65,536-link chain with ``jump`` (18 rounds,
+    local[4], 4 shuffle partitions) every round took 0.4-0.8 s, the last
+    ones no slower than the first.
+
+    SCC's coloring runs with ``jump`` off.  Its ``fixpoint_iters`` budget
+    promises that a label crosses one edge per round, so the warning
+    tells which inputs need more; jumping would change which inputs warn.
+    Jumps also rarely help on directed edges: only a path whose ids
+    ascend along its edges forms label chains to chase."""
+    state, n = layout.materialize(
+        nodes.select("node", F.col("node").alias("label"),
+                     F.lit(True).alias("improved")))
+    side = F.broadcast if layout.fits_broadcast(n) else (lambda df: df)
+    links, sends = edges.select("src", "dst"), F.col("improved")
+    if jump:
+        edges = edges.select("src", "dst", F.lit(False).alias("__j"))
+        sends = sends | F.col("__j")
+    applied = 0
+    while True:
+        if jump:
+            links = edges.unionByName(
+                state.where(F.col("improved")
+                            & (F.col("label") != F.col("node")))
+                .select(F.col("label").alias("src"),
+                        F.col("node").alias("dst"),
+                        F.lit(True).alias("__j")))
+        msgs = (links.join(side(state.withColumnRenamed("node", "src")),
+                           "src")
+                .where(sends)
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("label").alias("__m")))
+        nxt, n_imp = layout.materialize(
+            state.join(side(msgs), "node", "left")
+            .select("node",
+                    F.least(F.col("label"),
+                            F.coalesce(F.col("__m"), F.col("label")))
+                    .alias("label"),
+                    (F.col("__m") < F.col("label")).alias("improved")),
+            where=F.col("improved"), sever=True)
+        labels = nxt.select("node", "label")
+        if n_imp == 0:
+            return labels, True
+        if applied >= max_iters:
+            # the budget is spent with improvements in hand: the labels
+            # are under-propagated
+            return labels, False
+        state = nxt
+        applied += 1
 
 
 def dedup_clusters(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import layout
+from .components import _min_label_fixpoint
 
 # label_propagation and hits cut their loop state every this many
 # supersteps (the other loops read their state twice per superstep and
@@ -1561,8 +1562,9 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
        levels may be incomplete: it assigns nothing, and every survivor
        goes to the coloring, as if there were no pivot phase.
     3. COLORING (Orzan 2004) on what is left: forward and backward
-       min-label fixpoints (:func:`_min_label_fixpoint`) over the
-       leftover subgraph, run as two concurrent driver threads.  v is
+       min-label fixpoints over the leftover subgraph (the kernel of
+       ``components.connected_components``, without its pointer jumps),
+       run as two concurrent driver threads.  v is
        assigned fwd(v) exactly when fwd(v) == bwd(v) (m reaches v and v
        reaches m => v is in SCC(m)); the rest stays for the next outer
        round on the shrunken subgraph.  Adversarial chains of nested
@@ -1675,13 +1677,17 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
         # checkpointed subgraph, and each is a sequential chain of tiny
         # driver-latency-bound jobs -- run them as two concurrent driver
         # threads so one chain's scheduling gaps back-fill the other's.
-        # inheritable_thread_target hands the caller's job group and
-        # description to the pool threads.
+        # inheritable_thread_target hands the caller's job group,
+        # description and session tags to the pool threads; each thread
+        # gets its own wrapper, since the threads that share one wrapper
+        # share one local-properties object.
         with ThreadPoolExecutor(max_workers=2) as pool:
             fwd_f, bwd_f = (
-                pool.submit(inheritable_thread_target(_min_label_fixpoint),
-                            remaining, part.where(F.col("dir") == d),
-                            fixpoint_iters)
+                pool.submit(
+                    inheritable_thread_target(edges.sparkSession)(
+                        _min_label_fixpoint),
+                    remaining, part.where(F.col("dir") == d),
+                    fixpoint_iters, jump=False)
                 for d in (0, 1))
             fwd, fwd_ok = fwd_f.result()
             bwd, bwd_ok = bwd_f.result()
@@ -1718,56 +1724,6 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 8,
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _min_label_fixpoint(nodes: DataFrame, ed: DataFrame,
-                        fixpoint_iters: int) -> tuple[DataFrame, bool]:
-    """label(v) = min(v, min over edges u->v of label(u)) over ``nodes``
-    and the (src, dst) edges ``ed``, to a fixpoint; returns ``(labels,
-    converged)``.  Only IMPROVED labels re-enter the frontier.
-
-    Pointer doubling (label-of-label, as connected_components does) is
-    reachability-sound here too but deliberately NOT used: it only
-    accelerates cycles whose ids ascend along their edges (in the
-    descending alignment nothing but the true minimum ever improves a
-    label, so no chains form to chase), and -- measured in this Spark
-    version -- iterating a state frame through a self-join makes
-    per-iteration driver time DOUBLE past ~15 iterations with constant
-    plans/stages/tasks, turning a 30-iteration fixpoint into minutes.
-    Edge-only propagation stays flat per iteration indefinitely (same
-    experiment), so a generous budget is cheap: unused iterations cost
-    nothing after the early exit."""
-    labels, _ = layout.materialize(
-        nodes.select("node", F.col("node").alias("label")))
-    frontier = labels
-    applied = 0
-    while True:
-        cand = (frontier.join(ed, frontier["node"] == ed["src"])
-                .select(F.col("dst").alias("node"), F.col("label"))
-                .groupBy("node").agg(F.min("label").alias("label")))
-        # ONE materialization per iteration (round 11): the new labels
-        # and the improvement flag ride the same left join -- label'(v) =
-        # min(label(v), cand(v)) -- and the improved-count rides the
-        # checkpoint job (round 12, layout.materialize with a predicate);
-        # the frontier and the convergence probe are cheap filters over
-        # its partitions.
-        nxt, n_imp = layout.materialize(
-            labels.join(cand.withColumnRenamed("label", "__c"), "node", "left")
-            .select("node",
-                    F.least(F.col("label"),
-                            F.coalesce(F.col("__c"), F.col("label")))
-                    .alias("label"),
-                    (F.col("__c") < F.col("label")).alias("__imp")),
-            where=F.col("__imp"), sever=True)
-        if n_imp == 0:
-            return labels, True
-        if applied >= fixpoint_iters:
-            # budget exhausted WITH a non-empty improvement frontier in
-            # hand: the labels are under-propagated
-            return labels, False
-        labels = nxt.select("node", "label")
-        frontier = nxt.where(F.col("__imp")).select("node", "label")
-        applied += 1
 
 
 def scc_sql_oracle(edges_sql: str) -> str:
@@ -2506,8 +2462,8 @@ def louvain(edges: DataFrame, rounds: int = 16,
             # back-fills cores while the bigger contraction plans and
             # shuffles.  Actions are thread-safe; each future carries
             # its own plan, and inheritable_thread_target hands it the
-            # caller's job group and description.
-            ctot_f = pool.submit(inheritable_thread_target(
+            # caller's job group, description and session tags.
+            ctot_f = pool.submit(inheritable_thread_target(spark)(
                 lambda c=ctot, b=best: layout.materialize(
                     c.join(small(b), "c", "left")
                     .groupBy(F.coalesce(F.col("__new"), F.col("c"))

@@ -1135,45 +1135,84 @@ def test_scc_empty_and_self_loop_inputs(spark):
                       .collect())) == [(1, 1), (2, 2)]
 
 
-def _jobs_in_group(spark, run):
+def _jobs_in_group(spark, monkeypatch, run):
     """(jobs the status store files under a job group set around
-    ``run``, jobs submitted meanwhile)."""
+    ``run``, (id, name) of each job missing a session tag added around
+    it, jobs submitted meanwhile).  Fails when pyspark warns that a
+    thread target was wrapped without the session, which drops the
+    tags."""
+    import uuid
+    import warnings
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
-    group = f"probe-{id(run)}"
+    group = tag = f"probe-{uuid.uuid4().hex}"
+    counting = f"{tag}-count"
+    count_rows = layout.count_rows
+
+    def marked(df):
+        # the RDD count runs outside any SQL execution, so no session tag
+        # reaches it, from any thread: its jobs are marked instead
+        old = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(counting)
+        try:
+            return count_rows(df)
+        finally:
+            sc.setLocalProperty("spark.job.description", old)
+
+    monkeypatch.setattr(layout, "count_rows", marked)
     first = jsc.dagScheduler().nextJobId()
     sc.setJobGroup(group, "job group inheritance probe")
+    spark.addTag(tag)
     try:
-        run()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run()
     finally:
+        spark.removeTag(tag)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     end = jsc.dagScheduler().nextJobId()
+    assert not [w for w in caught if "Tags will not be inherited"
+                in str(w.message)]
     jsc.listenerBus().waitUntilEmpty(60_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), end - first
+    store = jsc.statusStore()
+
+    def tagged(jid):
+        # a session tag reaches a job as spark-session-<id>-...-<tag>
+        job = store.job(jid)
+        tags, about = job.jobTags(), job.description()
+        return (about.isDefined() and about.get() == counting
+                or any(tags.apply(i).endswith("-" + tag)
+                       for i in range(tags.size())))
+
+    return (len(sc.statusTracker().getJobIdsForGroup(group)),
+            [(j, store.job(j).name()) for j in range(first, end)
+             if not tagged(j)], end - first)
 
 
-def test_scc_pool_threads_inherit_job_group(spark):
+def test_scc_pool_threads_inherit_job_group(spark, monkeypatch):
     """The coloring's fixpoint threads run under the caller's job group
-    (two disjoint cycles: one is left for the coloring)."""
+    and session tags (two disjoint cycles: one is left for the
+    coloring)."""
     from cypher_for_apache_flink_spark.functions.graph_algos import (
         strongly_connected_components)
     edges = spark.createDataFrame(
         [(i, (i + 1) % 5) for i in range(5)] + [(10, 11), (11, 12), (12, 10)],
         "src long, dst long")
-    grouped, total = _jobs_in_group(
-        spark, lambda: strongly_connected_components(edges).collect())
-    assert total > 0 and grouped == total
+    grouped, untagged, total = _jobs_in_group(
+        spark, monkeypatch,
+        lambda: strongly_connected_components(edges).collect())
+    assert total > 0 and grouped == total and untagged == []
 
 
-def test_louvain_pool_thread_inherits_job_group(spark):
+def test_louvain_pool_thread_inherits_job_group(spark, monkeypatch):
     from cypher_for_apache_flink_spark.functions.graph_algos import louvain
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)],
         "src long, dst long")
-    grouped, total = _jobs_in_group(
-        spark, lambda: louvain(edges, rounds=2).collect())
-    assert total > 0 and grouped == total
+    grouped, untagged, total = _jobs_in_group(
+        spark, monkeypatch, lambda: louvain(edges, rounds=2).collect())
+    assert total > 0 and grouped == total and untagged == []
 
 
 def test_random_walks_shuffled_regime_matches_broadcast(spark, monkeypatch):

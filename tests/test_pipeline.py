@@ -34,6 +34,33 @@ def test_curate_keeps_all_distinct_quality_docs(spark):
     assert set(kept.columns) == {"doc_id", "text"}
 
 
+def test_curate_transitive_stores_the_pairs_once(spark, monkeypatch):
+    """The near-dup pairs are already a checkpoint; the transitive stage
+    reads them into its edge list and never stores a bare projection of
+    them a second time."""
+    from cypher_for_apache_flink_spark.functions import layout
+    inputs = []
+    materialize = layout.materialize
+
+    def spy(df, *args, **kwargs):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        while plan.nodeName() == "Project":
+            plan = plan.children().apply(0)
+        inputs.append(plan.nodeName())
+        return materialize(df, *args, **kwargs)
+
+    monkeypatch.setattr(layout, "materialize", spy)
+    good = "the quick brown fox jumps over the lazy dog and runs far away today"
+    docs = spark.createDataFrame(
+        [(1, good + " one"), (3, good + " two"), (4, good + " three"),
+         (5, "completely different text about spark catalyst optimizer plans "
+             "and distributed shuffle execution strategies in modern engines")],
+        "doc_id long, text string")
+    kept = curate_corpus(docs, jaccard_threshold=0.3, transitive=True)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 5]
+    assert inputs and "LogicalRDD" not in inputs, inputs
+
+
 def test_curate_transitive_removes_whole_cluster(spark):
     from cypher_for_apache_flink_spark.functions.pipeline import curate_corpus
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
