@@ -110,13 +110,16 @@ def _stage_metrics_delta(spark, before_keys: set) -> dict:
     the plan + data only; executor run/CPU time is load-sensitive but far
     steadier than wall time (no scheduler idle gaps).  Stage eviction is
     harmless: the diff keys on NEW stage ids, and stage ids only grow.
+    Only COMPLETE stages count: a job's stages that never ran (a shuffle
+    map stage whose output a prior job already wrote) stay in the store
+    as SKIPPED, and which ones do can change from run to run.
     """
     tot = {"shuffle_write_bytes": 0, "shuffle_write_records": 0,
            "shuffle_read_bytes": 0, "spill_bytes": 0, "input_bytes": 0,
            "executor_run_ms": 0, "executor_cpu_ms": 0, "n_tasks": 0,
            "n_stages": 0, "peak_task_memory": 0}
     for key, sd in _stage_keys(spark):
-        if key in before_keys:
+        if key in before_keys or sd.status().toString() != "COMPLETE":
             continue
         tot["shuffle_write_bytes"] += sd.shuffleWriteBytes()
         tot["shuffle_write_records"] += sd.shuffleWriteRecords()

@@ -137,6 +137,12 @@ class PropertyGraph:
                 raise ValueError(f"rel table {rtype} lacks columns {sorted(missing)}")
             self.rel_tables[rtype] = df
         self.schema = self._derive_schema()
+        # Aligned scan frames {("nodes", labels) | ("rels", types): df},
+        # and their per-variable renames under (*that key, var name);
+        # filled by operators/records.py on first use.  Element tables are
+        # fixed at construction and mutation builds a new graph, so an
+        # entry never goes stale.
+        self._aligned_scans: dict = {}
 
     # ------------------------------------------------------------------
     def _derive_schema(self) -> GraphSchema:

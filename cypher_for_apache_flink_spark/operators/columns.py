@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -19,6 +20,22 @@ from pyspark.sql import types as T
 from ..errors import PlanError
 from ..ir import expr as E
 from .header import Header, TypeOf
+
+
+def quote(name: str) -> str:
+    """``name`` as a SQL identifier: one name part, backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def col(name: str) -> Column:
+    """``F.col(name)`` for a physical column name, parsed from SQL text.
+
+    ``F.col`` and every ``Column`` method capture the Python call site
+    while pyspark's ``spark.python.sql.dataFrameDebugging.enabled`` is on
+    (the default), about 11 py4j round trips each; ``F.expr`` takes 3.
+    Physical names are plain identifiers, so both build the same
+    unresolved attribute."""
+    return F.expr(quote(name))
 
 
 class ExprContext:
@@ -95,7 +112,7 @@ def to_column(expr: E.Expr, ctx: ExprContext) -> Column:
     # (SparkSQLExprMapper.scala:96).
     c = ctx.header.get(expr)
     if c is not None:
-        return F.col(c)
+        return col(c)
     return _compute(expr, ctx)
 
 
@@ -327,9 +344,9 @@ def _unify_list_items(cols, expr, ctx):
         actual = [f.dataType for f in ctx.df.select(
             *[c.alias(f"__it{j}") for j, c in enumerate(cols)])
             .schema.fields]
-    except Exception:
-        # Spark's own coercion failed to even analyze individual items;
-        # leave the native path to raise its (typed) error
+    except AnalysisException:
+        # Spark cannot analyze an item on its own; the native path
+        # raises that item's typed error
         return cols
     from .anyvalue import _field_compatible, unify_any_columns
     if _field_compatible(actual):       # natively unionable after all

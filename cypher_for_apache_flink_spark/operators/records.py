@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..graph import (NODE_ID, PropertyGraph, REL_ID, REL_SOURCE, REL_TARGET,
-                     _RESERVED_NODE, _RESERVED_REL, prop_phys)
+                     _RESERVED_NODE, _RESERVED_REL, prop_name, prop_phys)
 from ..ir import expr as E
+from .columns import col, quote
 from .header import Header, TypeOf, column_name, type_column_name
 
 # Graph-prefix bits reserved in the high end of the 64-bit id space
@@ -54,8 +55,95 @@ class Records:
 # alignment RelationalPlanner.alignExpressions :447-523)
 # ---------------------------------------------------------------------------
 
-def _parse_dtype(simple: str):
-    return T._parse_datatype_string(simple)
+def _prop_types(tables, reserved) -> dict:
+    """Property -> DataType across element tables, the first table's type
+    winning (``GraphSchema.union_props``), taken from the schemas' own
+    DataType objects so no type string goes to the JVM parser.  Nested
+    nullability is relaxed, as a simpleString round trip would leave it,
+    so every branch can cast to it."""
+    out: dict = {}
+    for df in tables:
+        for f in df.schema.fields:
+            if f.name not in reserved:
+                out.setdefault(prop_name(f.name, reserved),
+                               _relaxed(f.dataType))
+    return out
+
+
+def _relaxed(dt):
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_relaxed(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_relaxed(dt.keyType), _relaxed(dt.valueType), True)
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _relaxed(f.dataType))
+                             for f in dt.fields])
+    return dt
+
+
+def _typed_props(df, keys, types, reserved) -> list:
+    """A scan branch's property values: the column itself when it already
+    has the union type, else a cast (a null when the table lacks the
+    property)."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    out = []
+    for key in keys:
+        phys = prop_phys(key, reserved)
+        if have.get(phys) == types[key]:
+            out.append(quote(phys))
+        else:
+            src = F.lit(None) if phys not in have else col(phys)
+            out.append(src.cast(types[key]))
+    return out
+
+
+def sql_str(v: str):
+    """A string literal as SQL text, or a Column when it needs escaping."""
+    return f"'{v}'" if "'" not in v and "\\" not in v else F.lit(v)
+
+
+def aliased(v, name: str):
+    """SQL text or Column ``v`` as a projection item named ``name``."""
+    return f"{v} AS {quote(name)}" if isinstance(v, str) else v.alias(name)
+
+
+def project(df: DataFrame, items) -> DataFrame:
+    """One projection of SQL-text and (aliased) Column items.  Text items
+    cost one py4j round trip each under ``selectExpr`` (when every item is
+    text) and three under ``F.expr``; building the same expression with
+    ``F.col`` and ``Column`` methods costs about 11 per call while
+    pyspark's call-site capture is on (``columns.col``)."""
+    if all(isinstance(i, str) for i in items):
+        return df.selectExpr(*items)
+    return df.select(*[F.expr(i) if isinstance(i, str) else i
+                       for i in items])
+
+
+def _aligned(session, graph: PropertyGraph, key, var_name: str,
+             header: Header, branches, counts) -> Records:
+    """Scan records over the graph's memoized aligned frame for ``key``.
+
+    The frame is built once per graph (element tables are fixed and
+    mutation returns a new graph): ``branches()`` yields each table with
+    its values in header order, projected to positional ``_0 .. _n``
+    columns and unioned.  A variable names the columns with one ``toDF``,
+    memoized too, so a variable name that recurs across queries (query
+    templates) scans without a py4j round trip."""
+    memo = graph._aligned_scans
+    named = memo.get((*key, var_name))
+    if named is None:
+        df = memo.get(key)
+        if df is None:
+            for t, values in branches():
+                b = project(t, [aliased(v, f"_{i}")
+                                for i, v in enumerate(values)])
+                df = b if df is None else df.unionByName(b)
+            if all(n is not None for n in counts) and \
+                    sum(counts) <= BROADCAST_ROW_THRESHOLD:
+                df = F.broadcast(df)
+            memo[key] = df
+        named = memo[(*key, var_name)] = df.toDF(*header.columns())
+    return Records(session, header, named)
 
 
 def scan_nodes(session, graph: PropertyGraph, var_name: str,
@@ -84,30 +172,18 @@ def scan_nodes(session, graph: PropertyGraph, var_name: str,
     if not combos:
         return empty_records(session, header)
 
-    branches = []
-    for combo in combos:
-        df = graph.node_tables[combo]
-        cols = [F.col(NODE_ID).cast("long").alias(column_name(var))]
-        for lbl in all_labels:
-            cols.append(F.lit(lbl in combo).alias(column_name(E.HasLabel(var, lbl))))
-        combo_props = graph.schema.node_props[combo]
-        for key in sorted(props):
-            cname = column_name(E.Property(var, key))
-            if key in combo_props:
-                cols.append(F.col(prop_phys(key, _RESERVED_NODE))
-                            .cast(_parse_dtype(props[key])).alias(cname))
-            else:
-                cols.append(F.lit(None).cast(_parse_dtype(props[key])).alias(cname))
-        branches.append(df.select(*cols))
+    def branches():
+        types = _prop_types([graph.node_tables[c] for c in combos],
+                            _RESERVED_NODE)
+        for combo in combos:
+            df = graph.node_tables[combo]
+            yield df, [f"CAST({quote(NODE_ID)} AS BIGINT)",
+                       *[str(lbl in combo).lower() for lbl in all_labels],
+                       *_typed_props(df, sorted(props), types,
+                                     _RESERVED_NODE)]
 
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    known = [graph.stats.get(c) for c in combos]
-    if known and all(n is not None for n in known) and \
-            sum(known) <= BROADCAST_ROW_THRESHOLD:
-        out = F.broadcast(out)
-    return Records(session, header, out)
+    return _aligned(session, graph, ("nodes", frozenset(labels)), var_name,
+                    header, branches, [graph.stats.get(c) for c in combos])
 
 
 def scan_rels(session, graph: PropertyGraph, var_name: str,
@@ -116,7 +192,7 @@ def scan_rels(session, graph: PropertyGraph, var_name: str,
     subset — type pruning happens here, not in a filter)."""
     var = E.RelVar(var_name)
     rtypes = sorted(types) if types else sorted(graph.rel_tables)
-    rtypes = [t for t in rtypes if t in graph.rel_tables]
+    rtypes = tuple(t for t in rtypes if t in graph.rel_tables)
 
     props: dict = {}
     for t in rtypes:
@@ -133,33 +209,20 @@ def scan_rels(session, graph: PropertyGraph, var_name: str,
     if not rtypes:
         return empty_records(session, header)
 
-    branches = []
-    for t in rtypes:
-        df = graph.rel_tables[t]
-        cols = [
-            F.col(REL_ID).cast("long").alias(column_name(var)),
-            F.col(REL_SOURCE).cast("long").alias(column_name(E.StartNode(var))),
-            F.col(REL_TARGET).cast("long").alias(column_name(E.EndNode(var))),
-            F.lit(t).alias(type_column_name(var)),
-        ]
-        t_props = graph.schema.rel_props[t]
-        for key in sorted(props):
-            cname = column_name(E.Property(var, key))
-            if key in t_props:
-                cols.append(F.col(prop_phys(key, _RESERVED_REL))
-                            .cast(_parse_dtype(props[key])).alias(cname))
-            else:
-                cols.append(F.lit(None).cast(_parse_dtype(props[key])).alias(cname))
-        branches.append(df.select(*cols))
+    def branches():
+        types = _prop_types([graph.rel_tables[t] for t in rtypes],
+                            _RESERVED_REL)
+        for t in rtypes:
+            df = graph.rel_tables[t]
+            yield df, [f"CAST({quote(REL_ID)} AS BIGINT)",
+                       f"CAST({quote(REL_SOURCE)} AS BIGINT)",
+                       f"CAST({quote(REL_TARGET)} AS BIGINT)",
+                       sql_str(t),
+                       *_typed_props(df, sorted(props), types,
+                                     _RESERVED_REL)]
 
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    known = [graph.stats.get(t) for t in rtypes]
-    if known and all(n is not None for n in known) and \
-            sum(known) <= BROADCAST_ROW_THRESHOLD:
-        out = F.broadcast(out)
-    return Records(session, header, out)
+    return _aligned(session, graph, ("rels", rtypes), var_name, header,
+                    branches, [graph.stats.get(t) for t in rtypes])
 
 
 def scan_pattern(session, graph: PropertyGraph, rel_var_name: str,
@@ -178,28 +241,31 @@ def scan_pattern(session, graph: PropertyGraph, rel_var_name: str,
     header = header.added(E.StartNode(rvar))
     header = header.added(E.EndNode(rvar))
     header = header.added(TypeOf(rvar), type_column_name(rvar))
-    cols = [
-        F.col(REL_ID).cast("long").alias(column_name(rvar)),
-        F.col(REL_SOURCE).cast("long").alias(column_name(E.StartNode(rvar))),
-        F.col(REL_TARGET).cast("long").alias(column_name(E.EndNode(rvar))),
-        F.lit(rel_type).alias(type_column_name(rvar)),
+    items = [
+        aliased(f"CAST({quote(REL_ID)} AS BIGINT)", column_name(rvar)),
+        aliased(f"CAST({quote(REL_SOURCE)} AS BIGINT)",
+                column_name(E.StartNode(rvar))),
+        aliased(f"CAST({quote(REL_TARGET)} AS BIGINT)",
+                column_name(E.EndNode(rvar))),
+        aliased(sql_str(rel_type), type_column_name(rvar)),
     ]
     for key in sorted(rel_props):
         e = E.Property(rvar, key)
         header = header.added(e)
-        cols.append(F.col(prop_phys(key, _RESERVED_REL)).alias(column_name(e)))
+        items.append(aliased(quote(prop_phys(key, _RESERVED_REL)),
+                             column_name(e)))
     # destination node rides along: id = target, labels literal, props t_*
     header = header.added(dvar, column_name(E.EndNode(rvar)))
     for lbl in sorted(dst_combo):
         e = E.HasLabel(dvar, lbl)
         header = header.added(e)
-        cols.append(F.lit(True).alias(column_name(e)))
+        items.append(aliased("true", column_name(e)))
     for key in sorted(dst_props):
         e = E.Property(dvar, key)
         header = header.added(e)
-        cols.append(F.col("t_" + prop_phys(key, _RESERVED_NODE))
-                    .alias(column_name(e)))
-    return Records(session, header, df.select(*cols))
+        items.append(aliased(quote("t_" + prop_phys(key, _RESERVED_NODE)),
+                             column_name(e)))
+    return Records(session, header, project(df, items))
 
 
 def empty_records(session, header: Header) -> Records:
@@ -239,21 +305,16 @@ def join_records(lhs: Records, rhs: Records, pairs, how: str = "inner",
 
     # Disjointness: rename every rhs column that collides with an lhs column.
     lset = set(lhs.df.columns)
-    rename = {}
-    for c in rhs.df.columns:
-        if c in lset:
-            rename[c] = f"__r_{c}"
-    rdf = rhs.df
-    if rename:
-        rdf = rdf.select(*[F.col(c).alias(rename.get(c, c)) for c in rhs.df.columns])
+    rnames = rhs.df.columns
+    rename = {c: f"__r_{c}" for c in rnames if c in lset}
+    rdf = rhs.df.toDF(*[rename.get(c, c) for c in rnames]) if rename \
+        else rhs.df
     rheader = rhs.header.renamed(rename)
 
     if pairs or extra_cond is not None:
-        cond = None
-        for lc, rc in zip(lcols, rcols):
-            rc2 = rename.get(rc, rc)
-            term = F.col(lc) == F.col(rc2)
-            cond = term if cond is None else (cond & term)
+        cond = F.expr(" AND ".join(
+            f"{quote(lc)} = {quote(rename.get(rc, rc))}"
+            for lc, rc in zip(lcols, rcols))) if pairs else None
         if extra_cond is not None:
             # lhs entries win key collisions (shared vars resolve left)
             merged = Header({**rheader.mapping, **lhs.header.mapping})
@@ -276,35 +337,35 @@ def join_records(lhs: Records, rhs: Records, pairs, how: str = "inner",
             merged.setdefault(e, rjoin_cols[c])
         else:
             merged.setdefault(e, c)
-    joined = joined.drop(*rjoin_cols.keys())
     # Orphaned rhs columns: physical rhs columns whose every expr already
     # resolved to an lhs column (shared variables in OPTIONAL MATCH / EXISTS
     # — the rhs copy of the element's sub-columns is redundant).
     used = set(merged.values())
-    rhs_final = {rename.get(c, c) for c in rhs.df.columns} - set(rjoin_cols)
-    orphans = [c for c in rhs_final if c not in used]
-    if orphans:
-        joined = joined.drop(*orphans)
+    drop = list(rjoin_cols) + [
+        c for c in (rename.get(c, c) for c in rnames)
+        if c not in rjoin_cols and c not in used]
+    if drop:
+        joined = joined.drop(*drop)
     return Records(lhs.session, Header(merged), joined)
 
 
 def union_records(lhs: Records, rhs: Records) -> Records:
     """UNION ALL with by-name alignment (RelationalOperator.scala:474-480).
     Headers must describe the same expression set."""
-    lcols = set(lhs.df.columns)
-    rcols = set(rhs.df.columns)
-    if lcols != rcols:
+    lnames = lhs.df.columns
+    rdf, rnames = rhs.df, rhs.df.columns
+    if set(lnames) != set(rnames):
         # Align rhs physical names via shared exprs.
         rename = {}
         for e, c in rhs.header.mapping.items():
             lc = lhs.header.get(e)
             if lc is not None and lc != c:
                 rename[c] = lc
-        rdf = rhs.df.select(*[F.col(c).alias(rename.get(c, c))
-                              for c in rhs.df.columns])
-    else:
-        rdf = rhs.df
-    return lhs.with_df(lhs.df.unionByName(rdf.select(*lhs.df.columns)))
+        rnames = [rename.get(c, c) for c in rnames]
+        rdf = rdf.toDF(*rnames)
+    if rnames != lnames:
+        rdf = rdf.selectExpr(*map(quote, lnames))
+    return lhs.with_df(lhs.df.unionByName(rdf))
 
 
 # ---------------------------------------------------------------------------

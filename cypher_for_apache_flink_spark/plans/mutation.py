@@ -38,9 +38,9 @@ from pyspark.sql import functions as F
 from ..errors import PlanError
 from ..graph import _RESERVED_NODE, _RESERVED_REL, PropertyGraph, prop_phys
 from ..ir import expr as E
-from ..operators.columns import ExprContext, to_column
+from ..operators.columns import ExprContext, quote, to_column
 from ..operators.header import Header, TypeOf, column_name, type_column_name
-from ..operators.records import Records
+from ..operators.records import Records, aliased, project, sql_str
 from ..parser import ast as A
 
 _MONO = "__mut_mono"
@@ -71,7 +71,7 @@ def graph_max_id(graph: PropertyGraph) -> int:
     hint = getattr(graph, "_max_id_hint", None)
     if hint is not None:
         return hint
-    parts = [df.select(F.max(F.col("id").cast("long")).alias("m"))
+    parts = [df.selectExpr("max(CAST(`id` AS BIGINT)) AS m")
              for df in itertools.chain(graph.node_tables.values(),
                                        graph.rel_tables.values())]
     mx = 0
@@ -122,7 +122,7 @@ def _check_storable(df, col, key):
     lists thereof — maps (and lists of maps) are not storable
     (TCK: TypeError / InvalidPropertyType)."""
     from pyspark.sql import types as T
-    dt = df.select(col.alias("__v")).schema[0].dataType
+    dt = df.select(col).schema[0].dataType
 
     def ok(t):
         if isinstance(t, T.ArrayType):
@@ -187,7 +187,8 @@ def _seeded(df):
     """Pin the binding table with a per-row id seed (see module doc)."""
     df = df.withColumn(_MONO, F.monotonically_increasing_id())
     df = df.localCheckpoint(eager=True)
-    row = df.agg(F.max(_MONO).alias("m"), F.count(F.lit(1)).alias("n")).first()
+    row = df.agg(F.expr(f"max({quote(_MONO)}) AS m"),
+                 F.expr("count(1) AS n")).first()
     return df, (row["m"] if row["m"] is not None else -1), row["n"]
 
 
@@ -278,19 +279,20 @@ def plan_create(pl, records, clause: A.CreateClause):
     ctx = ExprContext(header, df, pl.params)
 
     def slot_id(i):
-        return (F.lit(base + 1) + F.col(_MONO) * F.lit(max(k, 1))
-                + F.lit(i)).cast("long")
+        return (f"CAST({base + 1} + {quote(_MONO)} * {max(k, 1)} + {i} "
+                "AS BIGINT)")
 
     # ---- extend the binding table with the created element columns ----
+    # projection items: SQL text or (aliased) Column
     add_cols = []
     hdr = header
     for i, v in enumerate(new_node_vars):
         nv = E.NodeVar(v)
-        add_cols.append(slot_id(i).alias(column_name(nv)))
+        add_cols.append(aliased(slot_id(i), column_name(nv)))
         hdr = hdr.added(nv)
         for lbl in sorted(node_slots[v]["labels"]):
             e = E.HasLabel(nv, lbl)
-            add_cols.append(F.lit(True).alias(column_name(e)))
+            add_cols.append(aliased("true", column_name(e)))
             hdr = hdr.added(e)
         for key, ve in node_slots[v]["props"].items():
             e = E.Property(nv, key)
@@ -300,20 +302,20 @@ def plan_create(pl, records, clause: A.CreateClause):
             hdr = hdr.added(e)
     for j, (s, rp, d) in enumerate(rel_slots):
         rv = E.RelVar(rp.var)
-        add_cols.append(slot_id(len(new_node_vars) + j)
-                        .alias(column_name(rv)))
+        add_cols.append(aliased(slot_id(len(new_node_vars) + j),
+                                 column_name(rv)))
         hdr = hdr.added(rv)
 
         def end_col(name):
             if header.var(name) is not None:
-                return F.col(header.col(header.var(name)))
+                return quote(header.col(header.var(name)))
             return slot_id(new_node_vars.index(name))
 
-        add_cols.append(end_col(s).alias(column_name(E.StartNode(rv))))
-        add_cols.append(end_col(d).alias(column_name(E.EndNode(rv))))
+        add_cols.append(aliased(end_col(s), column_name(E.StartNode(rv))))
+        add_cols.append(aliased(end_col(d), column_name(E.EndNode(rv))))
         hdr = hdr.added(E.StartNode(rv))
         hdr = hdr.added(E.EndNode(rv))
-        add_cols.append(F.lit(rp.types[0]).alias(type_column_name(rv)))
+        add_cols.append(aliased(sql_str(rp.types[0]), type_column_name(rv)))
         hdr = hdr.added(TypeOf(rv), type_column_name(rv))
         for key, ve in rp.props:
             e = E.Property(rv, key)
@@ -322,31 +324,31 @@ def plan_create(pl, records, clause: A.CreateClause):
                 .alias(column_name(e)))
             hdr = hdr.added(e)
 
-    df2 = df.select("*", *add_cols) if add_cols else df
+    df2 = project(df, ["*", *add_cols]) if add_cols else df
 
     # ---- derive the new element tables --------------------------------
     node_updates: dict = {}
     for v in new_node_vars:
         nv = E.NodeVar(v)
         combo = frozenset(node_slots[v]["labels"])
-        sel = [F.col(column_name(nv)).alias("id")]
+        sel = [aliased(quote(column_name(nv)), "id")]
         for key in node_slots[v]["props"]:
-            sel.append(F.col(column_name(E.Property(nv, key)))
-                       .alias(prop_phys(key, _RESERVED_NODE)))
-        ndf = df2.select(*sel)
+            sel.append(aliased(quote(column_name(E.Property(nv, key))),
+                                prop_phys(key, _RESERVED_NODE)))
+        ndf = df2.selectExpr(*sel)
         prev = node_updates.get(combo, pl.graph.node_tables.get(combo))
         node_updates[combo] = ndf if prev is None else _union_aligned(prev, ndf)
     rel_updates: dict = {}
     for s, rp, d in rel_slots:
         rv = E.RelVar(rp.var)
-        sel = [F.col(column_name(rv)).alias("id"),
-               F.col(column_name(E.StartNode(rv))).alias("source"),
-               F.col(column_name(E.EndNode(rv))).alias("target")]
+        sel = [aliased(quote(column_name(rv)), "id"),
+               aliased(quote(column_name(E.StartNode(rv))), "source"),
+               aliased(quote(column_name(E.EndNode(rv))), "target")]
         for key, _ve in rp.props:
-            sel.append(F.col(column_name(E.Property(rv, key)))
-                       .alias(prop_phys(key, _RESERVED_REL)))
-        rdf = df2.select(*sel).where(
-            F.col("source").isNotNull() & F.col("target").isNotNull())
+            sel.append(aliased(quote(column_name(E.Property(rv, key))),
+                                prop_phys(key, _RESERVED_REL)))
+        rdf = df2.selectExpr(*sel).where(
+            "`source` IS NOT NULL AND `target` IS NOT NULL")
         prev = rel_updates.get(rp.types[0],
                                pl.graph.rel_tables.get(rp.types[0]))
         rel_updates[rp.types[0]] = rdf if prev is None \
@@ -693,27 +695,27 @@ def plan_set(pl, records, items, remove: bool = False, branch_col=None):
         reserved = _RESERVED_NODE if is_node else _RESERVED_REL
 
         # ---- computed value columns (per binding row) -----------------
+        # SQL text ("NULL" for REMOVE) or a compiled Column
         val_cols = {}
         for key, ve in g["props"].items():
             if ve is None:
-                val_cols[key] = F.lit(None)
+                val_cols[key] = "NULL"
             else:
                 val_cols[key] = _check_storable(
                     df, to_column(resolve_vars(ve, header), ctx), key)
         upd_keys = list(val_cols)
 
         # ---- updates table: one row per touched entity ---------------
-        apply_rows = df.where(F.col(id_col).isNotNull())
+        apply_rows = df.where(f"{quote(id_col)} IS NOT NULL")
         if branch_col is not None:
-            apply_rows = apply_rows.where(F.col(branch_col))
+            apply_rows = apply_rows.where(quote(branch_col))
         # One row per touched entity.  dropDuplicates picks an arbitrary
         # binding row when several update the same entity (openCypher
         # leaves the winner to evaluation order); the lazy checkpoint pins
         # the pick so every derived table sees the same winner.
-        upd = apply_rows.select(
-            F.col(id_col).alias("__uid"),
-            *[c.alias(f"__set_{i}") for i, c in enumerate(val_cols.values())]
-        ).dropDuplicates(["__uid"]).localCheckpoint(eager=False)
+        upd = project(apply_rows, [f"{quote(id_col)} AS __uid", *[
+            aliased(v, f"__set_{i}") for i, v in enumerate(val_cols.values())
+        ]]).dropDuplicates(["__uid"]).localCheckpoint(eager=False)
 
         replace = g["replace"]
         tables = working_nodes if is_node else working_rels
@@ -722,9 +724,9 @@ def plan_set(pl, records, items, remove: bool = False, branch_col=None):
         # empty move-target tables polluting the schema, and later scans
         # of unrelated labels keep their original (pushdown-able) plans.
         tkeys = list(tables)
-        probes = [tables[tkey].join(upd, tables[tkey]["id"] == upd["__uid"],
-                                    "left_semi")
-                  .select(F.lit(i).alias("i")).limit(1)
+        on_uid = F.expr("`id` = `__uid`")
+        probes = [tables[tkey].join(upd, on_uid, "left_semi")
+                  .selectExpr(f"{i} AS i").limit(1)
                   for i, tkey in enumerate(tkeys)]
         present: set = set()
         if probes:
@@ -735,6 +737,7 @@ def plan_set(pl, records, items, remove: bool = False, branch_col=None):
         # Every TOUCHED table re-emits ALL its rows into `pieces`
         # (updated-in-place, stayed, or moved to another label combo), so
         # the new table for a key is exactly the union of its pieces.
+        hit = "`__uid` IS NOT NULL"
         pieces: dict = {}
         for i, tkey in enumerate(tkeys):
             tdf = tables[tkey]
@@ -743,37 +746,31 @@ def plan_set(pl, records, items, remove: bool = False, branch_col=None):
             new_combo = tkey if not is_node else \
                 (tkey | frozenset(g["add_labels"])) \
                 - frozenset(g["del_labels"])
-            j = tdf.join(upd, tdf["id"] == upd["__uid"], "left")
-            hit = F.col("__uid").isNotNull()
+            j = tdf.join(upd, on_uid, "left")
             cols = []
             for c in tdf.columns:
-                if c in reserved:
-                    cols.append(F.col(c))
-                    continue
                 key = c[len("prop__"):] if c.startswith("prop__") else c
-                if key in val_cols:
-                    i = upd_keys.index(key)
-                    cols.append(F.when(hit, F.col(f"__set_{i}"))
-                                .otherwise(F.col(c)).alias(c))
-                elif replace:
-                    cols.append(F.when(hit, F.lit(None))
-                                .otherwise(F.col(c)).alias(c))
-                else:
-                    cols.append(F.col(c))
+                if c in reserved or not (key in val_cols or replace):
+                    cols.append(quote(c))
+                    continue
+                new = f"`__set_{upd_keys.index(key)}`" if key in val_cols \
+                    else "NULL"
+                cols.append(f"CASE WHEN {hit} THEN {new} ELSE {quote(c)} "
+                            f"END AS {quote(c)}")
             for key in val_cols:
                 phys = prop_phys(key, reserved)
                 if phys not in tdf.columns:
-                    i = upd_keys.index(key)
-                    cols.append(F.when(hit, F.col(f"__set_{i}"))
-                                .otherwise(F.lit(None)).alias(phys))
-            updated = j.select(*cols, F.col("__uid"))
+                    cols.append(f"CASE WHEN {hit} THEN "
+                                f"`__set_{upd_keys.index(key)}` ELSE NULL "
+                                f"END AS {quote(phys)}")
             if new_combo == tkey:
-                pieces.setdefault(tkey, []).append(updated.drop("__uid"))
+                pieces.setdefault(tkey, []).append(j.selectExpr(*cols))
             else:
+                updated = j.selectExpr(*cols, "`__uid`")
                 pieces.setdefault(tkey, []).append(
-                    updated.where(F.col("__uid").isNull()).drop("__uid"))
+                    updated.where("`__uid` IS NULL").drop("__uid"))
                 pieces.setdefault(new_combo, []).append(
-                    updated.where(F.col("__uid").isNotNull()).drop("__uid"))
+                    updated.where(hit).drop("__uid"))
         touched_keys = {tkeys[i] for i in present}
         for tkey, dfs in pieces.items():
             # a move-target table that was not itself touched keeps its
@@ -784,36 +781,40 @@ def plan_set(pl, records, items, remove: bool = False, branch_col=None):
             tables[tkey] = out
 
         # ---- refresh the binding columns ------------------------------
-        apply_here = F.col(id_col).isNotNull()
+        # SQL text or Column per replaced/added binding column
+        apply_here = f"{quote(id_col)} IS NOT NULL"
         if branch_col is not None:
-            apply_here = apply_here & F.coalesce(F.col(branch_col),
-                                                 F.lit(False))
+            apply_here += f" AND coalesce({quote(branch_col)}, false)"
+        df_cols = df.columns
         new_cols = {}
         for key, vc in val_cols.items():
             e = E.Property(target, key)
             cname = hdr.get(e) or column_name(e)
-            old = F.col(cname) if cname in df.columns else F.lit(None)
-            new_cols[cname] = F.when(apply_here, vc).otherwise(old)
+            old = quote(cname) if cname in df_cols else "NULL"
+            new_cols[cname] = (
+                f"CASE WHEN {apply_here} THEN {vc} ELSE {old} END"
+                if isinstance(vc, str) else
+                F.when(F.expr(apply_here), vc).otherwise(F.expr(old)))
             hdr = hdr.added(e, cname)
         if replace:
             for e in hdr.owned_by(target):
                 if isinstance(e, E.Property) and e.key not in val_cols:
                     cname = hdr.col(e)
-                    new_cols[cname] = F.when(apply_here, F.lit(None)) \
-                        .otherwise(F.col(cname))
+                    new_cols[cname] = (f"CASE WHEN {apply_here} THEN NULL "
+                                       f"ELSE {quote(cname)} END")
         for lbl in sorted(g["add_labels"] | g["del_labels"]):
             e = E.HasLabel(target, lbl)
             cname = hdr.get(e) or column_name(e)
-            val = F.lit(lbl in g["add_labels"])
-            old = F.col(cname) if cname in df.columns else \
-                F.lit(False)
-            new_cols[cname] = F.when(apply_here, val).otherwise(old)
+            val = str(lbl in g["add_labels"]).lower()
+            old = quote(cname) if cname in df_cols else "false"
+            new_cols[cname] = \
+                f"CASE WHEN {apply_here} THEN {val} ELSE {old} END"
             hdr = hdr.added(e, cname)
         if new_cols:
-            df = df.select(
-                *[new_cols.pop(c).alias(c) if c in new_cols else F.col(c)
-                  for c in df.columns],
-                *[c2.alias(n) for n, c2 in new_cols.items()])
+            df = project(df, [
+                *[aliased(new_cols.pop(c), c) if c in new_cols else quote(c)
+                  for c in df_cols],
+                *[aliased(v, n) for n, v in new_cols.items()]])
 
     hint = getattr(pl.graph, "_max_id_hint", None)
     pl.graph = PropertyGraph(working_nodes, working_rels,

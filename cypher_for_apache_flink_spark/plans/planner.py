@@ -23,12 +23,15 @@ from pyspark.sql import types as T
 
 from ..functions.layout import materialize
 from ..ir import expr as E
-from ..operators.columns import ExprContext, compile_aggregator, to_column
+from ..operators.columns import (ExprContext, compile_aggregator, quote,
+                                 to_column)
 from ..operators.header import Header, TypeOf, column_name
 from ..operators.records import (
     Records,
+    aliased,
     empty_records,
     join_records,
+    project,
     scan_nodes,
     scan_rels,
     union_records,
@@ -2497,10 +2500,12 @@ class Planner:
                 out, [resolve_vars(c, out.header)
                       for c in E.split_conjunctions(where)])
         # For WITH: restrict scope strictly to projected items
-        out = out.with_df(out.df.select(*_dedup([c for _, c in outputs] + [
+        keep = _dedup([c for _, c in outputs] + [
             out.header.col(e) for nm, _ in outputs
             for e in out.header.owned_by(out.header.var(nm) or E.Var(nm))
-            if out.header.var(nm) is not None])))
+            if out.header.var(nm) is not None])
+        if keep != out.df.columns:
+            out = out.with_df(out.df.selectExpr(*map(quote, keep)))
         keep_cols = set(out.df.columns)
         out = out.with_header(Header({e: c for e, c in out.header.mapping.items()
                                       if c in keep_cols}))
@@ -2534,7 +2539,7 @@ class Planner:
         ctx = self.ctx(records)
         header = records.header
         taken = set(records.df.columns)
-        new_cols = []       # (Column, phys_name)
+        new_cols = []       # projection items (SQL text or Column)
         outputs = []        # (friendly, phys)
         new_header = {}
         for it in items:
@@ -2550,20 +2555,21 @@ class Planner:
                 outputs.append((name, header.col(src)))
             else:
                 phys = _fresh_phys(var, taken)
-                new_cols.append((to_column(it.expr, ctx), phys))
+                new_cols.append(_projected(it.expr, ctx, phys))
                 new_header[self._entity_list_key(it.expr, name) or var] = phys
                 outputs.append((name, phys))
 
         df = records.df
         if new_cols:
-            df = df.select("*", *[c.alias(n) for c, n in new_cols])
+            df = project(df, ["*", *new_cols])
         out = Records(self.session, Header(new_header), df)
         if distinct:
             # Distinct over ALL columns of the projected scope (an element
             # var's id functionally determines its sub-columns, so this is
             # distinct-by-value — reference: RelationalOperator.Distinct :325)
             cols = _dedup(list(new_header.values()))
-            out = out.with_df(df.select(*cols).dropDuplicates(cols))
+            out = out.with_df(df.selectExpr(*map(quote, cols))
+                              .dropDuplicates(cols))
         return out, outputs
 
     def _plan_aggregation(self, records: Records, items):
@@ -2573,7 +2579,7 @@ class Planner:
         group_cols = []
         new_header = {}
         outputs = []
-        pre_cols = []
+        pre_cols = []         # projection items (SQL text or Column)
         aggs = []
         agg_item_cols = {}
         pdisc_map: dict = {}   # percentileDisc call -> result column name
@@ -2598,7 +2604,7 @@ class Planner:
                 group_expr_map[src] = header.col(src)
             else:
                 phys = _fresh_phys(var, taken)
-                pre_cols.append((to_column(it.expr, ctx), phys))
+                pre_cols.append(_projected(it.expr, ctx, phys))
                 group_cols.append(phys)
                 new_header[self._entity_list_key(it.expr, name) or var] = phys
                 ordered[idx] = (name, phys)
@@ -2656,17 +2662,18 @@ class Planner:
 
         df = records.df
         if pre_cols:
-            df = df.select("*", *[c.alias(n) for c, n in pre_cols])
+            df = project(df, ["*", *pre_cols])
         group_cols = _dedup(group_cols)
         if aggs or not pdisc_map:
             if group_cols:
-                gdf = df.groupBy(*[F.col(c) for c in group_cols]).agg(*aggs)
+                gdf = df.groupBy(*group_cols).agg(*aggs)
             else:
                 gdf = df.agg(*aggs)
         elif group_cols:
             # only percentileDisc aggregates: the group keys come from a
             # plain distinct, the values from the rank-plan joins below
-            gdf = df.select(*group_cols).dropDuplicates(group_cols)
+            gdf = df.selectExpr(*map(quote, group_cols)) \
+                .dropDuplicates(group_cols)
         else:
             gdf = self.session.spark.range(1).select()
         for pd_expr, phys in pdisc_map.items():
@@ -2769,28 +2776,24 @@ class Planner:
                 item_to_col[E.Var(nm)] = c
             name_to_col = {nm: c for nm, c in outputs}
             sort_cols = []
-            tmp = []
+            tmp = {}
             ctx = ExprContext(header, df, self.params)
             for i, s in enumerate(order_by):
                 if isinstance(s.expr, E.Var) and s.expr.name in name_to_col:
                     # A projection alias shadows any same-named pattern var
                     # (`RETURN p.name AS p ORDER BY p` sorts by the name).
-                    col = F.col(name_to_col[s.expr.name])
-                    sort_cols.append(col.asc_nulls_last() if s.ascending
-                                     else col.desc_nulls_first())
-                    continue
-                se = resolve_vars(s.expr, header)
-                if se in item_to_col:
-                    col = F.col(item_to_col[se])
+                    name = name_to_col[s.expr.name]
                 else:
-                    cexpr = to_column(se, ctx)
-                    tname = f"__sort_{i}"
-                    df = df.withColumn(tname, cexpr)
-                    tmp.append(tname)
-                    col = F.col(tname)
+                    se = resolve_vars(s.expr, header)
+                    name = item_to_col.get(se)
+                    if name is None:
+                        name = f"__sort_{i}"
+                        tmp[name] = to_column(se, ctx)
                 # Cypher null ordering: nulls largest (asc → last, desc → first)
-                sort_cols.append(col.asc_nulls_last() if s.ascending
-                                 else col.desc_nulls_first())
+                sort_cols.append(F.asc_nulls_last(name) if s.ascending
+                                 else F.desc_nulls_first(name))
+            if tmp:
+                df = df.withColumns(tmp)
             df = df.orderBy(*sort_cols)
             if tmp:
                 df = df.drop(*tmp)
@@ -3019,6 +3022,14 @@ def _subst_item(x, mapping: dict):
     return x
 
 
+def _projected(expr, ctx: ExprContext, phys: str):
+    """Projection item computing ``expr`` as ``phys``: SQL text when the
+    expression is a column of the scope, else its compiled Column."""
+    src = ctx.header.get(expr)
+    return aliased(quote(src), phys) if src is not None \
+        else to_column(expr, ctx).alias(phys)
+
+
 def _fresh_phys(var: E.Var, taken: set) -> str:
     base = column_name(var)
     name = base
@@ -3090,9 +3101,7 @@ def _bidirectional(rel: Records, rv: E.RelVar) -> Records:
     h = rel.header
     src = h.col(E.StartNode(rv))
     dst = h.col(E.EndNode(rv))
-    mirror = rel.df.where(F.col(src) != F.col(dst)).select(
-        *[F.col(dst).alias(src) if c == src
-          else F.col(src).alias(dst) if c == dst
-          else F.col(c)
+    mirror = rel.df.where(f"{quote(src)} != {quote(dst)}").toDF(
+        *[dst if c == src else src if c == dst else c
           for c in rel.df.columns])
     return rel.with_df(rel.df.unionByName(mirror))

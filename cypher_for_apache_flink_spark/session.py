@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .graph import PropertyGraph
+from .operators.columns import quote
 from .parser.parser import parse, parse_parameterized
 from .plans.planner import Planner
 
@@ -95,8 +96,8 @@ class CypherResult:
             if name in seen:
                 continue
             seen.add(name)
-            cols.append(F.col(phys).alias(name))
-        return self.records.df.select(*cols)
+            cols.append(f"{quote(phys)} AS {quote(name)}")
+        return self.records.df.selectExpr(*cols)
 
     def collect(self):
         return self.df.collect()

@@ -6,6 +6,7 @@ the Any-type TCK scenarios; here they run.
 """
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from cypher_for_apache_flink_spark import PropertyGraph
 from cypher_for_apache_flink_spark.errors import PlanError
@@ -147,6 +148,18 @@ def test_homogeneous_lists_stay_native(empty):
     res = empty.cypher("RETURN [1, 2.5] AS l")
     assert "__any_tag" not in res.df.schema.simpleString()
     assert maps(empty, "RETURN [1, 2.5] AS l") == [{"l": [1.0, 2.5]}]
+
+
+def test_mixed_list_over_columns_probes_item_types(spark):
+    # the static classes disagree, so the planner asks Spark for each
+    # item's type: the list plans as Any structs
+    g = graph_from_create(spark, "CREATE (:A {n: 1, s: 'x', l: [1, 2]})")
+    res = g.cypher("MATCH (a:A) RETURN [1, 'a', [a.n]] AS l")
+    assert "__any_tag" in res.df.schema.simpleString()
+    assert res.to_maps() == [{"l": [1, "a", [1]]}]
+    # an item Spark cannot analyze on its own raises its own typed error
+    with pytest.raises(AnalysisException, match="DATA_DIFF_TYPES"):
+        g.cypher("MATCH (a:A) RETURN [1, 'a', a.l + a.s] AS l")
 
 
 def test_mixed_temporal_rejected_with_typed_error(empty):
